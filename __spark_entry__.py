@@ -2274,11 +2274,11 @@ def q_warc_cdx(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_warc_binary(spark: SparkSession, sf_dir: str) -> DataFrame:
     """FOREIGN/BINARY archive ingestion (r5): a per-record-gzip .warc.gz
     corpus with NON-UTF-8 bodies — 16 raw md5 bytes plus a latin-1 'café'
-    tail per document, i.e. bytes the UTF-8 text path must reject — is
+    tail per document, i.e. bytes that are not valid UTF-8 — is
     written through the REAL Common-Crawl-framed sink (write_warc_gz: one
-    gzip MEMBER per record), indexed with build_cdx_binary (offset/length
+    gzip MEMBER per record), indexed with build_cdx (offset/length
     = the member's COMPRESSED coordinates) and every record fetched back
-    via read_warc_at_binary: one seek+read + one-member gunzip per record,
+    via read_warc_at: one seek+read + one-member gunzip per record,
     the Range-GET access pattern of the .warc.gz ecosystem. The query
     returns hex(body) of the RANGED re-read, so the oracle (hex restated
     from doc_id) certifies bit-exact binary fidelity through compression,
@@ -2286,11 +2286,7 @@ def q_warc_binary(spark: SparkSession, sf_dir: str) -> DataFrame:
     import shutil
     import tempfile
 
-    from kermit_spark.warc import (
-        build_cdx_binary,
-        read_warc_at_binary,
-        write_warc_gz,
-    )
+    from kermit_spark.warc import build_cdx, read_warc_at, write_warc_gz
 
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select(
         F.concat(F.lit("http://wb.test/d/"), F.col("doc_id").cast("string")).alias("url"),
@@ -2307,8 +2303,8 @@ def q_warc_binary(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     try:
         write_warc_gz(docs.repartition(4), tmp)
-        cdx = build_cdx_binary(spark, tmp)
-        back = read_warc_at_binary(spark, cdx)
+        cdx = build_cdx(spark, tmp)
+        back = read_warc_at(spark, cdx)
         return (
             back.select(
                 "url", "status", "content_type",

@@ -107,27 +107,42 @@ def test_bloom_never_false_negative(keys):
 )
 def test_warc_framing_roundtrip_arbitrary_bodies(rows):
     """Property: the concatenated record stream parses back to exactly the
-    rendered rows for ARBITRARY unicode bodies — including CRLFs, literal
-    'WARC/1.0' text, and multi-byte characters — and _iter_records' byte
-    offsets/lengths tile the stream exactly (the CDX byte-exactness
-    contract). Pure-python: exercises the framing without a session."""
-    from kermit_spark.warc import _iter_records, _parse_file, _render_record
-
-    stream = "".join(
-        # the text writer's lineSep supplies the second trailing CRLF
-        _render_record(u, w, s, "text/html", b, "2000-01-01T00:00:00Z") + "\r\n"
-        for u, w, s, b in rows
+    rendered rows for ARBITRARY unicode URLs and bodies — including CRLFs,
+    literal 'WARC/1.0' text, and multi-byte characters — and the walker's
+    byte offsets/lengths tile the stream exactly (the CDX byte-exactness
+    contract). The text sink's records (plus the lineSep CRLF it appends)
+    are byte-for-byte the .warc.gz sink's records. Pure-python: exercises
+    the framing without a session."""
+    from kermit_spark.warc import (
+        _iter_records_bytes,
+        _parse_http_payload_bytes,
+        _render_record,
+        _render_record_bytes,
     )
-    parsed = _parse_file(stream)
-    assert [(p[0], p[1], p[2], p[4]) for p in parsed] == [
-        (u, w, s, b) for u, w, s, b in rows
+
+    date = "2000-01-01T00:00:00Z"
+    recs = [
+        _render_record_bytes(u, w, s, "text/html", b.encode("utf-8"), date)
+        for u, w, s, b in rows
     ]
-    data_len = len(stream.encode("utf-8"))
-    offs = [(off, ln) for _, _, off, ln in _iter_records(stream)]
+    for (u, w, s, b), rec in zip(rows, recs):
+        # the text writer's lineSep supplies the second trailing CRLF
+        assert (_render_record(u, w, s, "text/html", b, date) + "\r\n").encode() == rec
+    stream = b"".join(recs)
+    walked = list(_iter_records_bytes(stream))
+    parsed = [
+        (h["warc-target-uri"], int(h["warc-kermit-wave"]),
+         *_parse_http_payload_bytes(raw))
+        for h, raw, _, _ in walked
+    ]
+    assert [(p[0], p[1], p[2], p[4]) for p in parsed] == [
+        (u, w, s, b.encode("utf-8")) for u, w, s, b in rows
+    ]
+    offs = [(off, ln) for _, _, off, ln in walked]
     assert offs[0][0] == 0
     for (o1, l1), (o2, _) in zip(offs, offs[1:]):
         assert o1 + l1 == o2
-    assert offs[-1][0] + offs[-1][1] == data_len
+    assert offs[-1][0] + offs[-1][1] == len(stream)
 
 
 # --------------------------------------------------------------------------

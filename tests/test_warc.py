@@ -2,55 +2,82 @@
 round trip, determinism, and robustness to adversarial bodies."""
 
 import glob
+import gzip
 
 from pyspark.sql import functions as F
 
-from kermit_spark.warc import read_warc, write_warc
+from kermit_spark.warc import read_warc, write_warc, write_warc_gz
+
+# both response sinks: the text sink (.warc) and the per-record-gzip sink
+# (.warc.gz); every reader takes either
+_WRITERS = (write_warc, write_warc_gz)
+
+
+_DOC_ROWS = [
+    ("http://a.test/1", 0, 200, "text/html", "<html>one é</html>"),
+    ("http://a.test/2", 0, 404, "text/plain", ""),
+    ("http://a.test/3", 1, 200, "text/html",
+     "body containing\r\n\r\nWARC/1.0\r\nfake record header"),
+    ("http://a.test/4", 1, 200, None, None),
+]
 
 
 def _docs(spark):
-    rows = [
-        ("http://a.test/1", 0, 200, "text/html", "<html>one é</html>"),
-        ("http://a.test/2", 0, 404, "text/plain", ""),
-        ("http://a.test/3", 1, 200, "text/html",
-         "body containing\r\n\r\nWARC/1.0\r\nfake record header"),
-        ("http://a.test/4", 1, 200, None, None),
-    ]
     return spark.createDataFrame(
-        rows, "url string, wave int, status int, content_type string, body string"
+        _DOC_ROWS, "url string, wave int, status int, content_type string, body string"
     )
 
 
+def _write(write, docs, path):
+    """Archive string-bodied ``docs`` through either response sink
+    (write_warc_gz takes the bodies as their UTF-8 bytes)."""
+    if write is write_warc_gz:
+        docs = docs.withColumn("body", F.col("body").cast("binary"))
+    write(docs, path)
+
+
 def test_warc_round_trip(spark, tmp_path):
-    path = str(tmp_path / "w")
-    write_warc(_docs(spark).repartition(2), path)
-    back = {r["url"]: r for r in read_warc(spark, path).collect()}
-    assert len(back) == 4
-    r1 = back["http://a.test/1"]
-    assert (r1["status"], r1["content_type"], r1["body"]) == (200, "text/html", "<html>one é</html>")
-    assert back["http://a.test/2"]["status"] == 404
-    # a body that LOOKS like a record header parses fine (length-framed)
-    assert back["http://a.test/3"]["body"].endswith("fake record header")
-    assert back["http://a.test/3"]["wave"] == 1
-    # null body/content-type: octet-stream default, empty body
-    assert back["http://a.test/4"]["body"] == ""
+    for write in _WRITERS:
+        path = str(tmp_path / write.__name__)
+        _write(write, _docs(spark).repartition(2), path)
+        back = {r["url"]: r for r in read_warc(spark, path).collect()}
+        assert len(back) == 4
+        r1 = back["http://a.test/1"]
+        assert (r1["status"], r1["content_type"], r1["body"]) == (
+            200, "text/html", "<html>one é</html>".encode()
+        )
+        assert back["http://a.test/2"]["status"] == 404
+        # a body that LOOKS like a record header parses fine (length-framed)
+        assert back["http://a.test/3"]["body"].endswith(b"fake record header")
+        assert back["http://a.test/3"]["wave"] == 1
+        # null body/content-type: octet-stream default, empty body
+        assert back["http://a.test/4"]["body"] == b""
+        assert back["http://a.test/4"]["content_type"] == "application/octet-stream"
 
 
 def test_warc_files_are_valid_and_deterministic(spark, tmp_path):
-    a, b = str(tmp_path / "a"), str(tmp_path / "b")
-    docs = _docs(spark).repartition(1)
-    write_warc(docs, a)
-    write_warc(docs, b)
-    fa = sorted(glob.glob(f"{a}/part-*"))
-    fb = sorted(glob.glob(f"{b}/part-*"))
-    assert fa and len(fa) == len(fb)
-    for x, y in zip(fa, fb):
-        bytes_x = open(x, "rb").read()
-        assert bytes_x == open(y, "rb").read()   # identical re-run
-        assert bytes_x.startswith(b"WARC/1.0\r\n")
-        assert bytes_x.endswith(b"\r\n\r\n")
-        # fixed date parameter, never wall clock
-        assert b"WARC-Date: 2000-01-01T00:00:00Z" in bytes_x
+    """Writing the same rows twice produces byte-identical files — for the
+    .warc.gz sink too (zlib gzip framing carries no timestamp; python's
+    gzip module would stamp wall-clock and break reproducible
+    archives)."""
+    docs = _docs(spark).repartition(2, "url")
+    for write in _WRITERS:
+        a = str(tmp_path / write.__name__ / "a")
+        b = str(tmp_path / write.__name__ / "b")
+        _write(write, docs, a)
+        _write(write, docs, b)
+        fa = sorted(glob.glob(f"{a}/part-*"))
+        fb = sorted(glob.glob(f"{b}/part-*"))
+        assert fa and len(fa) == len(fb)
+        for x, y in zip(fa, fb):
+            bytes_x = open(x, "rb").read()
+            assert bytes_x == open(y, "rb").read()   # identical re-run
+            if write is write_warc_gz:
+                bytes_x = gzip.decompress(bytes_x)
+            assert bytes_x.startswith(b"WARC/1.0\r\n")
+            assert bytes_x.endswith(b"\r\n\r\n")
+            # fixed date parameter, never wall clock
+            assert b"WARC-Date: 2000-01-01T00:00:00Z" in bytes_x
 
 
 def test_crawler_archives_waves_to_warc(spark, tmp_path):
@@ -84,9 +111,9 @@ def test_crawler_archives_waves_to_warc(spark, tmp_path):
     c.crawl(3)
 
     w0 = {r["url"]: r for r in read_warc(spark, f"{warc_dir}/wave=0").collect()}
-    assert '<a href="/2.html">n</a>' in w0["http://a.test/1.html"]["body"]
+    assert b'<a href="/2.html">n</a>' in w0["http://a.test/1.html"]["body"]
     w1 = {r["url"]: r for r in read_warc(spark, f"{warc_dir}/wave=1").collect()}
-    assert "leaf two" in w1["http://a.test/2.html"]["body"]
+    assert b"leaf two" in w1["http://a.test/2.html"]["body"]
     # the documents table itself keeps spans, not bodies — the archive is
     # the only place the raw payload survives
     assert "body" not in c.documents().columns
@@ -98,51 +125,73 @@ def test_crawler_archives_waves_to_warc(spark, tmp_path):
 def test_cdx_offsets_are_byte_exact(spark, tmp_path):
     """Every (filename, offset, length) must frame a complete record: a raw
     seek+read of exactly those bytes re-parses to the same row read_warc
-    returns — including the multi-byte-UTF-8 and header-lookalike bodies."""
-    from kermit_spark.warc import _parse_file, build_cdx
-
-    path = str(tmp_path / "w")
-    write_warc(_docs(spark).repartition(2), path)
-    cdx = build_cdx(spark, path).collect()
-    assert len(cdx) == 4
-    by_url = {}
-    for r in cdx:
-        local = r["filename"][len("file:"):]
-        with open(local, "rb") as f:
-            f.seek(r["offset"])
-            rec = f.read(r["length"]).decode("utf-8")
-        parsed = _parse_file(rec)
-        assert len(parsed) == 1, f"offset/length misframes {r['url']}"
-        by_url[parsed[0][0]] = parsed[0]
-    assert by_url["http://a.test/1"][4] == "<html>one é</html>"
-    assert by_url["http://a.test/3"][4].endswith("fake record header")
-    # offsets within one file are disjoint and start at 0
+    returns — including the multi-byte-UTF-8 and header-lookalike bodies.
+    For a .warc.gz the coordinates are the record's gzip MEMBER inside the
+    COMPRESSED file (the Range-GET contract of the .warc.gz ecosystem), so
+    the bytes read start with the gzip magic and gunzip to one record.
+    Either way the ranges tile the file exactly."""
     import collections
-    per_file = collections.defaultdict(list)
-    for r in cdx:
-        per_file[r["filename"]].append((r["offset"], r["length"]))
-    for spans in per_file.values():
-        spans.sort()
-        assert spans[0][0] == 0
-        for (o1, l1), (o2, _) in zip(spans, spans[1:]):
-            assert o1 + l1 == o2  # records tile the file exactly
+    import hashlib
+    import os
+
+    from kermit_spark.warc import (
+        _iter_records_bytes,
+        _parse_http_payload_bytes,
+        build_cdx,
+    )
+
+    bodies = {u: (b or "").encode() for u, _, _, _, b in _DOC_ROWS}
+    for write in _WRITERS:
+        path = str(tmp_path / write.__name__)
+        _write(write, _docs(spark).repartition(2), path)
+        cdx = build_cdx(spark, path).collect()
+        assert len(cdx) == 4
+        per_file = collections.defaultdict(list)
+        for r in cdx:
+            local = r["filename"][len("file:"):]
+            with open(local, "rb") as f:
+                f.seek(r["offset"])
+                blob = f.read(r["length"])
+            if write is write_warc_gz:
+                assert blob[:2] == b"\x1f\x8b"
+                rec = gzip.decompress(blob)
+                assert rec.startswith(b"WARC/1.0") and rec.endswith(b"\r\n\r\n")
+            parsed = list(_iter_records_bytes(blob))
+            assert len(parsed) == 1, f"offset/length misframes {r['url']}"
+            headers, raw, _, _ = parsed[0]
+            assert headers["warc-target-uri"] == r["url"]
+            body = _parse_http_payload_bytes(raw)[2]
+            assert body == bodies[r["url"]]
+            # digest is md5 over the raw BODY bytes
+            assert r["digest"] == hashlib.md5(body).hexdigest()
+            per_file[local].append((r["offset"], r["length"]))
+        for local, spans in per_file.items():
+            spans.sort()
+            assert spans[0][0] == 0
+            for (o1, l1), (o2, _) in zip(spans, spans[1:]):
+                assert o1 + l1 == o2  # records tile the file exactly
+            assert spans[-1][0] + spans[-1][1] == os.path.getsize(local)
 
 
 def test_cdx_random_access_equals_sequential_read(spark, tmp_path):
     from kermit_spark.warc import build_cdx, read_warc_at
 
-    path = str(tmp_path / "w")
-    write_warc(_docs(spark).repartition(2), path)
-    cdx = build_cdx(spark, path)
-    # fetch a subset by key: exactly those records come back, nothing else
-    want = cdx.filter(F.col("url").isin("http://a.test/2", "http://a.test/3"))
-    got = {r["url"]: r for r in read_warc_at(spark, want).collect()}
-    assert set(got) == {"http://a.test/2", "http://a.test/3"}
-    seq = {r["url"]: r for r in read_warc(spark, path).collect()}
-    for u, r in got.items():
-        assert (r["wave"], r["status"], r["content_type"], r["body"]) == (
-            seq[u]["wave"], seq[u]["status"], seq[u]["content_type"], seq[u]["body"]
-        )
+    for write in _WRITERS:
+        path = str(tmp_path / write.__name__)
+        _write(write, _docs(spark).repartition(2), path)
+        cdx = build_cdx(spark, path)
+        # fetch a subset by key: exactly those records come back, nothing else
+        want = cdx.filter(F.col("url").isin("http://a.test/2", "http://a.test/3"))
+        got = {r["url"]: r for r in read_warc_at(spark, want).collect()}
+        assert set(got) == {"http://a.test/2", "http://a.test/3"}
+        seq = {r["url"]: r for r in read_warc(spark, path).collect()}
+        # and the whole index fetches every record, identical to the scan
+        every = {r["url"]: r for r in read_warc_at(spark, cdx).collect()}
+        assert set(every) == set(seq)
+        for u, r in list(got.items()) + list(every.items()):
+            assert (r["wave"], r["status"], r["content_type"], r["body"]) == (
+                seq[u]["wave"], seq[u]["status"], seq[u]["content_type"], seq[u]["body"]
+            )
 
 
 def test_cdx_surt_key_and_digest(spark, tmp_path):
@@ -168,12 +217,12 @@ def test_cdx_surt_key_and_digest(spark, tmp_path):
 def test_cdx_table_lookup_prunes_buckets_and_fetches(spark, tmp_path):
     """Stored CDX: a lookup reads only the buckets its URLs hash into
     (partition pruning visible in inputFiles), and the resolved rows
-    random-access the right records."""
+    random-access the right records — .warc.gz member coordinates
+    included (same CDX schema)."""
     from kermit_spark.warc import (
         build_cdx, lookup_cdx, read_warc_at, write_cdx_table,
     )
 
-    warc_dir, cdx_dir = str(tmp_path / "w"), str(tmp_path / "cdx")
     # many hosts so buckets actually separate domains
     rows = [
         (f"http://h{i}.test/p/{i}", 0, 200, "text/html", f"body-{i}")
@@ -182,24 +231,27 @@ def test_cdx_table_lookup_prunes_buckets_and_fetches(spark, tmp_path):
     docs = spark.createDataFrame(
         rows, "url string, wave int, status int, content_type string, body string"
     )
-    write_warc(docs.repartition(4), warc_dir)
-    write_cdx_table(build_cdx(spark, warc_dir), cdx_dir, buckets=16)
+    for write in _WRITERS:
+        warc_dir = str(tmp_path / write.__name__ / "w")
+        cdx_dir = str(tmp_path / write.__name__ / "cdx")
+        _write(write, docs.repartition(4), warc_dir)
+        write_cdx_table(build_cdx(spark, warc_dir), cdx_dir, buckets=16)
 
-    hits = lookup_cdx(
-        spark, cdx_dir, ["http://h3.test/p/3", "http://h17.test/p/17"], buckets=16
-    )
-    got = {r["url"]: r for r in hits.collect()}
-    assert set(got) == {"http://h3.test/p/3", "http://h17.test/p/17"}
-    # pruning: the kb predicate reaches the scan as a PartitionFilter
-    # (inputFiles() lists the pre-pruning relation, so inspect the plan)
-    plan = hits._jdf.queryExecution().executedPlan().toString()
-    assert "PartitionFilters" in plan and "kb" in plan.split("PartitionFilters", 1)[1][:200]
-    # the resolved rows fetch the exact bodies
-    recs = {r["url"]: r["body"] for r in read_warc_at(spark, hits).collect()}
-    assert recs == {
-        "http://h3.test/p/3": "body-3",
-        "http://h17.test/p/17": "body-17",
-    }
+        hits = lookup_cdx(
+            spark, cdx_dir, ["http://h3.test/p/3", "http://h17.test/p/17"], buckets=16
+        )
+        got = {r["url"]: r for r in hits.collect()}
+        assert set(got) == {"http://h3.test/p/3", "http://h17.test/p/17"}
+        # pruning: the kb predicate reaches the scan as a PartitionFilter
+        # (inputFiles() lists the pre-pruning relation, so inspect the plan)
+        plan = hits._jdf.queryExecution().executedPlan().toString()
+        assert "PartitionFilters" in plan and "kb" in plan.split("PartitionFilters", 1)[1][:200]
+        # the resolved rows fetch the exact bodies
+        recs = {r["url"]: r["body"] for r in read_warc_at(spark, hits).collect()}
+        assert recs == {
+            "http://h3.test/p/3": b"body-3",
+            "http://h17.test/p/17": b"body-17",
+        }
 
 
 SPANS_DDL = (
@@ -410,51 +462,48 @@ def test_crawler_exports_wet_and_wat(spark, tmp_path):
     assert wat["http://a.test/1.html"]["status"] == 200
 
 
-def test_build_cdx_rejects_lossily_decoded_non_utf8_archive(spark, tmp_path):
-    """A foreign non-UTF-8 archive must be REJECTED by the CDX indexer, not
-    indexed with silently shifted byte offsets. Two defense layers exist:
-    the Arrow transfer itself refuses invalid UTF-8 (observed: the e2e
-    path below raises before Python code runs), and _check_utf8_fidelity
-    guards the remaining path — a decode that REPLACED bad bytes with
-    U+FFFD re-encodes to a different byte count than the on-disk file and
-    must fail loudly (offsets after the first bad byte would be shifted)."""
-    import pytest
+def test_build_cdx_indexes_non_utf8_archive_byte_exact(spark, tmp_path):
+    """A non-UTF-8 byte inside a record body cannot shift the CDX: the
+    walker frames records in bytes and never decodes a payload, so the
+    corrupted archive indexes with offsets that tile the file, and the
+    ranged read returns the raw bytes exactly."""
+    import os
 
-    from kermit_spark.warc import _check_utf8_fidelity, build_cdx, write_warc
+    from kermit_spark.warc import build_cdx, read_warc_at
 
     good = str(tmp_path / "good")
     write_warc(_docs(spark).repartition(1), good)
     src = sorted(glob.glob(f"{good}/part-*"))[0]
     data = open(src, "rb").read()
-    # corrupt one payload byte inside the first record body ('<html>one é')
-    bad_bytes = data.replace("é".encode("utf-8"), b"\xff", 1)
-    assert bad_bytes != data
+    # corrupt the first record body ('<html>one é') with bytes that are not
+    # UTF-8, keeping its length so the record's Content-Length stays true
+    bad_bytes = data.replace("é".encode("utf-8"), b"\xff\xff", 1)
+    assert bad_bytes != data and len(bad_bytes) == len(data)
     bad_dir = tmp_path / "bad"
     bad_dir.mkdir()
     bad_file = bad_dir / "part-00000.txt"
     bad_file.write_bytes(bad_bytes)
 
-    # e2e: the corrupt archive is rejected loudly, never indexed
-    with pytest.raises(Exception):
-        build_cdx(spark, str(bad_dir)).collect()
+    cdx = build_cdx(spark, str(bad_dir))
+    spans = sorted((r["offset"], r["length"]) for r in cdx.collect())
+    assert len(spans) == 4
+    assert spans[0][0] == 0
+    for (o1, l1), (o2, _) in zip(spans, spans[1:]):
+        assert o1 + l1 == o2
+    assert spans[-1][0] + spans[-1][1] == os.path.getsize(bad_file)
 
-    # unit: the fidelity check catches a replacement-decoded text (the
-    # lossy path ADVICE r3 flagged: sizes disagree -> ValueError)
-    lossy_text = bad_bytes.decode("utf-8", errors="replace")
-    with pytest.raises(ValueError, match="not valid UTF-8"):
-        _check_utf8_fidelity(f"file:{bad_file}", lossy_text)
-    # and a faithful decode of a VALID file passes (size round-trips)
-    _check_utf8_fidelity(f"file:{src}", data.decode("utf-8"))
+    back = {r["url"]: r["body"] for r in read_warc_at(spark, cdx).collect()}
+    assert back["http://a.test/1"] == b"<html>one \xff\xff</html>"
+    assert back["http://a.test/3"] == _DOC_ROWS[2][4].encode()
 
 
 def test_build_cdx_accepts_genuine_replacement_char(spark, tmp_path):
-    """A VALID UTF-8 archive whose text legitimately contains U+FFFD must
-    index fine — the fidelity check re-encodes and finds the sizes agree
-    (the marker alone is not proof of lossy decoding)."""
+    """A VALID UTF-8 archive whose text legitimately contains U+FFFD
+    indexes and reads back like any other bytes."""
     from kermit_spark.warc import build_cdx, read_warc_at, write_warc
 
     docs = spark.createDataFrame(
-        [("http://a.test/fffd", 0, 200, "text/html", "literal � marker")],
+        [("http://a.test/fffd", 0, 200, "text/html", "literal \ufffd marker")],
         "url string, wave int, status int, content_type string, body string",
     )
     path = str(tmp_path / "w")
@@ -463,7 +512,7 @@ def test_build_cdx_accepts_genuine_replacement_char(spark, tmp_path):
     rows = cdx.collect()
     assert len(rows) == 1
     back = read_warc_at(spark, cdx).collect()
-    assert back[0]["body"] == "literal � marker"
+    assert back[0]["body"] == "literal \ufffd marker".encode()
 
 
 def test_crawler_replay_documents_uses_crawl_partitioning(spark, tmp_path):
@@ -544,92 +593,40 @@ def _bin_docs(spark):
 
 
 def test_warc_gz_roundtrip_bit_exact(spark, tmp_path):
-    """write_warc_gz → read_warc_binary round-trips latin-1, raw binary,
-    UTF-8 and empty bodies BIT-exactly (the UTF-8 text path would corrupt
-    or loudly reject every one of the first two)."""
-    from kermit_spark.warc import read_warc_binary, write_warc_gz
+    """write_warc_gz → read_warc round-trips latin-1, raw binary,
+    UTF-8 and empty bodies BIT-exactly, and so does CDX → read_warc_at
+    through seek+read+one-member-gunzip."""
+    from kermit_spark.warc import build_cdx, read_warc, read_warc_at, write_warc_gz
 
     path = str(tmp_path / "arc")
     write_warc_gz(_bin_docs(spark), path)
     back = {
         r["url"]: (r["wave"], r["status"], r["content_type"], bytes(r["body"]))
-        for r in read_warc_binary(spark, path).collect()
+        for r in read_warc(spark, path).collect()
     }
     assert len(back) == len(_BIN_ROWS)
     for url, wave, status, ctype, body in _BIN_ROWS:
         assert back[url] == (
             wave, status, ctype or "application/octet-stream", body
         ), url
-
-
-def test_warc_gz_member_coordinates_are_compressed_byte_true(spark, tmp_path):
-    """build_cdx_binary's (offset, length) must be the record's gzip
-    MEMBER coordinates inside the COMPRESSED file: a manual seek+read of
-    exactly those bytes must gunzip to a complete WARC record — the
-    Range-GET contract of the .warc.gz ecosystem."""
-    import hashlib
-    import zlib
-
-    from kermit_spark.warc import build_cdx_binary, write_warc_gz
-
-    path = str(tmp_path / "arc")
-    write_warc_gz(_bin_docs(spark), path)
-    rows = build_cdx_binary(spark, path).collect()
-    assert len(rows) == len(_BIN_ROWS)
-    bodies = {u: b for u, _, _, _, b in _BIN_ROWS}
-    for r in rows:
-        local = r["filename"][len("file:"):]
-        with open(local, "rb") as f:
-            f.seek(r["offset"])
-            blob = f.read(r["length"])
-        assert blob[:2] == b"\x1f\x8b"
-        rec = zlib.decompress(blob, wbits=31)
-        assert rec.startswith(b"WARC/1.0") and rec.endswith(b"\r\n\r\n")
-        # digest is md5 over the raw BODY bytes
-        assert r["digest"] == hashlib.md5(bodies[r["url"]]).hexdigest()
-
-
-def test_warc_gz_ranged_read_back(spark, tmp_path):
-    """CDX → read_warc_at_binary returns every record's body bit-exactly
-    through seek+read+one-member-gunzip; lookup_cdx pruning composes with
-    the binary index unchanged (same CDX schema)."""
-    from kermit_spark.warc import (
-        build_cdx_binary,
-        lookup_cdx,
-        read_warc_at_binary,
-        write_cdx_table,
-        write_warc_gz,
-    )
-
-    path = str(tmp_path / "arc")
-    write_warc_gz(_bin_docs(spark), path)
-    cdx = build_cdx_binary(spark, path)
-    back = {
-        r["url"]: bytes(r["body"])
-        for r in read_warc_at_binary(spark, cdx).collect()
-    }
-    for url, _, _, _, body in _BIN_ROWS:
-        assert back[url] == body, url
-    # stored + pruned lookup path
-    table = str(tmp_path / "cdx")
-    write_cdx_table(cdx, table, buckets=8)
-    hit = lookup_cdx(spark, table, ["http://a.test/img.png"], buckets=8)
-    got = read_warc_at_binary(spark, hit).collect()
-    assert len(got) == 1 and bytes(got[0]["body"]) == _BIN_ROWS[1][4]
+    cdx = build_cdx(spark, path)
+    at = {r["url"]: bytes(r["body"]) for r in read_warc_at(spark, cdx).collect()}
+    assert at == {url: body for url, _, _, _, body in _BIN_ROWS}
+    one = read_warc_at(spark, cdx.filter(F.col("url") == "http://a.test/img.png")).collect()
+    assert len(one) == 1 and bytes(one[0]["body"]) == _BIN_ROWS[1][4]
 
 
 def test_plain_binary_warc_and_trailing_garbage(spark, tmp_path):
     """An UNCOMPRESSED foreign .warc with binary/latin-1 bodies reads via
     the same byte-space walker with uncompressed coordinates; trailing
-    garbage after the last record is tolerated (records are a prefix),
-    matching the text walker's contract."""
+    garbage after the last record is tolerated (records are a prefix)."""
     import os
 
     from kermit_spark.warc import (
         _render_record_bytes,
-        build_cdx_binary,
-        read_warc_at_binary,
-        read_warc_binary,
+        build_cdx,
+        read_warc,
+        read_warc_at,
     )
 
     d = str(tmp_path / "plain")
@@ -639,33 +636,16 @@ def test_plain_binary_warc_and_trailing_garbage(spark, tmp_path):
             f.write(_render_record_bytes(url, wave, status, ctype, body,
                                          "2000-01-01T00:00:00Z"))
         f.write(b"\x00trailing-garbage-not-a-record")
-    back = {r["url"]: bytes(r["body"]) for r in read_warc_binary(spark, d).collect()}
+    back = {r["url"]: bytes(r["body"]) for r in read_warc(spark, d).collect()}
     assert len(back) == len(_BIN_ROWS)
     for url, _, _, _, body in _BIN_ROWS:
         assert back[url] == body
     at = {
         r["url"]: bytes(r["body"])
-        for r in read_warc_at_binary(spark, build_cdx_binary(spark, d)).collect()
+        for r in read_warc_at(spark, build_cdx(spark, d)).collect()
     }
     for url, _, _, _, body in _BIN_ROWS:
         assert at[url] == body
-
-
-def test_warc_gz_rewrite_is_byte_identical(spark, tmp_path):
-    """Determinism: writing the same rows twice produces byte-identical
-    .warc.gz files (zlib gzip framing carries no timestamp — python's gzip
-    module would stamp wall-clock and break reproducible archives)."""
-    import glob as g
-
-    from kermit_spark.warc import write_warc_gz
-
-    p1, p2 = str(tmp_path / "a"), str(tmp_path / "b")
-    docs = _bin_docs(spark).repartition(2, "url")
-    write_warc_gz(docs, p1)
-    write_warc_gz(docs, p2)
-    f1 = {f.split("/")[-1]: open(f, "rb").read() for f in g.glob(p1 + "/*.warc.gz")}
-    f2 = {f.split("/")[-1]: open(f, "rb").read() for f in g.glob(p2 + "/*.warc.gz")}
-    assert f1 and f1 == f2
 
 
 def test_documents_from_warc_binary_replays_foreign_archive(spark, tmp_path):
@@ -678,7 +658,7 @@ def test_documents_from_warc_binary_replays_foreign_archive(spark, tmp_path):
     from pyspark.sql import functions as F
 
     from kermit_spark.functions.urls import host_salt, url_hash
-    from kermit_spark.warc import documents_from_warc_binary, write_warc_gz
+    from kermit_spark.warc import documents_from_warc, write_warc_gz
 
     rows = [
         ("http://f.test/l1.html", 1, 200, "text/html; charset=latin-1",
@@ -695,7 +675,7 @@ def test_documents_from_warc_binary_replays_foreign_archive(spark, tmp_path):
     path = str(tmp_path / "arc")
     write_warc_gz(df, path)
 
-    docs = documents_from_warc_binary(spark, path, num_partitions=4)
+    docs = documents_from_warc(spark, path, num_partitions=4)
     got = {r["url"]: r for r in docs.collect()}
     assert set(got) == {u for u, *_ in rows}
 
@@ -726,7 +706,7 @@ def test_documents_from_warc_binary_mislabeled_body_never_crashes(spark, tmp_pat
     """An undeclared body that is NOT valid UTF-8 (mislabeled text, the
     real-web norm) must fall back to byte-preserving latin-1 instead of
     failing the replay task."""
-    from kermit_spark.warc import documents_from_warc_binary, write_warc_gz
+    from kermit_spark.warc import documents_from_warc, write_warc_gz
 
     df = spark.createDataFrame(
         [("http://f.test/bad.html", 1, 200, "text/html",
@@ -735,7 +715,7 @@ def test_documents_from_warc_binary_mislabeled_body_never_crashes(spark, tmp_pat
     )
     path = str(tmp_path / "arc")
     write_warc_gz(df, path)
-    docs = documents_from_warc_binary(spark, path, num_partitions=2).collect()
+    docs = documents_from_warc(spark, path, num_partitions=2).collect()
     assert len(docs) == 1
     spans = [tuple(s) for s in docs[0]["spans"]]
     assert spans == [("text", "café broken", None, 0)]
@@ -755,9 +735,9 @@ def test_single_stream_gzip_archive_no_duplication(spark, tmp_path):
 
     from kermit_spark.warc import (
         _render_record_bytes,
-        build_cdx_binary,
-        read_warc_at_binary,
-        read_warc_binary,
+        build_cdx,
+        read_warc,
+        read_warc_at,
     )
 
     d = str(tmp_path / "ss")
@@ -769,23 +749,23 @@ def test_single_stream_gzip_archive_no_duplication(spark, tmp_path):
     with open(os.path.join(d, "whole.warc.gz"), "wb") as f:
         f.write(gzip.compress(blob))
 
-    back = read_warc_binary(spark, d).collect()
+    back = read_warc(spark, d).collect()
     assert len(back) == len(_BIN_ROWS)
 
-    cdx = build_cdx_binary(spark, d)
+    cdx = build_cdx(spark, d)
     rows = cdx.collect()
     assert len(rows) == len(_BIN_ROWS)
     assert {(r["offset"], r["length"]) for r in rows} == {
         (rows[0]["offset"], rows[0]["length"])
     }  # one member -> shared coordinates
     # (a) full fetch: exactly one row per record
-    at = read_warc_at_binary(spark, cdx).collect()
+    at = read_warc_at(spark, cdx).collect()
     assert sorted(r["url"] for r in at) == sorted(u for u, *_ in _BIN_ROWS)
     bodies = {u: b for u, _, _, _, b in _BIN_ROWS}
     for r in at:
         assert bytes(r["body"]) == bodies[r["url"]]
     # (b) one-URL lookup: one record only
-    one = read_warc_at_binary(
+    one = read_warc_at(
         spark, cdx.filter(F.col("url") == "http://a.test/img.png")
     ).collect()
     assert len(one) == 1 and bytes(one[0]["body"]) == _BIN_ROWS[1][4]
@@ -799,7 +779,7 @@ def test_binary_walker_tolerates_truncation(spark, tmp_path):
     import os
     import zlib
 
-    from kermit_spark.warc import _render_record_bytes, read_warc_binary
+    from kermit_spark.warc import _render_record_bytes, read_warc
 
     recs = [
         _render_record_bytes(u, w, s, c, b, "2000-01-01T00:00:00Z")
@@ -821,6 +801,145 @@ def test_binary_walker_tolerates_truncation(spark, tmp_path):
         ext = "warc.gz" if name.startswith("gz") else "warc"
         with open(os.path.join(d, f"f.{ext}"), "wb") as f:
             f.write(blob)
-        back = read_warc_binary(spark, d).collect()
+        back = read_warc(spark, d).collect()
         assert len(back) == 1, name                      # the valid prefix
         assert back[0]["url"] == _BIN_ROWS[0][0], name
+
+
+def test_non_ascii_target_uri_round_trips(spark, tmp_path):
+    """WARC headers are UTF-8 on both sides of the byte layer: a non-ASCII
+    target URI survives either sink, the CDX scan and the ranged read."""
+    from kermit_spark.warc import build_cdx, read_warc_at
+
+    url = "http://a.test/\u65e5\u672c"
+    docs = spark.createDataFrame(
+        [(url, 0, 200, "text/html", "<p>x</p>")],
+        "url string, wave int, status int, content_type string, body string",
+    )
+    for write in _WRITERS:
+        path = str(tmp_path / write.__name__)
+        _write(write, docs, path)
+        assert [r["url"] for r in read_warc(spark, path).collect()] == [url]
+        cdx = build_cdx(spark, path)
+        assert [r["url"] for r in cdx.collect()] == [url]
+        back = read_warc_at(spark, cdx).collect()
+        assert [(r["url"], r["body"]) for r in back] == [(url, b"<p>x</p>")]
+
+
+def _cc_record(i, warc_type, payload, uri=None,
+               content_type="application/warc-fields"):
+    """One record framed the way a Common Crawl writer frames it: its own
+    header set, no WARC-Kermit-Wave, a target URI only where the type has
+    one."""
+    head = [
+        "WARC/1.0",
+        f"WARC-Type: {warc_type}",
+        "WARC-Date: 2024-02-20T10:00:00Z",
+        f"WARC-Record-ID: <urn:uuid:00000000-0000-0000-0000-{i:012d}>",
+        f"Content-Length: {len(payload)}",
+        f"Content-Type: {content_type}",
+    ]
+    if uri is not None:
+        head.insert(2, f"WARC-Target-URI: {uri}")
+    return ("\r\n".join(head) + "\r\n\r\n").encode() + payload + b"\r\n\r\n"
+
+
+def test_common_crawl_shaped_archive_reads_only_response_records(spark, tmp_path):
+    """A Common-Crawl-shaped .warc.gz — warcinfo first, then request,
+    response and metadata records per fetch, a revisit record, one gzip
+    member per record and a truncated tail member — ingests cleanly: the
+    response readers return exactly the response records, and every
+    other WARC-Type is skipped."""
+    import os
+
+    from kermit_spark.warc import build_cdx, documents_from_warc, read_warc_at
+
+    pages = {
+        "http://cc.test/a.html": (
+            "text/html; charset=UTF-8",
+            '<html><body>h\u00e9llo <a href="/next.html">next</a></body></html>'
+            .encode("utf-8"),
+        ),
+        "http://cc.test/b.html": (
+            "text/html; charset=ISO-8859-1",
+            "<html><body>caf\u00e9</body></html>".encode("latin-1"),
+        ),
+    }
+    http = "application/http; msgtype="
+    recs = [_cc_record(0, "warcinfo", b"software: test-crawler\r\n")]
+    for url, (ctype, body) in pages.items():
+        n = len(recs)
+        path = url.split("cc.test", 1)[1].encode()
+        recs += [
+            _cc_record(n, "request",
+                       b"GET " + path + b" HTTP/1.1\r\nHost: cc.test\r\n\r\n",
+                       url, http + "request"),
+            _cc_record(n + 1, "response",
+                       f"HTTP/1.1 200 OK\r\nContent-Type: {ctype}\r\n"
+                       f"Content-Length: {len(body)}\r\n\r\n".encode() + body,
+                       url, http + "response"),
+            _cc_record(n + 2, "metadata", b"fetchTimeMs: 12\r\n", url),
+        ]
+    recs.append(
+        _cc_record(len(recs), "revisit",
+                   b"HTTP/1.1 200 OK\r\nContent-Type: text/html\r\n\r\n",
+                   "http://cc.test/a.html", http + "response")
+    )
+    tail = gzip.compress(
+        _cc_record(len(recs), "response", b"HTTP/1.1 200 OK\r\n\r\ncut",
+                   "http://cc.test/cut.html", http + "response")
+    )[:25]
+    d = str(tmp_path / "cc")
+    os.makedirs(d)
+    with open(os.path.join(d, "CC-MAIN-test-00000.warc.gz"), "wb") as f:
+        f.write(b"".join(gzip.compress(r) for r in recs) + tail)
+
+    back = {r["url"]: r for r in read_warc(spark, d).collect()}
+    assert set(back) == set(pages)
+    for url, (ctype, body) in pages.items():
+        assert (back[url]["wave"], back[url]["status"]) == (0, 200)
+        assert back[url]["content_type"] == ctype
+        assert back[url]["body"] == body
+
+    cdx = build_cdx(spark, d)
+    assert sorted(r["url"] for r in cdx.collect()) == sorted(pages)
+    at = {r["url"]: r["body"] for r in read_warc_at(spark, cdx).collect()}
+    assert at == {url: body for url, (_, body) in pages.items()}
+
+    docs = {r["url"]: r for r in documents_from_warc(spark, d, num_partitions=2).collect()}
+    assert set(docs) == set(pages)
+    a_spans = [tuple(x) for x in docs["http://cc.test/a.html"]["spans"]]
+    assert ("link", "next", "/next.html", 1) in a_spans
+    b_spans = [tuple(x) for x in docs["http://cc.test/b.html"]["spans"]]
+    assert b_spans == [("text", "caf\u00e9", None, 0)]
+
+
+def test_wet_and_wat_read_gzipped_part_files(spark, tmp_path):
+    """read_wet / read_wat walk gzip archives too: a write_wet (write_wat)
+    part file gzip-compressed behind a warcinfo member, the layout of a
+    Common Crawl .wet.gz (.wat.gz), reads back with the same rows as the
+    plain part file."""
+    import os
+
+    from kermit_spark.warc import read_wat, read_wet, write_wat, write_wet
+
+    docs = spark.createDataFrame(
+        [
+            ("http://a.test/1", 0, 200, "text/html",
+             [("text", "h\u00e9llo", None, 0), ("link", "n", "/n/2", 1)]),
+            ("http://a.test/2", 1, 404, "text/html", []),
+        ],
+        "url string, wave int, status int, content_type string, "
+        "spans array<struct<kind string, text string, media_ref string, offset int>>",
+    )
+    warcinfo = gzip.compress(_cc_record(0, "warcinfo", b"software: test\r\n"))
+    for write, read, ext in ((write_wet, read_wet, "wet"), (write_wat, read_wat, "wat")):
+        plain, gz = str(tmp_path / ext), str(tmp_path / f"{ext}_gz")
+        write(docs.repartition(1), plain)
+        os.makedirs(gz)
+        for i, part in enumerate(sorted(glob.glob(f"{plain}/part-*"))):
+            with open(os.path.join(gz, f"part-{i:05d}.{ext}.gz"), "wb") as f:
+                f.write(warcinfo + gzip.compress(open(part, "rb").read()))
+        want = sorted(tuple(r) for r in read(spark, plain).collect())
+        assert len(want) == 2
+        assert sorted(tuple(r) for r in read(spark, gz).collect()) == want
