@@ -1,4 +1,4 @@
-"""Partitioned Bloom-filter URL-seen set.
+"""Bloom-filter kernel of the partitioned URL-seen set (the default).
 
 Replaces the reference's O(1) dedup-on-insert (nedb unique index on ``url``,
 /root/reference/src/kermit/QueueSystem.coffee:162,194-201) with the structure
@@ -6,25 +6,22 @@ the north rule names: a **partitioned Bloom filter keyed on canonicalized URL
 hashes**, one bitset per host-salt partition, persisted as binary blobs in the
 ``url_seen`` table.
 
-Role at 10^10-frontier scale (SURVEY §4.2): the Bloom set is a *shuffle
-reduction prefilter*, never membership truth. Discovered links that the
-partition's filter rejects are **definitely new** (no false negatives) and
-skip the exact anti-join entirely; only the "maybe seen" remainder — a few
-percent at fpp≈1% — is shuffled into the anti-join against the frontier
-partition. Exactness always comes from the anti-join, so a false positive can
-never silently drop a URL and diverge the URL-seen set from the reference
-closure (the hard correctness constraint flagged in SURVEY §7).
+Role at 10^10-frontier scale (SURVEY §4.2): the set is a *shuffle reduction
+prefilter*, never membership truth. Discovered links that the partition's
+filter rejects are **definitely new** (no false negatives) and skip the exact
+anti-join; only the "maybe seen" remainder is shuffled into the anti-join
+against the frontier partition, so a false positive can never silently drop
+a URL (SURVEY §7).
 
-Implementation: numpy bitsets inside Arrow-batched ``applyInPandas`` /
-``cogroup`` (no per-row Python, per input_hint). Double hashing
-(h1 + i*h2 mod m, Kirsch–Mitzenmacher) derives k probe positions from the
-64-bit url_hash without rehashing strings.
-
-The cuckoo-filter variant (cuckoo.py, ``Frontier(seen_filter="cuckoo")``)
-supports deletions for re-crawl/eviction policies (``Frontier.evict``).
-The reference never needs them — UrlStore.reschedule flips status, the URL
-stays *seen* (QueueSystem.coffee:189-191) — so Bloom's smaller no-delete
-bitset remains the default.
+This module is numpy only: ``BloomSpec`` (sizing, saturation test, blob-row
+conversion) plus ``BloomFilter``, one partition's bitset, whose insert /
+contains run ``_probe_positions`` / ``_set_bits`` / ``_test_bits`` — double
+hashing (h1 + i*h2 mod m, Kirsch–Mitzenmacher) derives k probe positions
+from the 64-bit url_hash without rehashing strings. The Spark blob layer
+(build, merge, probe, fill stats) is written once over any kernel in
+``seen.py``; the deletable cuckoo kernel (``cuckoo.py``) plugs into the same
+layer. A Bloom never refuses a key: it saturates instead (fpp = fill^k
+climbs), which the frontier's health check measures and answers with a grow.
 """
 
 from __future__ import annotations
@@ -32,29 +29,6 @@ from __future__ import annotations
 from dataclasses import dataclass
 
 import numpy as np
-import pandas as pd
-from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
-from pyspark.sql.functions import pandas_udf
-from pyspark.sql.types import (
-    BinaryType,
-    BooleanType,
-    DoubleType,
-    IntegerType,
-    LongType,
-    StructField,
-    StructType,
-)
-
-BLOOM_SCHEMA = StructType(
-    [
-        StructField("p", IntegerType(), False),
-        StructField("filter", BinaryType(), True),
-        StructField("n_items", LongType(), False),
-        StructField("m_bits", LongType(), False),
-        StructField("k_hashes", IntegerType(), False),
-    ]
-)
 
 
 @dataclass(frozen=True)
@@ -64,6 +38,8 @@ class BloomSpec:
 
     m_bits: int = 1 << 20
     k_hashes: int = 7
+
+    deletable = False
 
     @staticmethod
     def for_capacity(n_keys_per_partition: int, bits_per_key: int = 10) -> "BloomSpec":
@@ -75,6 +51,77 @@ class BloomSpec:
         m = max(1 << 10, -(-int(n_keys_per_partition) * bits_per_key // 8) * 8)
         return BloomSpec(m_bits=m, k_hashes=7)
 
+    def fit(self, n_keys: int) -> "BloomSpec":
+        """Spec for a partition built with ``n_keys`` keys: the spec itself.
+        A Bloom holds any number of keys; saturation is measured, not
+        prevented."""
+        return self
+
+    def new(self) -> "BloomFilter":
+        return BloomFilter(np.zeros(self.m_bits >> 3, dtype=np.uint8), self.m_bits, self.k_hashes)
+
+    @staticmethod
+    def load(blob: bytes, n_items: int, m_bits: int, k_hashes: int) -> "BloomFilter":
+        """A blob row's filter. The bits stay a read-only view of the blob
+        until the first insert copies them."""
+        return BloomFilter(np.frombuffer(blob, dtype=np.uint8), m_bits, k_hashes, n_items)
+
+    @staticmethod
+    def saturated(stats: dict, max_fpp: float | None) -> bool:
+        """The blob's actual fpp (fill^k) is past ``max_fpp``; None = off."""
+        return max_fpp is not None and stats["est_fpp"] > max_fpp
+
+
+@dataclass
+class BloomFilter:
+    """One partition's bitset. Every operation reads the filter's own
+    (m_bits, k_hashes), never a spec: a resumed frontier holds the default
+    spec even when the stored blobs were grown, and probing modulo the wrong
+    m would give false NEGATIVES."""
+
+    bits: np.ndarray
+    m_bits: int
+    k_hashes: int
+    n_items: int = 0
+
+    def insert(self, keys: np.ndarray) -> int:
+        """OR the keys in; returns the number of keys it could not hold —
+        always 0 for a Bloom."""
+        if not self.bits.flags.writeable:
+            self.bits = self.bits.copy()
+        if len(keys):
+            _set_bits(self.bits, _probe_positions(keys, self.m_bits, self.k_hashes))
+        self.n_items += len(keys)
+        return 0
+
+    def contains(self, keys: np.ndarray) -> np.ndarray:
+        return _test_bits(self.bits, _probe_positions(keys, self.m_bits, self.k_hashes))
+
+    def row(self) -> tuple[bytes, int, int, int]:
+        """(filter, n_items, m_bits, k_hashes) of the url_seen blob row."""
+        return self.bits.tobytes(), self.n_items, self.m_bits, self.k_hashes
+
+    def fill_stats(self) -> dict:
+        """Saturation stats. ``est_keys`` inverts the expected-fill curve
+        E[fill] = 1-(1-1/m)^(kn) ≈ 1-e^(-kn/m)  ⇒  n ≈ -(m/k)·ln(1-fill)
+        (standard Bloom cardinality estimate — Swamidass & Baldi 2007);
+        ``est_fpp`` = fill^k, the *actual* false-positive rate of the blob as
+        built, which keeps climbing as merges OR more keys into a fixed m."""
+        m, k = self.m_bits, self.k_hashes
+        fill = _popcount(self.bits) / m if m else 0.0
+        if 0.0 < fill < 1.0:
+            est_keys = -(m / k) * float(np.log1p(-fill))
+        else:
+            est_keys = 0.0 if fill == 0.0 else float("inf")
+        return {
+            "n_items": int(self.n_items),
+            "m_bits": int(m),
+            "k_hashes": int(k),
+            "fill_ratio": fill,
+            "est_keys": est_keys,
+            "est_fpp": fill**k if k else 1.0,
+        }
+
 
 def _popcount(bits: np.ndarray) -> int:
     """Set-bit count of a uint8 buffer (numpy>=2 bitwise_count; unpackbits
@@ -83,96 +130,6 @@ def _popcount(bits: np.ndarray) -> int:
     if bc is not None:
         return int(bc(bits).sum())
     return int(np.unpackbits(bits).sum())
-
-
-def _fill_row(bits: np.ndarray | None, m: int, k: int, n_items: int) -> dict:
-    """Saturation stats for one blob. ``est_keys`` inverts the expected-fill
-    curve E[fill] = 1-(1-1/m)^(kn) ≈ 1-e^(-kn/m)  ⇒  n ≈ -(m/k)·ln(1-fill)
-    (standard Bloom cardinality estimate — Swamidass & Baldi 2007);
-    ``est_fpp`` = fill^k, the *actual* false-positive rate of the blob as
-    built, which keeps climbing as merges OR more keys into a fixed m."""
-    set_bits = _popcount(bits) if bits is not None and len(bits) else 0
-    fill = set_bits / m if m else 0.0
-    if 0.0 < fill < 1.0:
-        est_keys = -(m / k) * float(np.log1p(-fill))
-    else:
-        est_keys = 0.0 if fill == 0.0 else float("inf")
-    return {
-        "n_items": int(n_items),
-        "m_bits": int(m),
-        "k_hashes": int(k),
-        "fill_ratio": fill,
-        "est_keys": est_keys,
-        "est_fpp": fill**k if k else 1.0,
-    }
-
-
-def blob_fill_stats(
-    blobs: dict[int, tuple[np.ndarray, int, int]], counts: dict[int, int]
-) -> dict[int, dict]:
-    """Driver-side saturation stats for the held blob set (the steady-state
-    wave path already has these in memory — popcount costs m/8 bytes per
-    partition, no Spark job). Returns {p: _fill_row(...)}."""
-    return {
-        int(p): _fill_row(bits, m, k, counts.get(int(p), 0))
-        for p, (bits, m, k) in blobs.items()
-    }
-
-
-FILL_STATS_SCHEMA = StructType(
-    [
-        StructField("p", IntegerType(), False),
-        StructField("n_items", LongType(), False),
-        StructField("m_bits", LongType(), False),
-        StructField("k_hashes", IntegerType(), False),
-        StructField("fill_ratio", DoubleType(), False),
-        StructField("est_keys", DoubleType(), False),
-        StructField("est_fpp", DoubleType(), False),
-    ]
-)
-
-
-def bloom_fill_stats(bloom: DataFrame) -> DataFrame:
-    """Distributed saturation stats over a url_seen blob table — the path
-    for blob sets beyond the driver broadcast cap (10^10-frontier mode:
-    thousands of partitions × up to hundreds of MB each). One Arrow batch
-    per blob row, popcount executor-side; only the 7-column stat row comes
-    back. Cuckoo rows (k_hashes=0, blob = uint8 fingerprint table, 0=empty)
-    report slot LOAD FACTOR in fill_ratio, occupied slots in est_keys, and
-    the spec's fp bound 2·SLOTS/2^8 in est_fpp (cuckoo fp rate is structural
-    — it does not climb with fill the way a Bloom's does; inserts start
-    failing near ~95% load instead)."""
-
-    def stats(batches):
-        for pdf in batches:
-            rows = []
-            for _, r in pdf.iterrows():
-                buf = r["filter"]
-                bits = np.frombuffer(buf, dtype=np.uint8) if buf is not None else None
-                k = int(r["k_hashes"])
-                if k == 0:  # cuckoo fingerprint table
-                    from .cuckoo import _SLOTS
-
-                    occupied = int(np.count_nonzero(bits)) if bits is not None else 0
-                    slots = len(bits) if bits is not None else 0
-                    row = {
-                        "n_items": int(r["n_items"]),
-                        "m_bits": int(r["m_bits"]),
-                        "k_hashes": 0,
-                        "fill_ratio": occupied / slots if slots else 0.0,
-                        "est_keys": float(occupied),
-                        # structural fp bound of partial-key cuckoo:
-                        # 2 buckets x slots candidate fingerprints / 2^8
-                        "est_fpp": 2.0 * _SLOTS / 256.0,
-                    }
-                else:
-                    row = _fill_row(bits, int(r["m_bits"]), k, int(r["n_items"]))
-                row["p"] = int(r["p"])
-                rows.append(row)
-            if rows:
-                yield pd.DataFrame(rows)[[f.name for f in FILL_STATS_SCHEMA.fields]]
-
-    return bloom.mapInPandas(stats, FILL_STATS_SCHEMA)
 
 
 def _probe_positions(hashes: np.ndarray, m_bits: int, k: int) -> np.ndarray:
@@ -193,232 +150,3 @@ def _test_bits(bits: np.ndarray, pos: np.ndarray) -> np.ndarray:
     """True where ALL k probes are set (maybe-seen)."""
     probes = (bits[pos >> 3] >> (pos & 7).astype(np.uint8)) & 1
     return probes.all(axis=1)
-
-
-def build_bloom(
-    frontier: DataFrame,
-    spec: BloomSpec,
-    m_by_partition: dict[int, int] | None = None,
-) -> DataFrame:
-    """Build one filter blob per partition from frontier (p, url_hash).
-
-    One Arrow batch group per partition; the bitset is built vectorized and
-    shipped back as a single binary cell.
-
-    ``m_by_partition`` sizes individual partitions' blobs (p → m_bits,
-    byte-aligned; others fall back to ``spec``): under host skew the
-    partition loads differ by 10-100x, and the saturation auto-grow uses
-    this to give each blob growth× ITS OWN key count instead of paying the
-    peak partition's size P times over. Every probe/merge path reads the
-    per-row (m_bits, k_hashes), so heterogeneous blob sets are native.
-    """
-    m_default, k = spec.m_bits, spec.k_hashes
-    sizes = {int(p): int(m) for p, m in (m_by_partition or {}).items()}
-
-    def make(pdf: pd.DataFrame) -> pd.DataFrame:
-        p = int(pdf["p"].iloc[0])
-        m = sizes.get(p, m_default)
-        bits = np.zeros(m >> 3, dtype=np.uint8)
-        h = pdf["url_hash"].to_numpy(dtype=np.int64)
-        if len(h):
-            _set_bits(bits, _probe_positions(h, m, k))
-        return pd.DataFrame(
-            {
-                "p": [p],
-                "filter": [bits.tobytes()],
-                "n_items": [len(h)],
-                "m_bits": [m],
-                "k_hashes": [k],
-            }
-        )
-
-    return (
-        frontier.select("p", "url_hash")
-        .groupBy("p")
-        .applyInPandas(make, BLOOM_SCHEMA)
-    )
-
-
-def merge_bloom(existing: DataFrame, new_rows: DataFrame, spec: BloomSpec) -> DataFrame:
-    """OR new url_hashes into per-partition blobs (incremental wave update —
-    rebuilding from the full frontier every wave would be O(frontier)).
-
-    ``existing``: BLOOM_SCHEMA rows; ``new_rows``: (p, url_hash).
-    Partitions present only on one side pass through / are created.
-
-    An existing blob's OWN (m_bits, k_hashes) govern the OR — never the
-    passed spec, which only sizes blobs for brand-new partitions. Using
-    the spec on an existing blob of a different size (a resumed Frontier
-    holds the DEFAULT spec even when the stored blobs were auto-grown)
-    would set positions modulo the wrong m — silent false NEGATIVES, i.e.
-    duplicate URLs re-admitted past the prefilter.
-    """
-    m, k = spec.m_bits, spec.k_hashes
-
-    def merge(key, left: pd.DataFrame, right: pd.DataFrame) -> pd.DataFrame:
-        if len(left):
-            bits = np.frombuffer(left["filter"].iloc[0], dtype=np.uint8).copy()
-            n = int(left["n_items"].iloc[0])
-            m_p, k_p = int(left["m_bits"].iloc[0]), int(left["k_hashes"].iloc[0])
-        else:
-            bits = np.zeros(m >> 3, dtype=np.uint8)
-            n = 0
-            m_p, k_p = m, k
-        h = right["url_hash"].to_numpy(dtype=np.int64) if len(right) else np.empty(0, np.int64)
-        if len(h):
-            _set_bits(bits, _probe_positions(h, m_p, k_p))
-        return pd.DataFrame(
-            {
-                "p": [int(key[0])],
-                "filter": [bits.tobytes()],
-                "n_items": [n + len(h)],
-                "m_bits": [m_p],
-                "k_hashes": [k_p],
-            }
-        )
-
-    return (
-        existing.groupBy("p")
-        .cogroup(new_rows.select("p", "url_hash").groupBy("p"))
-        .applyInPandas(merge, BLOOM_SCHEMA)
-    )
-
-
-def collect_blobs(
-    bloom: DataFrame, max_bytes: int = 512 << 20
-) -> tuple[dict[int, tuple[np.ndarray, int, int]], dict[int, int]] | None:
-    """Collect per-partition blobs to the driver as ``(p -> (bits, m, k),
-    p -> n_items)``. Returns None when the set exceeds ``max_bytes`` (very
-    large P × m deployments) — callers fall back to the distributed cogroup
-    path.
-
-    The budget is enforced with a distributed aggregate BEFORE any
-    ``.collect()``: at the multi-GB scales the budget exists for, collecting
-    first and summing on the driver would OOM the driver heap before the
-    check ever ran."""
-    total_row = bloom.agg(
-        F.sum(F.length(F.col("filter"))).alias("total_bytes")
-    ).first()
-    total = int(total_row["total_bytes"] or 0)
-    if total > max_bytes:
-        return None
-    rows = bloom.select("p", "filter", "n_items", "m_bits", "k_hashes").collect()
-    blobs = {
-        int(r["p"]): (
-            np.frombuffer(r["filter"], dtype=np.uint8),
-            int(r["m_bits"]),
-            int(r["k_hashes"]),
-        )
-        for r in rows
-        if r["filter"] is not None
-    }
-    counts = {
-        int(r["p"]): int(r["n_items"]) for r in rows if r["filter"] is not None
-    }
-    return blobs, counts
-
-
-def bloom_prefilter_blobs(
-    candidates: DataFrame, blobs: dict[int, tuple[np.ndarray, int, int]]
-) -> DataFrame:
-    """Shuffle-free Bloom probe against driver-held blobs: broadcast them and
-    tag candidates map-side with a scalar pandas UDF. The candidate rows
-    never move — the cogroup variant repartitions the whole batch by ``p``
-    just to meet its blob, one full shuffle of every discovered link."""
-    spark = candidates.sparkSession
-    bc = spark.sparkContext.broadcast(blobs)
-
-    def probe(p: pd.Series, h: pd.Series) -> pd.Series:
-        table = bc.value
-        out = np.zeros(len(p), dtype=bool)
-        pv = p.to_numpy(dtype=np.int64)
-        hv = h.to_numpy(dtype=np.int64)
-        for part in np.unique(pv):
-            entry = table.get(int(part))
-            if entry is None:
-                continue  # no blob -> definitely new (False)
-            bits, m, k = entry
-            mask = pv == part
-            out[mask] = _test_bits(bits, _probe_positions(hv[mask], m, k))
-        return pd.Series(out)
-
-    probe_udf = pandas_udf(probe, BooleanType())
-    return candidates.withColumn("maybe_seen", probe_udf(F.col("p"), F.col("url_hash")))
-
-
-def bloom_prefilter_broadcast(
-    candidates: DataFrame, bloom: DataFrame, max_broadcast_bytes: int = 512 << 20
-) -> DataFrame | None:
-    """Collect + broadcast-probe in one step (see collect_blobs /
-    bloom_prefilter_blobs). Returns None when the blobs exceed the broadcast
-    cap — callers fall back to the cogroup path."""
-    state = collect_blobs(bloom, max_broadcast_bytes)
-    if state is None:
-        return None
-    return bloom_prefilter_blobs(candidates, state[0])
-
-
-def merge_blobs_inplace(
-    blobs: dict[int, tuple[np.ndarray, int, int]],
-    parts: np.ndarray,
-    hashes: np.ndarray,
-    spec: BloomSpec,
-    counts: dict[int, int],
-) -> None:
-    """OR new (p, url_hash) keys into driver-held blobs, creating blobs for
-    unseen partitions. Vectorized per partition; mutates ``blobs`` and the
-    per-partition ``counts`` in place. This is the wave-steady-state blob
-    maintenance path: the driver already holds the blobs for the broadcast
-    probe, so folding the wave's new keys in-process costs microseconds and
-    ZERO Spark jobs (the distributed merge_bloom + table write only runs at
-    flush time, every k waves)."""
-    for part in np.unique(parts):
-        mask = parts == part
-        entry = blobs.get(int(part))
-        if entry is None:
-            bits = np.zeros(spec.m_bits >> 3, dtype=np.uint8)
-            m, k = spec.m_bits, spec.k_hashes
-        else:
-            bits, m, k = entry
-            if not bits.flags.writeable:
-                bits = bits.copy()
-        _set_bits(bits, _probe_positions(hashes[mask], m, k))
-        blobs[int(part)] = (bits, m, k)
-        counts[int(part)] = counts.get(int(part), 0) + int(mask.sum())
-
-
-def bloom_prefilter(candidates: DataFrame, bloom: DataFrame) -> DataFrame:
-    """Tag candidates with ``maybe_seen``: False ⇒ definitely not in the
-    frontier (skip the anti-join); True ⇒ must be checked exactly.
-
-    Cogroup by partition so each Arrow group pairs the candidate batch with
-    exactly one (or zero) filter blob — the blob is never replicated per row.
-    (Fallback path for blob sets too large to broadcast; see
-    bloom_prefilter_broadcast.)
-    """
-    out_schema = StructType(
-        candidates.schema.fields + [StructField("maybe_seen", BooleanType(), False)]
-    )
-
-    cand_cols = [f.name for f in candidates.schema.fields]
-
-    def test(key, cand: pd.DataFrame, blob: pd.DataFrame) -> pd.DataFrame:
-        if not len(cand):
-            return pd.DataFrame(columns=cand_cols + ["maybe_seen"])
-        if not len(blob) or blob["filter"].iloc[0] is None:
-            cand = cand.copy()
-            cand["maybe_seen"] = False
-            return cand
-        bits = np.frombuffer(blob["filter"].iloc[0], dtype=np.uint8)
-        m = int(blob["m_bits"].iloc[0])
-        k = int(blob["k_hashes"].iloc[0])
-        h = cand["url_hash"].to_numpy(dtype=np.int64)
-        cand = cand.copy()
-        cand["maybe_seen"] = _test_bits(bits, _probe_positions(h, m, k))
-        return cand
-
-    return (
-        candidates.groupBy("p")
-        .cogroup(bloom.groupBy("p"))
-        .applyInPandas(test, out_schema)
-    )

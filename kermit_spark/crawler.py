@@ -1784,10 +1784,7 @@ class Crawler:
                     DOCUMENTS_TABLE, empty, stale, align=False
                 )
         # reset driver-held seen-filter state; next wave re-syncs/rebuilds
-        fr = self.frontier
-        fr._blobs = None
-        fr._blobs_epoch = -1
-        fr._blob_counts = {}
+        self.frontier._forget_blobs()
         return target
 
     def documents(self) -> DataFrame:

@@ -1,18 +1,25 @@
-"""Partitioned cuckoo-filter URL-seen variant — supports deletion.
+"""Cuckoo-filter kernel of the partitioned URL-seen set — supports deletion.
 
 The north rule names "bloom/cuckoo URL-seen (cuckoo fallback for deletions)".
-The engine's default is the Bloom set (bloom.py): the reference's
+The engine's default is the Bloom kernel (bloom.py): the reference's
 ``UrlStore.reschedule`` flips status without un-seeing the URL
 (/root/reference/src/kermit/QueueSystem.coffee:189-191), so nothing ever
-needs deletion and Bloom's smaller/simpler bitset wins. This module provides
-the cuckoo variant for deployments that DO evict (e.g. re-crawl policies that
-age URLs out of the seen-set), with the same partitioned-blob layout and the
-same prefilter contract (no false negatives for present keys; exactness via
-anti-join).
+needs deletion and Bloom's smaller bitset wins. Deletion (``Frontier.evict``
+re-crawl/aging policies) is the one reason to pick cuckoo, so cuckoo is a
+kernel, not a second pipeline: ``CuckooSpec`` (sizing, load-factor
+saturation test, blob-row conversion) plus ``CuckooFilter``, one
+partition's bucket table. The Spark blob layer in ``seen.py`` runs it
+exactly like the Bloom kernel, with the same prefilter contract (no false
+negatives for present keys; exactness via anti-join).
 
 Standard cuckoo filter (Fan et al., CoNEXT'14, public): 4-slot buckets,
 8-bit fingerprints, partial-key cuckoo hashing — bucket2 = bucket1 XOR
 hash(fingerprint). All operations vectorized with numpy over Arrow batches.
+Unlike a Bloom, a cuckoo table can run full: ``insert`` reports the keys it
+could not place, and the frontier answers any such key with a grow and a
+rebuild from the frontier table, so no committed blob stays short of a key.
+Blobs ride the Bloom row layout: ``filter`` = the bucket table bytes,
+``m_bits`` = n_buckets, ``k_hashes`` = 0.
 """
 
 from __future__ import annotations
@@ -20,15 +27,14 @@ from __future__ import annotations
 from dataclasses import dataclass
 
 import numpy as np
-import pandas as pd
-from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
-from pyspark.sql.functions import pandas_udf
-from pyspark.sql.types import BooleanType
 
 _EMPTY = 0  # fingerprints are 1..255; 0 marks an empty slot
 _SLOTS = 4
 _MAX_KICKS = 500
+# load factor past which a table counts as saturated: 4-slot buckets start
+# failing placements near 95%, so grow before that rather than at the
+# first failed key
+_MAX_LOAD = 0.9
 
 
 @dataclass
@@ -85,8 +91,9 @@ class CuckooFilter:
         return placed
 
     def insert(self, keys: np.ndarray) -> int:
-        """Insert keys; returns number inserted (raises if the filter is too
-        full to place a key after MAX_KICKS evictions). Bulk-vectorized:
+        """Insert keys; returns the number of keys it could NOT place (the
+        table is too full to settle a key after MAX_KICKS evictions; the
+        filter then lacks keys and must be rebuilt larger). Bulk-vectorized:
         empty-slot placement in bucket1 then bucket2 handles ~everything at
         sane load factors; only keys finding both buckets full take the
         per-key cuckoo kick loop."""
@@ -100,10 +107,13 @@ class CuckooFilter:
             placed[np.flatnonzero(rem)[placed2]] = True
         inserted = int(placed.sum())
         for i in np.flatnonzero(~placed):
-            if self._insert_one(np.uint8(fps[i]), int(b1s[i])):
-                inserted += 1
+            if not self._insert_one(np.uint8(fps[i]), int(b1s[i])):
+                # the table is full: leave the rest unplaced rather than
+                # spend MAX_KICKS on each of them
+                break
+            inserted += 1
         self.n_items += inserted
-        return inserted
+        return len(keys) - inserted
 
     def _insert_one(self, fp: np.uint8, b1: int) -> bool:
         b2 = int(self._alt_bucket(np.array([b1]), np.array([fp]))[0])
@@ -123,7 +133,7 @@ class CuckooFilter:
             if len(empty):
                 self.table[b, empty[0]] = fp
                 return True
-        raise RuntimeError("cuckoo filter full — resize required")
+        return False  # the fingerprint in hand (possibly another key's) is lost
 
     def contains(self, keys: np.ndarray) -> np.ndarray:
         fps = self._fingerprint(keys)
@@ -174,7 +184,27 @@ class CuckooFilter:
         self.n_items -= removed
         return removed
 
+    def fill_stats(self) -> dict:
+        """Saturation stats in the Bloom stats layout: ``fill_ratio`` is the
+        slot load factor, ``est_keys`` the occupied slots, and ``est_fpp``
+        the structural bound 2·SLOTS/2^8 (2 candidate buckets × 4 slots of
+        8-bit fingerprints) — it does not climb with fill the way a Bloom's
+        does, which is why saturation is a load test (CuckooSpec.saturated)."""
+        occupied = int(np.count_nonzero(self.table))
+        return {
+            "n_items": int(self.n_items),
+            "m_bits": int(self.n_buckets),
+            "k_hashes": 0,
+            "fill_ratio": occupied / self.table.size,
+            "est_keys": float(occupied),
+            "est_fpp": 2.0 * _SLOTS / 256.0,
+        }
+
     # -- (de)serialization for catalog blobs -------------------------------
+
+    def row(self) -> tuple[bytes, int, int, int]:
+        """(filter, n_items, m_bits, k_hashes) of the url_seen blob row."""
+        return self.to_bytes(), self.n_items, self.n_buckets, 0
 
     def to_bytes(self) -> bytes:
         return self.table.tobytes()
@@ -187,16 +217,6 @@ class CuckooFilter:
         return f
 
 
-# ---------------------------------------------------------------------------
-# Partitioned-blob layer (frontier url_seen integration)
-#
-# Cuckoo blobs ride the SAME url_seen table layout as Bloom blobs
-# (bloom.BLOOM_SCHEMA): ``filter`` = the bucket table bytes, ``m_bits`` =
-# n_buckets, and ``k_hashes = 0`` as the cuckoo marker (a Bloom filter always
-# has k >= 1). That keeps the catalog, flush and collect plumbing shared.
-# ---------------------------------------------------------------------------
-
-
 @dataclass(frozen=True)
 class CuckooSpec:
     """Buckets sized for the expected per-partition URL count at ~95% max
@@ -204,162 +224,29 @@ class CuckooSpec:
 
     n_buckets: int = 1 << 17
 
+    deletable = True
+
     @staticmethod
     def for_capacity(n_keys_per_partition: int) -> "CuckooSpec":
         return CuckooSpec(n_buckets=max(1 << 8, int(n_keys_per_partition / (_SLOTS * 0.95))))
 
+    def fit(self, n_keys: int) -> "CuckooSpec":
+        """Spec for a partition built with ``n_keys`` keys: never smaller
+        than one at most half full, so a build or rebuild places every key
+        even when the spec is undersized for the partition."""
+        need = CuckooSpec.for_capacity(2 * n_keys).n_buckets
+        return self if self.n_buckets >= need else CuckooSpec(need)
 
-def _blob_row(p: int, f: CuckooFilter) -> pd.DataFrame:
-    return pd.DataFrame(
-        {
-            "p": [p],
-            "filter": [f.to_bytes()],
-            "n_items": [f.n_items],
-            "m_bits": [f.n_buckets],
-            "k_hashes": [0],
-        }
-    )
+    def new(self) -> CuckooFilter:
+        return CuckooFilter(self.n_buckets)
 
+    @staticmethod
+    def load(blob: bytes, n_items: int, m_bits: int, k_hashes: int) -> CuckooFilter:
+        """A blob row's filter (a writable copy of its table)."""
+        return CuckooFilter.from_bytes(blob, m_bits)
 
-def build_cuckoo(frontier: DataFrame, spec: CuckooSpec) -> DataFrame:
-    """One cuckoo blob per partition from (p, url_hash) rows — the
-    O(frontier) rebuild path, distributed exactly like bloom.build_bloom.
-    Insert placement is a per-key loop (the deletability price vs Bloom's
-    vectorized OR); it runs inside executor Arrow groups, never on the
-    driver."""
-    from .bloom import BLOOM_SCHEMA
-
-    def make(pdf: pd.DataFrame) -> pd.DataFrame:
-        f = CuckooFilter(spec.n_buckets)
-        h = pdf["url_hash"].to_numpy(dtype=np.int64)
-        if len(h):
-            f.insert(h)
-        return _blob_row(int(pdf["p"].iloc[0]), f)
-
-    return frontier.select("p", "url_hash").groupBy("p").applyInPandas(make, BLOOM_SCHEMA)
-
-
-def merge_cuckoo(existing: DataFrame, new_rows: DataFrame, spec: CuckooSpec) -> DataFrame:
-    """Insert new url_hashes into per-partition blobs (distributed fallback
-    when the blob set exceeds the driver cap — bloom.merge_bloom analog)."""
-    from .bloom import BLOOM_SCHEMA
-
-    def merge(key, left: pd.DataFrame, right: pd.DataFrame) -> pd.DataFrame:
-        if len(left):
-            f = CuckooFilter.from_bytes(left["filter"].iloc[0], int(left["m_bits"].iloc[0]))
-        else:
-            f = CuckooFilter(spec.n_buckets)
-        if len(right):
-            f.insert(right["url_hash"].to_numpy(dtype=np.int64))
-        return _blob_row(int(key[0]), f)
-
-    return (
-        existing.groupBy("p")
-        .cogroup(new_rows.select("p", "url_hash").groupBy("p"))
-        .applyInPandas(merge, BLOOM_SCHEMA)
-    )
-
-
-def filters_from_blobs(
-    blobs: dict[int, tuple[np.ndarray, int, int]]
-) -> dict[int, CuckooFilter]:
-    """Rehydrate driver-held CuckooFilter objects from bloom.collect_blobs
-    output ((bits, m_bits, k_hashes) with k_hashes == 0)."""
-    return {p: CuckooFilter.from_bytes(bits.tobytes(), m) for p, (bits, m, _k) in blobs.items()}
-
-
-def cuckoo_prefilter_filters(
-    candidates: DataFrame, filters: dict[int, CuckooFilter]
-) -> DataFrame:
-    """Shuffle-free probe against driver-held filters (broadcast + scalar
-    pandas UDF — bloom.bloom_prefilter_blobs analog). Tags ``maybe_seen``:
-    False ⇒ definitely new (cuckoo has no false negatives for present
-    keys); True ⇒ checked exactly by the anti-join."""
-    spark = candidates.sparkSession
-    bc = spark.sparkContext.broadcast(
-        {p: (f.table.copy(), f.n_buckets) for p, f in filters.items()}
-    )
-
-    def probe(p: pd.Series, h: pd.Series) -> pd.Series:
-        table = bc.value
-        out = np.zeros(len(p), dtype=bool)
-        pv = p.to_numpy(dtype=np.int64)
-        hv = h.to_numpy(dtype=np.int64)
-        for part in np.unique(pv):
-            entry = table.get(int(part))
-            if entry is None:
-                continue
-            bits, n_buckets = entry
-            f = CuckooFilter.__new__(CuckooFilter)
-            f.n_buckets = n_buckets
-            f.table = bits
-            mask = pv == part
-            out[mask] = f.contains(hv[mask])
-        return pd.Series(out)
-
-    probe_udf = pandas_udf(probe, BooleanType())
-    return candidates.withColumn("maybe_seen", probe_udf(F.col("p"), F.col("url_hash")))
-
-
-def cuckoo_prefilter(candidates: DataFrame, blobs: DataFrame) -> DataFrame:
-    """Cogroup probe for blob sets beyond the driver broadcast cap
-    (bloom.bloom_prefilter analog): each Arrow group pairs the partition's
-    candidate batch with its one blob."""
-    from pyspark.sql.types import StructField, StructType
-
-    out_schema = StructType(
-        candidates.schema.fields + [StructField("maybe_seen", BooleanType(), False)]
-    )
-    cand_cols = [f.name for f in candidates.schema.fields]
-
-    def test(key, cand: pd.DataFrame, blob: pd.DataFrame) -> pd.DataFrame:
-        if not len(cand):
-            return pd.DataFrame(columns=cand_cols + ["maybe_seen"])
-        if not len(blob) or blob["filter"].iloc[0] is None:
-            cand = cand.copy()
-            cand["maybe_seen"] = False
-            return cand
-        f = CuckooFilter.from_bytes(blob["filter"].iloc[0], int(blob["m_bits"].iloc[0]))
-        cand = cand.copy()
-        cand["maybe_seen"] = f.contains(cand["url_hash"].to_numpy(dtype=np.int64))
-        return cand
-
-    return candidates.groupBy("p").cogroup(blobs.groupBy("p")).applyInPandas(test, out_schema)
-
-
-def insert_filters_inplace(
-    filters: dict[int, CuckooFilter],
-    parts: np.ndarray,
-    hashes: np.ndarray,
-    spec: CuckooSpec,
-    counts: dict[int, int],
-) -> None:
-    """Driver-side steady-state maintenance: insert the wave's new
-    (budget-bounded) keys into the held filters — bloom.merge_blobs_inplace
-    analog; mutates ``filters`` and ``counts``."""
-    for part in np.unique(parts):
-        f = filters.get(int(part))
-        if f is None:
-            f = CuckooFilter(spec.n_buckets)
-            filters[int(part)] = f
-        mask = parts == part
-        f.insert(hashes[mask])
-        counts[int(part)] = f.n_items
-
-
-def delete_filters_inplace(
-    filters: dict[int, CuckooFilter],
-    parts: np.ndarray,
-    hashes: np.ndarray,
-    counts: dict[int, int],
-) -> None:
-    """THE operation Bloom cannot do: remove evicted URLs' fingerprints in
-    place — O(evicted), no rebuild. Callers only delete keys previously
-    inserted (standard cuckoo deletion contract)."""
-    for part in np.unique(parts):
-        f = filters.get(int(part))
-        if f is None:
-            continue
-        mask = parts == part
-        f.delete(hashes[mask])
-        counts[int(part)] = f.n_items
+    @staticmethod
+    def saturated(stats: dict, max_fpp: float | None) -> bool:
+        """Load factor past _MAX_LOAD. ``max_fpp`` does not apply: the fp
+        bound is structural (see CuckooFilter.fill_stats)."""
+        return stats["fill_ratio"] > _MAX_LOAD

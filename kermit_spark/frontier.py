@@ -23,7 +23,8 @@ Scale design (SURVEY §4):
   * ordering is the deterministic contract of SURVEY §2.8:
     (priority DESC, depth ASC, wave ASC, url_hash ASC) — strictly stronger
     than the reference's timing-dependent interleaving, same BFS semantics;
-  * dedup = Bloom prefilter (bloom.py) + exact anti-join on
+  * dedup = seen-filter prefilter (seen.py over the bloom.py / cuckoo.py
+    kernels) + exact anti-join on
     (p, url_hash, url) — url in the key so a 64-bit hash collision can never
     merge two distinct URLs. Below BLOOM_MIN_FRONTIER rows the plain
     anti-join alone is cheaper and the blobs pause (epoch-tracked rebuild on
@@ -35,36 +36,19 @@ Scale design (SURVEY §4):
 
 from __future__ import annotations
 
+import math
 from collections.abc import Iterable
 from dataclasses import dataclass, field
 
-from pyspark.sql import Column, DataFrame
+import numpy as np
+from pyspark.sql import Column, DataFrame, Observation
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from .bloom import (
-    BLOOM_SCHEMA,
-    BloomSpec,
-    blob_fill_stats,
-    bloom_fill_stats,
-    bloom_prefilter,
-    bloom_prefilter_blobs,
-    build_bloom,
-    collect_blobs,
-    merge_bloom,
-    merge_blobs_inplace,
-)
+from . import seen
+from .bloom import BloomSpec
 from .catalog import SnapshotCatalog
-from .cuckoo import (
-    CuckooSpec,
-    cuckoo_prefilter,
-    cuckoo_prefilter_filters,
-    build_cuckoo,
-    delete_filters_inplace,
-    filters_from_blobs,
-    insert_filters_inplace,
-    merge_cuckoo,
-)
+from .cuckoo import CuckooSpec
 from .functions.urls import host_of
 
 FRONTIER_TABLE = "frontier"
@@ -76,6 +60,12 @@ URL_SEEN_TABLE = "url_seen"
 # snapshot properties, so the switch is free; crossing the threshold
 # triggers a one-time blob rebuild (epoch-tracked, see _ensure_bloom_synced).
 BLOOM_MIN_FRONTIER = 1_000_000
+
+# A saturated seen filter grows each partition to this multiple of ITS OWN
+# observed key count (10 bits/key Bloom → fpp back to ≈0.8%; cuckoo load
+# back to ~25%). Capacity quadruples per grow, so the O(frontier) rebuild
+# amortizes.
+SEEN_GROWTH = 4.0
 
 # status lifecycle (UrlStore phases, QueueSystem.coffee:194-199 — plus 'error'
 # which the reference models on the item, RequestItem.coffee:295-299)
@@ -347,7 +337,6 @@ class Frontier:
         bloom_min_frontier: int = BLOOM_MIN_FRONTIER,
         bloom_commit_every: int = 8,
         bloom_max_fpp: float | None = 0.02,
-        bloom_growth: float = 4.0,
         seen_filter: str = "bloom",
         cuckoo_spec: CuckooSpec | None = None,
         driver_blob_max_bytes: int = 512 << 20,
@@ -357,37 +346,39 @@ class Frontier:
             raise ValueError(f"seen_filter must be 'bloom' or 'cuckoo', got {seen_filter!r}")
         self.catalog = catalog
         self.num_partitions = num_partitions
-        self.bloom_spec = bloom_spec or BloomSpec()
         self.bloom_min_frontier = bloom_min_frontier
         # probe-structure choice (north rule: "bloom/cuckoo URL-seen, cuckoo
-        # fallback for deletions"). Bloom = default: smaller blobs, vectorized
-        # OR-merge; matches reference semantics where nothing is ever
-        # un-seen. Cuckoo = deletable fingerprints: evict() removes keys in
-        # place (O(evicted)) where Bloom must mark the blobs stale and pay
-        # one O(frontier) rebuild. Both ride the same url_seen blob table
-        # (k_hashes=0 marks cuckoo rows) and the same exactness contract —
-        # the filter is a shuffle-reduction prefilter, the anti-join is
-        # membership truth.
+        # fallback for deletions"), picked here once: the kernel is the spec
+        # named by seen_filter, and seen.py runs either one. Bloom = default:
+        # smaller blobs, vectorized OR-merge; matches reference semantics
+        # where nothing is ever un-seen. Cuckoo = deletable fingerprints:
+        # evict() removes keys in place (O(evicted)) where Bloom must mark
+        # the blobs stale and pay one O(frontier) rebuild. Either way the
+        # filter is a shuffle-reduction prefilter; the anti-join is
+        # membership truth. A grow replaces the picked spec, so
+        # ``bloom_spec`` / ``cuckoo_spec`` always size the next new blob.
         self.seen_filter = seen_filter
+        self.bloom_spec = bloom_spec or BloomSpec()
         self.cuckoo_spec = cuckoo_spec or CuckooSpec()
+        self._spec_attr = f"{seen_filter}_spec"
         # blob maintenance is DEFERRED: the driver already collects the blobs
-        # for the broadcast probe each wave, so new keys are OR-ed into that
-        # in-process copy (zero Spark jobs) and the url_seen table is only
-        # written every ``bloom_commit_every`` epochs / at flush_bloom().
+        # for the broadcast probe each wave, so new keys are inserted into
+        # that in-process copy (zero Spark jobs) and the url_seen table is
+        # only written every ``bloom_commit_every`` epochs / at flush_bloom().
         # Crash between flushes ⇒ one O(frontier) rebuild at next use — the
         # blobs are derived state, the frontier table is membership truth.
         self.bloom_commit_every = bloom_commit_every
         # saturation guard: a fixed-m Bloom silently degrades as waves OR
         # more keys in (fpp = fill^k keeps climbing) — at 10^10-frontier
         # scale that turns the prefilter into a no-op and the exact
-        # anti-join back into a full-frontier shuffle. Every flush epoch the
-        # driver popcounts its held blobs (m/8 bytes each, no Spark job);
-        # when any partition's ACTUAL fpp exceeds ``bloom_max_fpp`` the spec
-        # grows to ``bloom_growth``× the observed peak keys and the blobs
-        # are rebuilt once from the frontier (the documented O(frontier)
-        # rebuild — amortized: capacity quadruples each time). None = off.
+        # anti-join back into a full-frontier shuffle — and a cuckoo table
+        # runs full. The health check (_check_health) runs every
+        # ``bloom_commit_every`` epochs, at flush_bloom() and on a trust-mode
+        # wave that admits nothing, in both residencies; a Bloom partition
+        # whose ACTUAL fpp exceeds ``bloom_max_fpp`` (None = off), a cuckoo
+        # partition past its load limit, or any key a cuckoo could not
+        # place triggers one _grow_and_rebuild.
         self.bloom_max_fpp = bloom_max_fpp
-        self.bloom_growth = bloom_growth
         # driver-held blob budget: above this total the URL-seen set stays
         # table-resident and every probe/merge runs distributed (cogroup) —
         # at 10^10 keys × 10 bits the set is ~12.5 GB, far past any driver;
@@ -414,41 +405,20 @@ class Frontier:
         # the reference-parity contract (never lose a URL), and every
         # oracle/test runs exact.
         self.exact_dedup = exact_dedup
-        self._blobs: dict | None = None  # p -> (bits ndarray, m, k)
-        self._blob_counts: dict[int, int] = {}
+        # seen-filter state: {p: filter} when driver-held, None when
+        # table-resident (or not loaded); current as of url_epoch
+        # _blobs_epoch (-1 = unknown). _checked_epoch is the epoch of the
+        # last health check.
+        self._blobs: dict | None = None
         self._blobs_epoch = -1
+        self._checked_epoch = -1
         self._dirty_parts: set[int] = set()
         self._pending_cache = None  # intra-commit cache (see _dedup_candidates)
 
-    # -- seen-filter strategy (bloom | cuckoo) -----------------------------
-
-    def _build_seen(self, rows: DataFrame) -> DataFrame:
-        if self.seen_filter == "cuckoo":
-            return build_cuckoo(rows, self.cuckoo_spec)
-        return build_bloom(rows, self.bloom_spec)
-
-    def _probe_seen_driver(self, rows: DataFrame, state) -> DataFrame:
-        if self.seen_filter == "cuckoo":
-            return cuckoo_prefilter_filters(rows, state)
-        return bloom_prefilter_blobs(rows, state)
-
-    def _probe_seen_cogroup(self, rows: DataFrame, blob_table: DataFrame) -> DataFrame:
-        if self.seen_filter == "cuckoo":
-            return cuckoo_prefilter(rows, blob_table)
-        return bloom_prefilter(rows, blob_table)
-
-    def _merge_seen_inplace(self, parts, hashes) -> None:
-        if self.seen_filter == "cuckoo":
-            insert_filters_inplace(
-                self._blobs, parts, hashes, self.cuckoo_spec, self._blob_counts
-            )
-        else:
-            merge_blobs_inplace(self._blobs, parts, hashes, self.bloom_spec, self._blob_counts)
-
-    def _merge_seen_distributed(self, existing: DataFrame, new_rows: DataFrame) -> DataFrame:
-        if self.seen_filter == "cuckoo":
-            return merge_cuckoo(existing, new_rows, self.cuckoo_spec)
-        return merge_bloom(existing, new_rows, self.bloom_spec)
+    @property
+    def _spec(self):
+        """The seen-filter kernel (``bloom_spec`` or ``cuckoo_spec``)."""
+        return getattr(self, self._spec_attr)
 
     # -- lifecycle ---------------------------------------------------------
 
@@ -463,20 +433,15 @@ class Frontier:
             FRONTIER_TABLE, rows, self.num_partitions,
             properties={"n_rows": n, "url_epoch": 0},
         )
-        if self._use_bloom(n):
-            bloom = self._build_seen(rows)
-            self.catalog.create(
-                URL_SEEN_TABLE, bloom, self.num_partitions,
-                properties={"synced_epoch": 0},
-            )
-        else:
-            # small frontier: dedup is a plain anti-join; blobs are built on
-            # demand the first time the frontier crosses the threshold
-            empty = self._build_seen(rows.limit(0))
-            self.catalog.create(
-                URL_SEEN_TABLE, empty, self.num_partitions,
-                properties={"synced_epoch": -1},
-            )
+        # small frontier: dedup is a plain anti-join; blobs are built on
+        # demand the first time the frontier crosses the threshold
+        use_bloom = self._use_bloom(n)
+        self.catalog.create(
+            URL_SEEN_TABLE,
+            seen.build_blobs(rows if use_bloom else rows.limit(0), self._spec),
+            self.num_partitions,
+            properties={"synced_epoch": 0 if use_bloom else -1},
+        )
         rows.unpersist()
 
     def _use_bloom(self, n_rows: int | None) -> bool:
@@ -490,164 +455,121 @@ class Frontier:
         return (int(n) if n is not None else None), int(props.get("url_epoch", 0))
 
     def _ensure_blobs_current(self) -> dict | None:
-        """Make the driver-held blob set match the frontier's url_epoch and
-        return it; None when the blobs exceed the driver cap (the distributed
-        cogroup path takes over). Stale committed blobs (sub-threshold waves,
-        a crash between deferred flushes, another writer) trigger ONE
-        O(frontier) rebuild, committed immediately and epoch-stamped."""
+        """Make the seen-filter state match the frontier's url_epoch and
+        return the driver-held filters; None when the blobs exceed the
+        driver cap (table-resident: the distributed cogroup path takes
+        over). Stale committed blobs (sub-threshold waves, a crash between
+        deferred flushes, another writer) trigger ONE O(frontier) rebuild,
+        committed immediately and epoch-stamped."""
         _, epoch = self._frontier_stats()
-        if self._blobs is not None and self._blobs_epoch == epoch:
+        if self._blobs_epoch == epoch:
             return self._blobs
         synced = int(self.catalog.snapshot_property(URL_SEEN_TABLE).get("synced_epoch", -1))
         if synced != epoch:
-            bloom = self._build_seen(self.read().select("p", "url_hash"))
-            self.catalog.overwrite_partitions(
-                URL_SEEN_TABLE, bloom, range(self.num_partitions),
-                properties={"synced_epoch": epoch},
-            )
-        state = collect_blobs(
-            self.catalog.read(URL_SEEN_TABLE), self.driver_blob_max_bytes
-        )
-        if state is None:
-            self._blobs = None
-            return None
-        self._blobs, self._blob_counts = state
-        if self.seen_filter == "cuckoo":
-            self._blobs = filters_from_blobs(self._blobs)
-        self._blobs_epoch = epoch
-        self._dirty_parts = set()
+            self._rebuild(epoch)
+        self._hold(epoch)
         return self._blobs
 
-    def flush_bloom(self) -> None:
-        """Commit deferred driver-side blob maintenance to the url_seen
-        table (partition-pruned: only dirty blobs are written). Runs every
-        ``bloom_commit_every`` epochs and should be called at crawl end; a
-        no-op when nothing is dirty.
+    def _rebuild(self, epoch: int, sizes: dict | None = None) -> None:
+        """Build every blob from the frontier table and commit it at
+        ``epoch``."""
+        self.catalog.overwrite_partitions(
+            URL_SEEN_TABLE,
+            seen.build_blobs(self.read(), self._spec, sizes),
+            range(self.num_partitions),
+            properties={"synced_epoch": epoch},
+        )
 
-        The saturation check runs even with NOTHING dirty: under
+    def _hold(self, epoch: int) -> None:
+        """Adopt the committed blobs as the current state at ``epoch``:
+        driver-held when they fit the budget, else table-resident."""
+        self._blobs = seen.collect_blobs(
+            self.catalog.read(URL_SEEN_TABLE), self._spec, self.driver_blob_max_bytes
+        )
+        self._blobs_epoch = self._checked_epoch = epoch
+        self._dirty_parts = set()
+
+    def _forget_blobs(self) -> None:
+        """Drop the seen-filter state; the next above-threshold use reloads
+        it, rebuilding once if the committed blobs are stale."""
+        self._blobs = None
+        self._blobs_epoch = -1
+
+    def flush_bloom(self) -> None:
+        """Run the seen-filter health check, then commit deferred driver-side
+        blob maintenance to the url_seen table (partition-pruned: only dirty
+        blobs are written). Runs every ``bloom_commit_every`` epochs and
+        should be called at crawl end; a no-op before any seen-filter state
+        exists.
+
+        The health check runs even with NOTHING dirty: under
         ``exact_dedup=False`` a fully saturated filter admits nothing, so
         no blob ever goes dirty — gating the check on dirtiness would
         leave the filter saturated FOREVER, silently dropping every new
-        URL. The check is a driver-side popcount (no Spark job), so the
-        nothing-dirty path stays cheap."""
-        if self._blobs is None:
+        URL. Driver-held filters are popcounted in process (no Spark job);
+        table-resident blobs take one distributed fill-stats pass."""
+        if self._blobs_epoch < 0:
             return
-        if self.seen_filter == "bloom" and self.bloom_max_fpp is not None:
-            stats = blob_fill_stats(self._blobs, self._blob_counts)
-            worst = max((s["est_fpp"] for s in stats.values()), default=0.0)
-            if worst > self.bloom_max_fpp:
-                self._grow_and_rebuild(stats)
-                return
-        if not self._dirty_parts:
+        if self._check_health() or not self._dirty_parts:
             return
         dirty = sorted(self._dirty_parts)
-        if self.seen_filter == "cuckoo":
-            rows = [
-                (
-                    p,
-                    self._blobs[p].to_bytes(),
-                    self._blob_counts.get(p, 0),
-                    self._blobs[p].n_buckets,
-                    0,
-                )
-                for p in dirty
-            ]
-        else:
-            rows = [
-                (
-                    p,
-                    self._blobs[p][0].tobytes(),
-                    self._blob_counts.get(p, 0),
-                    self._blobs[p][1],
-                    self._blobs[p][2],
-                )
-                for p in dirty
-            ]
-        df = self.catalog.spark.createDataFrame(rows, BLOOM_SCHEMA)
+        df = self.catalog.spark.createDataFrame(
+            [(p, *self._blobs[p].row()) for p in dirty], seen.BLOB_SCHEMA
+        )
         self.catalog.overwrite_partitions(
             URL_SEEN_TABLE, df, dirty, properties={"synced_epoch": self._blobs_epoch}
         )
         self._dirty_parts = set()
 
+    def _check_health(self) -> bool:
+        """One health check for both kernels and both residencies: grow and
+        rebuild when any partition is saturated. Returns whether it did."""
+        self._checked_epoch = self._blobs_epoch
+        stats = self.seen_fill_stats()
+        if not any(self._spec.saturated(s, self.bloom_max_fpp) for s in stats.values()):
+            return False
+        self._grow_and_rebuild(stats)
+        return True
+
     def _grow_and_rebuild(self, stats: dict[int, dict]) -> None:
         """Saturation response: grow each partition's blob to
-        ``bloom_growth``× ITS OWN observed key count (10 bits/key → fpp
-        back to ≈0.8%) and rebuild the WHOLE blob set from the frontier
-        table — membership truth, so the rebuild can never lose a key.
-        Committed at the current blob epoch; the rebuilt blobs stay
-        driver-resident when they fit the budget (see below), so the next
-        wave probes immediately.
+        ``SEEN_GROWTH``× ITS OWN observed key count and rebuild the WHOLE
+        blob set from the frontier table — membership truth, so the rebuild
+        can never lose a key, and a cuckoo blob that could not place a key
+        is replaced. Committed at the current url_epoch; the rebuilt blobs
+        stay driver-resident when they fit the budget, so the next wave
+        probes immediately.
 
         Sizing is PER PARTITION, not a uniform peak-sized spec: frontier
         partitions are host-salted, so a hot domain skews key counts
         10-100x — a uniform spec at growth×peak would cost
         peak-sized-blob × P driver/broadcast bytes (measured 540 MB at the
-        10^7-row skewed leg vs ~70 MB per-partition). ``self.bloom_spec``
-        keeps the grown PEAK as the fallback for partitions that appear
-        later; every probe/merge path reads per-row (m, k), so the
-        heterogeneous set is native (bloom.build_bloom m_by_partition)."""
-        import math
+        10^7-row skewed leg vs ~70 MB per-partition). The kernel spec keeps
+        the grown PEAK as the fallback for partitions that appear later;
+        every probe/merge path reads each blob's own size, so the
+        heterogeneous set is native."""
 
-        def cap_of(s: dict) -> float:
-            return max(
-                s["n_items"],
-                s["est_keys"] if math.isfinite(s["est_keys"]) else 0.0,
-            )
+        def keys_of(s: dict) -> float:
+            return max(s["n_items"], s["est_keys"] if math.isfinite(s["est_keys"]) else 0.0)
 
-        peak = max(cap_of(s) for s in stats.values())
-        self.bloom_spec = BloomSpec.for_capacity(int(math.ceil(peak * self.bloom_growth)))
-        sizes = {
-            int(p): BloomSpec.for_capacity(
-                int(math.ceil(cap_of(s) * self.bloom_growth))
-            ).m_bits
-            for p, s in stats.items()
-        }
-        bloom = build_bloom(
-            self.read().select("p", "url_hash"), self.bloom_spec,
-            m_by_partition=sizes,
-        )
-        self.catalog.overwrite_partitions(
-            URL_SEEN_TABLE,
-            bloom,
-            range(self.num_partitions),
-            properties={"synced_epoch": self._blobs_epoch},
-        )
-        # keep the freshly rebuilt blobs driver-resident when they fit the
-        # budget — the epoch they were committed under is current, so the
-        # next wave probes immediately instead of paying a reload (the
-        # big-frontier leg measured that reload as most of the first
-        # post-grow wave's overhead); beyond the budget the cogroup path
-        # takes over as usual
-        state = collect_blobs(
-            self.catalog.read(URL_SEEN_TABLE), self.driver_blob_max_bytes
-        )
-        if state is None:
-            self._blobs = None
-            self._blobs_epoch = -1
-        else:
-            self._blobs, self._blob_counts = state
-        self._dirty_parts = set()
+        def grown(keys: float):
+            return self._spec.for_capacity(int(math.ceil(keys * SEEN_GROWTH)))
+
+        sizes = {int(p): grown(keys_of(s)) for p, s in stats.items()}
+        setattr(self, self._spec_attr, grown(max(keys_of(s) for s in stats.values())))
+        _, epoch = self._frontier_stats()
+        self._rebuild(epoch, sizes)
+        self._hold(epoch)
 
     def seen_fill_stats(self) -> dict[int, dict]:
         """Per-partition saturation of the URL-seen structure: {p:
         {n_items, m_bits, k_hashes, fill_ratio, est_keys, est_fpp}}.
-        Driver-held Bloom blobs are popcounted in-process (no Spark job);
-        otherwise (cuckoo mode, or blob sets beyond the driver cap) one
-        distributed pass over the blob table (bloom.bloom_fill_stats)."""
-        if self.seen_filter == "bloom" and self._blobs is not None:
-            return blob_fill_stats(self._blobs, self._blob_counts)
-        rows = bloom_fill_stats(self.catalog.read(URL_SEEN_TABLE)).collect()
-        return {
-            r["p"]: {
-                "n_items": r["n_items"],
-                "m_bits": r["m_bits"],
-                "k_hashes": r["k_hashes"],
-                "fill_ratio": r["fill_ratio"],
-                "est_keys": r["est_keys"],
-                "est_fpp": r["est_fpp"],
-            }
-            for r in rows
-        }
+        Driver-held filters are counted in-process (no Spark job);
+        otherwise one distributed pass over the blob table."""
+        if self._blobs is not None:
+            return {p: f.fill_stats() for p, f in self._blobs.items()}
+        rows = seen.fill_stats(self.catalog.read(URL_SEEN_TABLE), self._spec).collect()
+        return {r["p"]: {k: v for k, v in r.asDict().items() if k != "p"} for r in rows}
 
     def read(self) -> DataFrame:
         return self.catalog.read(FRONTIER_TABLE)
@@ -672,8 +594,10 @@ class Frontier:
         rows = as_frontier_rows(candidates, self.num_partitions, wave=wave)
         # within-batch dedup: keep the best row per URL under the dequeue
         # order so discovery from multiple parents is deterministic — as a
-        # min_by hash aggregation (partial map-side combine, no sort; a
-        # row_number window here cost a full sort shuffle). referer is the
+        # min_by aggregation with a partial map-side combine. Over a struct
+        # it plans as a partial + final SortAggregate (confirmed with
+        # explain), i.e. it still sorts; making it hash-aggregable is
+        # ROADMAP open item 2 (per-wave fixed cost). referer is the
         # final tiebreaker: two discoveries of the same URL at the same
         # (priority, depth, wave) differ only in referer, and without it the
         # surviving row would be nondeterministic. Struct comparison is
@@ -696,13 +620,13 @@ class Frontier:
 
         blobs = self._ensure_blobs_current()
         if blobs is not None:
-            # broadcast probe from the driver-held blobs keeps the candidate
-            # batch un-shuffled (and skips a per-wave blob table read)
-            tagged = self._probe_seen_driver(rows, blobs)
+            # broadcast probe from the driver-held filters keeps the
+            # candidate batch un-shuffled (and skips a per-wave blob read)
+            tagged = seen.probe_broadcast(rows, blobs)
         else:
             # blob set beyond the driver cap: cogroup probe, blob shipped
             # once per partition
-            tagged = self._probe_seen_cogroup(rows, self.catalog.read(URL_SEEN_TABLE))
+            tagged = seen.probe_cogroup(rows, self.catalog.read(URL_SEEN_TABLE), self._spec)
         # persisted: materialized once by the prune-guard count, reused
         # for the final union (commit_wave unpersists after the commit)
         tagged = tagged.persist()
@@ -783,8 +707,6 @@ class Frontier:
         dequeued batch) — passing it skips a distinct+collect job per wave.
         Returns n_new URLs.
         """
-        from pyspark.sql import Observation
-
         prev_n, prev_epoch = self._frontier_stats()
         use_bloom = self._use_bloom(prev_n)
         new_rows = None
@@ -896,61 +818,62 @@ class Frontier:
         n_new = n_new_of()
         if new_rows is not None:
             if use_bloom and n_new:
-                if self._blobs is not None and self._blobs_epoch == prev_epoch:
-                    # steady state: fold the wave's new keys into the driver-
-                    # held blobs in-process (no Spark job, no table write —
-                    # the flush below commits every bloom_commit_every
-                    # epochs). new_rows is cached from the frontier write, so
-                    # the key pull is a read of cached blocks.
-                    import numpy as np
-
-                    pdf = new_rows.select("p", "url_hash").toPandas()
-                    self._merge_seen_inplace(
-                        pdf["p"].to_numpy(np.int64),
-                        pdf["url_hash"].to_numpy(np.int64),
-                    )
-                    self._blobs_epoch = prev_epoch + 1
-                    self._dirty_parts.update(int(p) for p in pdf["p"].unique())
-                    synced = int(
-                        self.catalog.snapshot_property(URL_SEEN_TABLE).get("synced_epoch", -1)
-                    )
-                    if self._blobs_epoch - synced >= self.bloom_commit_every:
-                        self.flush_bloom()
-                else:
-                    # blob set beyond the driver cap: distributed incremental
-                    # merge + immediate commit (only when the committed blobs
-                    # were in sync; otherwise leave stale — the next
-                    # above-threshold wave rebuilds once)
-                    synced = int(
-                        self.catalog.snapshot_property(URL_SEEN_TABLE).get("synced_epoch", -1)
-                    )
-                    if synced == prev_epoch:
-                        tl = sorted(written)
-                        bloom = self.catalog.read(URL_SEEN_TABLE, snapshot=None)
-                        new_bloom = self._merge_seen_distributed(
-                            bloom.filter(F.col("p").isin(tl)),
-                            new_rows.select("p", "url_hash"),
-                        )
-                        self.catalog.overwrite_partitions(
-                            URL_SEEN_TABLE, new_bloom, tl,
-                            properties={"synced_epoch": prev_epoch + 1},
-                        )
+                self._fold_new_keys(new_rows, written, prev_epoch)
+            elif use_bloom and not self.exact_dedup:
+                # trust-mode liveness: a SATURATED filter makes every
+                # candidate probe-positive, so n_new stays 0 and the
+                # epoch-gated check in _fold_new_keys never runs — without
+                # this, saturation could only be caught at crawl end while
+                # every discovered URL was being dropped in between. A
+                # zero-new wave IS the saturation symptom, so check here.
+                self.flush_bloom()
             new_rows.unpersist()
-        if use_bloom and not self.exact_dedup and not n_new and self._blobs is not None:
-            # trust-mode liveness: a SATURATED filter makes every candidate
-            # probe-positive, so n_new stays 0 and the epoch-gated flush
-            # above never runs — without this, the saturation check could
-            # only fire at crawl end while every discovered URL was being
-            # dropped in between. A zero-new wave IS the saturation
-            # symptom, so run the check right here: flush_bloom popcounts
-            # the driver-held blobs in-process (no Spark job) and returns
-            # immediately when the filter is healthy and nothing is dirty
-            # — the steady-state cost of this call is microseconds.
-            self.flush_bloom()
         if updates is not None:
             updates.unpersist()
         self._drop_pending_cache()
         return n_new
+
+    def _fold_new_keys(self, new_rows: DataFrame, parts: Iterable[int], prev_epoch: int) -> None:
+        """Insert a wave's new (p, url_hash) keys into the seen filter,
+        moving it from ``prev_epoch`` to the next epoch. Driver-held: an
+        in-process insert (no Spark job, no table write — flush_bloom
+        commits every bloom_commit_every epochs; new_rows is cached from the
+        frontier write, so the key pull is a read of cached blocks).
+        Table-resident: a distributed merge committed at once, its
+        unplaced-key count riding the write as an Observation. Stale state
+        is left stale: the next above-threshold wave rebuilds once."""
+        if self._blobs_epoch != prev_epoch:
+            return
+        keys = new_rows.select("p", "url_hash")
+        if self._blobs is not None:
+            pdf = keys.toPandas()
+            part_ids = pdf["p"].to_numpy(np.int64)
+            unplaced = seen.insert_inplace(
+                self._blobs, part_ids, pdf["url_hash"].to_numpy(np.int64), self._spec
+            )
+            self._dirty_parts.update(int(p) for p in np.unique(part_ids))
+        else:
+            touched = sorted(parts)
+            obs = Observation()
+            merged = seen.merge_blobs(
+                self.catalog.read(URL_SEEN_TABLE).filter(F.col("p").isin(touched)),
+                keys,
+                self._spec,
+            )
+            self.catalog.overwrite_partitions(
+                URL_SEEN_TABLE,
+                merged.observe(obs, F.sum("unplaced").alias("unplaced")).drop("unplaced"),
+                touched,
+                properties={"synced_epoch": prev_epoch + 1},
+            )
+            unplaced = int(obs.get["unplaced"] or 0)
+        self._blobs_epoch = prev_epoch + 1
+        if unplaced:
+            # a filter short of a key has false negatives (duplicate rows
+            # past the prefilter): never leave it in use
+            self._grow_and_rebuild(self.seen_fill_stats())
+        elif self._blobs_epoch - self._checked_epoch >= self.bloom_commit_every:
+            self.flush_bloom()
 
     def _drop_pending_cache(self) -> None:
         if self._pending_cache is not None:
@@ -1106,18 +1029,17 @@ class Frontier:
         structure notices. Probe-filter maintenance follows the filter's
         capability:
 
-          * ``seen_filter='cuckoo'``: evicted url_hash fingerprints are
-            deleted from the driver-held filters IN PLACE — O(evicted),
-            no rebuild; blobs flush on the normal deferred schedule.
-          * ``seen_filter='bloom'``: bitsets cannot delete, so the blobs go
-            stale and the next above-threshold use pays the one
-            O(frontier) rebuild (_ensure_blobs_current) — correct either
-            way, since the filter is only ever a prefilter and the
-            anti-join is membership truth.
+          * a deletable kernel (``seen_filter='cuckoo'``) with driver-held
+            filters: evicted url_hash fingerprints are deleted IN PLACE —
+            O(evicted), no rebuild; blobs flush on the normal deferred
+            schedule.
+          * otherwise (Bloom bitsets cannot delete, or table-resident
+            blobs): the state goes stale and the next above-threshold use
+            pays the one O(frontier) rebuild (_ensure_blobs_current) —
+            correct either way, since the filter is only ever a prefilter
+            and the anti-join is membership truth.
 
         Returns the number of rows evicted."""
-        import numpy as np
-
         prev_n, epoch = self._frontier_stats()
         hits = self.read().filter(match).select("p", "url_hash").persist()
         per_part = hits.groupBy("p").count().collect()
@@ -1133,33 +1055,25 @@ class Frontier:
         props["url_epoch"] = epoch + 1
         if prev_n is not None:
             props["n_rows"] = prev_n - n_evicted
-        cuckoo_current = (
-            self.seen_filter == "cuckoo"
-            and self._blobs is not None
-            and self._blobs_epoch == epoch
+        delete_held = (
+            self._spec.deletable and self._blobs is not None and self._blobs_epoch == epoch
         )
-        if cuckoo_current:
+        if delete_held:
             pdf = hits.toPandas()
         self.catalog.overwrite_partitions(
             FRONTIER_TABLE, remaining.select(*FRONTIER_COLS), parts, properties=props
         )
-        if cuckoo_current:
-            delete_filters_inplace(
-                self._blobs,
-                pdf["p"].to_numpy(np.int64),
-                pdf["url_hash"].to_numpy(np.int64),
-                self._blob_counts,
-            )
+        if delete_held:
+            for part, keys in seen.by_partition(
+                pdf["p"].to_numpy(np.int64), pdf["url_hash"].to_numpy(np.int64)
+            ):
+                self._blobs[part].delete(keys)
             self._blobs_epoch = epoch + 1
             self._dirty_parts.update(parts)
-            synced = int(self.catalog.snapshot_property(URL_SEEN_TABLE).get("synced_epoch", -1))
-            if self._blobs_epoch - synced >= self.bloom_commit_every:
+            if self._blobs_epoch - self._checked_epoch >= self.bloom_commit_every:
                 self.flush_bloom()
         else:
-            # bloom (or stale driver state): drop the held copy; the epoch
-            # mismatch forces the documented one-time rebuild on next use
-            self._blobs = None
-            self._blobs_epoch = -1
+            self._forget_blobs()
         hits.unpersist()
         return n_evicted
 

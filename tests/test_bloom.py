@@ -9,10 +9,8 @@ from kermit_spark.bloom import (
     _probe_positions,
     _set_bits,
     _test_bits,
-    bloom_prefilter,
-    build_bloom,
-    merge_bloom,
 )
+from kermit_spark.seen import build_blobs, merge_blobs, probe_cogroup
 
 SPEC = BloomSpec(m_bits=1 << 14, k_hashes=7)
 
@@ -42,37 +40,37 @@ def test_build_and_prefilter_no_false_negatives(spark):
     frontier = spark.createDataFrame(
         [(i % 4, i * 7919) for i in range(200)], "p int, url_hash long"
     )
-    bloom = build_bloom(frontier, SPEC)
+    bloom = build_blobs(frontier, SPEC)
     # candidates: 100 present, 100 absent
     cands = spark.createDataFrame(
         [(i % 4, i * 7919) for i in range(100)]
         + [(i % 4, i * 7919 + 1) for i in range(100)],
         "p int, url_hash long",
     )
-    tagged = bloom_prefilter(cands, bloom).collect()
+    tagged = probe_cogroup(cands, bloom, SPEC).collect()
     present = {(r["p"], r["url_hash"]): r["maybe_seen"] for r in tagged}
     for i in range(100):
         assert present[(i % 4, i * 7919)] is True  # all inserted -> maybe_seen
 
 
 def test_prefilter_partition_without_blob_is_definitely_new(spark):
-    bloom = build_bloom(
+    bloom = build_blobs(
         spark.createDataFrame([(0, 123)], "p int, url_hash long"), SPEC
     )
     cands = spark.createDataFrame([(5, 999)], "p int, url_hash long")
-    got = bloom_prefilter(cands, bloom).collect()
+    got = probe_cogroup(cands, bloom, SPEC).collect()
     assert got[0]["maybe_seen"] is False
 
 
 def test_merge_is_incremental_union(spark):
     base = spark.createDataFrame([(0, 1), (0, 2), (1, 10)], "p int, url_hash long")
-    bloom = build_bloom(base, SPEC)
+    bloom = build_blobs(base, SPEC)
     new = spark.createDataFrame([(0, 3), (2, 20)], "p int, url_hash long")
-    merged = merge_bloom(bloom, new, SPEC)
+    merged = merge_blobs(bloom, new, SPEC)
     cands = spark.createDataFrame(
         [(0, 1), (0, 3), (1, 10), (2, 20)], "p int, url_hash long"
     )
-    tagged = {(r["p"], r["url_hash"]): r["maybe_seen"] for r in bloom_prefilter(cands, merged).collect()}
+    tagged = {(r["p"], r["url_hash"]): r["maybe_seen"] for r in probe_cogroup(cands, merged, SPEC).collect()}
     assert all(tagged.values()), tagged
     n = {r["p"]: r["n_items"] for r in merged.collect()}
     assert n == {0: 3, 1: 1, 2: 1}
@@ -84,13 +82,13 @@ def test_fill_stats_exact_popcount_and_estimates(spark):
     expected-fill curve and lands within ~15% of the true cardinality."""
     import pytest
 
-    from kermit_spark.bloom import blob_fill_stats, bloom_fill_stats, collect_blobs
+    from kermit_spark.seen import collect_blobs, fill_stats
 
     frontier = spark.createDataFrame(
         [(i % 2, i * 7919) for i in range(400)], "p int, url_hash long"
     )
-    bloom = build_bloom(frontier, SPEC).persist()
-    stats = {r["p"]: r for r in bloom_fill_stats(bloom).collect()}
+    bloom = build_blobs(frontier, SPEC).persist()
+    stats = {r["p"]: r for r in fill_stats(bloom, SPEC).collect()}
     for row in bloom.collect():
         p = row["p"]
         bits = np.frombuffer(row["filter"], dtype=np.uint8)
@@ -100,8 +98,7 @@ def test_fill_stats_exact_popcount_and_estimates(spark):
         assert stats[p]["est_keys"] == pytest.approx(200, rel=0.15)
         assert stats[p]["n_items"] == 200
     # the driver-side path over collected blobs agrees exactly
-    blobs, counts = collect_blobs(bloom)
-    driver = blob_fill_stats(blobs, counts)
+    driver = {p: f.fill_stats() for p, f in collect_blobs(bloom, SPEC).items()}
     for p, s in driver.items():
         assert s["fill_ratio"] == stats[p]["fill_ratio"]
         assert s["est_fpp"] == stats[p]["est_fpp"]
@@ -112,8 +109,8 @@ def test_fill_stats_exact_popcount_and_estimates(spark):
 def test_fill_stats_empty_and_cuckoo_rows(spark):
     """An all-zero blob reports fill 0 / est 0; a cuckoo fingerprint row
     (k_hashes=0) reports slot load factor, not popcount."""
-    from kermit_spark.bloom import bloom_fill_stats
-    from kermit_spark.cuckoo import CuckooFilter
+    from kermit_spark.cuckoo import CuckooFilter, CuckooSpec
+    from kermit_spark.seen import fill_stats
 
     cf = CuckooFilter(n_buckets=64)
     cf.insert(np.arange(1, 41, dtype=np.int64))
@@ -124,7 +121,13 @@ def test_fill_stats_empty_and_cuckoo_rows(spark):
     df = spark.createDataFrame(
         rows, "p int, filter binary, n_items long, m_bits long, k_hashes int"
     )
-    stats = {r["p"]: r for r in bloom_fill_stats(df).collect()}
+    # each kernel reads its own rows: the blob table of one frontier holds
+    # one kind
+    stats = {
+        r["p"]: r
+        for kernel, rows in ((SPEC, df.filter("k_hashes > 0")), (CuckooSpec(), df.filter("k_hashes = 0")))
+        for r in fill_stats(rows, kernel).collect()
+    }
     assert stats[0]["fill_ratio"] == 0.0
     assert stats[0]["est_keys"] == 0.0
     assert stats[0]["est_fpp"] == 0.0
@@ -148,32 +151,31 @@ def test_for_capacity_is_byte_aligned():
 
 def test_merge_bloom_respects_existing_blob_size(spark):
     """A resumed Frontier holds the DEFAULT spec even when the stored blobs
-    were auto-grown: merge_bloom must OR under each existing blob's OWN
+    were auto-grown: merge_blobs must OR under each existing blob's OWN
     (m, k) — using the passed spec's m would set positions modulo the
     wrong size and produce false NEGATIVES (duplicate URLs re-admitted)."""
     from pyspark.sql import functions as F
 
-    from kermit_spark.bloom import (
-        BloomSpec, bloom_prefilter_broadcast, build_bloom, merge_bloom,
-    )
+    from kermit_spark.bloom import BloomSpec
+    from kermit_spark.seen import build_blobs, collect_blobs, merge_blobs, probe_broadcast
 
     rows = spark.range(0, 2000).select(
         F.lit(0).alias("p"), F.xxhash64("id").alias("url_hash")
     )
     grown = BloomSpec.for_capacity(500_000)       # auto-grown size
-    blobs = build_bloom(rows, grown)
+    blobs = build_blobs(rows, grown)
     extra = spark.range(2000, 4000).select(
         F.lit(0).alias("p"), F.xxhash64("id").alias("url_hash")
     )
     # merge with the DEFAULT spec (what a resumed Frontier would pass)
-    merged = merge_bloom(blobs, extra, BloomSpec())
+    merged = merge_blobs(blobs, extra, BloomSpec())
     row = merged.collect()[0]
     assert row["m_bits"] == grown.m_bits          # size preserved
     # no false negatives: every key (old and new) must probe maybe_seen
     all_keys = spark.range(0, 4000).select(
         F.lit(0).alias("p"), F.xxhash64("id").alias("url_hash")
     )
-    tagged = bloom_prefilter_broadcast(all_keys, merged)
+    tagged = probe_broadcast(all_keys, collect_blobs(merged, BloomSpec()))
     assert tagged.filter(~F.col("maybe_seen")).count() == 0
 
 
@@ -183,9 +185,8 @@ def test_build_bloom_per_partition_sizing(spark):
     per-row m and probe without false negatives."""
     from pyspark.sql import functions as F
 
-    from kermit_spark.bloom import (
-        BloomSpec, bloom_prefilter_broadcast, build_bloom,
-    )
+    from kermit_spark.bloom import BloomSpec
+    from kermit_spark.seen import build_blobs, collect_blobs, probe_broadcast
 
     # partition 0: 10k keys (hot), partition 1: 100 keys
     rows = spark.range(0, 10_100).select(
@@ -194,9 +195,9 @@ def test_build_bloom_per_partition_sizing(spark):
     )
     sizes = {0: BloomSpec.for_capacity(40_000).m_bits,
              1: BloomSpec.for_capacity(400).m_bits}
-    blobs = build_bloom(rows, BloomSpec(), m_by_partition=sizes)
+    blobs = build_blobs(rows, BloomSpec(), {p: BloomSpec(m) for p, m in sizes.items()})
     got = {r["p"]: r["m_bits"] for r in blobs.collect()}
     assert got[0] == sizes[0] and got[1] == sizes[1]
     assert got[0] > got[1]                        # skew-proportional
-    tagged = bloom_prefilter_broadcast(rows, blobs)
+    tagged = probe_broadcast(rows, collect_blobs(blobs, BloomSpec()))
     assert tagged.filter(~F.col("maybe_seen")).count() == 0

@@ -58,37 +58,36 @@ def test_delete_keeps_remaining_property(keys):
 
 
 def test_build_cuckoo_blobs_match_driver_filters(spark):
-    from kermit_spark.cuckoo import CuckooSpec, build_cuckoo, filters_from_blobs
-    from kermit_spark.bloom import collect_blobs
+    from kermit_spark.cuckoo import CuckooSpec
+    from kermit_spark.seen import build_blobs, collect_blobs
 
     rows = [(i % 4, i * 7919 + 13) for i in range(400)]
     df = spark.createDataFrame(rows, "p int, url_hash long")
-    blobs = collect_blobs(build_cuckoo(df, CuckooSpec(n_buckets=1 << 10)))
-    assert blobs is not None
-    filters = filters_from_blobs(blobs[0])
+    spec = CuckooSpec(n_buckets=1 << 10)
+    blob_df = build_blobs(df, spec).persist()
+    filters = collect_blobs(blob_df, spec)
+    assert filters is not None
+    n_items = {r["p"]: r["n_items"] for r in blob_df.collect()}
+    blob_df.unpersist()
     assert set(filters) == {0, 1, 2, 3}
     for p, f in filters.items():
         keys = np.array([h for pp, h in rows if pp == p], dtype=np.int64)
         assert f.contains(keys).all()  # no false negatives
-        assert blobs[1][p] == f.n_items
+        assert n_items[p] == f.n_items
 
 
 def test_merge_cuckoo_and_cogroup_probe(spark):
-    from kermit_spark.cuckoo import (
-        CuckooSpec,
-        build_cuckoo,
-        cuckoo_prefilter,
-        merge_cuckoo,
-    )
+    from kermit_spark.cuckoo import CuckooSpec
+    from kermit_spark.seen import build_blobs, merge_blobs, probe_cogroup
 
     spec = CuckooSpec(n_buckets=1 << 10)
     first = spark.createDataFrame([(i % 2, i) for i in range(100)], "p int, url_hash long")
     more = spark.createDataFrame([(i % 2, i) for i in range(100, 150)], "p int, url_hash long")
-    blobs = merge_cuckoo(build_cuckoo(first, spec), more, spec)
+    blobs = merge_blobs(build_blobs(first, spec), more, spec)
     cands = spark.createDataFrame(
         [(i % 2, i) for i in range(0, 200, 10)], "p int, url_hash long"
     )
-    tagged = {r["url_hash"]: r["maybe_seen"] for r in cuckoo_prefilter(cands, blobs).collect()}
+    tagged = {r["url_hash"]: r["maybe_seen"] for r in probe_cogroup(cands, blobs, spec).collect()}
     for h, seen in tagged.items():
         if h < 150:
             assert seen  # inserted keys: never a false negative
@@ -96,29 +95,35 @@ def test_merge_cuckoo_and_cogroup_probe(spark):
 
 
 def test_driver_probe_matches_cogroup_probe(spark):
-    from kermit_spark.bloom import collect_blobs
-    from kermit_spark.cuckoo import (
-        CuckooSpec,
-        build_cuckoo,
-        cuckoo_prefilter,
-        cuckoo_prefilter_filters,
-        filters_from_blobs,
-    )
+    """Both residencies' probes agree, for both kernels."""
+    from kermit_spark.bloom import BloomSpec
+    from kermit_spark.cuckoo import CuckooSpec
+    from kermit_spark.seen import build_blobs, collect_blobs, probe_broadcast, probe_cogroup
 
-    spec = CuckooSpec(n_buckets=1 << 10)
-    base = spark.createDataFrame([(i % 4, i * 31) for i in range(300)], "p int, url_hash long")
-    blob_df = build_cuckoo(base, spec).persist()
-    cands = spark.createDataFrame(
-        [(i % 4, i * 31) for i in range(250, 400)], "p int, url_hash long"
-    )
-    via_cogroup = {
-        (r["p"], r["url_hash"]): r["maybe_seen"]
-        for r in cuckoo_prefilter(cands, blob_df).collect()
-    }
-    filters = filters_from_blobs(collect_blobs(blob_df)[0])
-    via_driver = {
-        (r["p"], r["url_hash"]): r["maybe_seen"]
-        for r in cuckoo_prefilter_filters(cands, filters).collect()
-    }
-    blob_df.unpersist()
-    assert via_cogroup == via_driver
+    for spec in (CuckooSpec(n_buckets=1 << 10), BloomSpec(m_bits=1 << 10)):
+        base = spark.createDataFrame([(i % 4, i * 31) for i in range(300)], "p int, url_hash long")
+        blob_df = build_blobs(base, spec).persist()
+        cands = spark.createDataFrame(
+            [(i % 4, i * 31) for i in range(250, 400)], "p int, url_hash long"
+        )
+        via_cogroup = {
+            (r["p"], r["url_hash"]): r["maybe_seen"]
+            for r in probe_cogroup(cands, blob_df, spec).collect()
+        }
+        filters = collect_blobs(blob_df, spec)
+        via_driver = {
+            (r["p"], r["url_hash"]): r["maybe_seen"]
+            for r in probe_broadcast(cands, filters).collect()
+        }
+        blob_df.unpersist()
+        assert via_cogroup == via_driver
+
+
+def test_insert_reports_unplaced_keys_instead_of_raising():
+    """A full table reports the keys it could not place (the frontier then
+    grows and rebuilds) instead of raising mid-commit."""
+    f = CuckooFilter(4)  # 16 slots
+    keys = np.arange(1, 101, dtype=np.int64) * 7919
+    unplaced = f.insert(keys)
+    assert unplaced >= 100 - 16
+    assert f.n_items == 100 - unplaced == int(np.count_nonzero(f.table))

@@ -202,38 +202,86 @@ def test_blob_crash_resume_rebuilds_and_stays_exact(spark, tmp_path):
     assert fr_resume.schedule(_urls(spark, _range_urls(60, 61)), wave=3) == 1
 
 
+# driver_blob_max_bytes per residency: the default budget holds the toy
+# blob sets on the driver; 1 byte keeps them table-resident
+RESIDENCIES = {"driver": 512 << 20, "table": 1}
+
+
+def _tiny_filter(kind):
+    """Frontier kwargs for a deliberately undersized seen filter."""
+    from kermit_spark.bloom import BloomSpec
+    from kermit_spark.cuckoo import CuckooSpec
+
+    if kind == "bloom":
+        return {"bloom_spec": BloomSpec(m_bits=1 << 10, k_hashes=7)}
+    return {"seen_filter": "cuckoo", "cuckoo_spec": CuckooSpec(n_buckets=256)}
+
+
 def test_bloom_autogrows_on_saturation(spark, tmp_path):
     """A fixed-m Bloom saturates as waves OR keys in (fpp = fill^k climbs
-    toward 1, turning the prefilter into a no-op at 10^10 scale). The flush
-    hook must detect actual fpp > bloom_max_fpp from the driver-held blobs,
-    grow the spec, and rebuild from the frontier — with dedup exactness
-    untouched on both sides of the rebuild."""
+    toward 1, turning the prefilter into a no-op at 10^10 scale), and a
+    cuckoo table overflows. The health check must detect it in BOTH
+    residencies, grow the spec, and rebuild from the frontier — with dedup
+    exactness untouched on both sides of the rebuild."""
     from kermit_spark.bloom import BloomSpec
 
-    cat = SnapshotCatalog(spark, str(tmp_path / "cat"))
     tiny = BloomSpec(m_bits=1 << 10, k_hashes=7)
-    fr = Frontier(
-        cat, num_partitions=2, bloom_min_frontier=0, bloom_commit_every=1,
-        bloom_spec=tiny, bloom_max_fpp=0.02,
-    )
+    for kind, res in [(k, r) for k in ("bloom", "cuckoo") for r in RESIDENCIES]:
+        cat = SnapshotCatalog(spark, str(tmp_path / f"{kind}-{res}"))
+        fr = Frontier(
+            cat, num_partitions=2, bloom_min_frontier=0, bloom_commit_every=1,
+            bloom_max_fpp=0.02, driver_blob_max_bytes=RESIDENCIES[res],
+            **_tiny_filter(kind),
+        )
+        # cuckoo: ~1,250 new keys per partition into 1,024 slots overflow
+        n = 800 if kind == "bloom" else 2500
+        fr.init(_urls(spark, _range_urls(0, 50)))
+        # bloom: ~375 keys/partition into 1024 bits -> fill ≈ 0.92, fpp ≈ 0.57
+        fr.schedule(_urls(spark, _range_urls(50, n)), wave=1)
+        if kind == "bloom":
+            assert fr.bloom_spec.m_bits > tiny.m_bits
+        else:
+            assert fr.cuckoo_spec.n_buckets > 256
+        stats = fr.seen_fill_stats()
+        if kind == "bloom":
+            # post-rebuild blobs are back at healthy fpp
+            assert max(s["est_fpp"] for s in stats.values()) <= 0.02
+        else:
+            assert max(s["fill_ratio"] for s in stats.values()) <= 0.9
+        # rebuild counted the true frontier keys (split across p by host hash)
+        assert sum(s["n_items"] for s in stats.values()) == n
+        # exactness across the rebuild: everything seen is still seen...
+        assert fr.schedule(_urls(spark, _range_urls(0, n)), wave=2) == 0
+        # ...and new URLs still land
+        assert fr.schedule(_urls(spark, _range_urls(n, n + 20)), wave=3) == 20
+        # a resumed instance agrees with the grown, committed blobs
+        fr2 = Frontier(SnapshotCatalog(spark, str(tmp_path / f"{kind}-{res}")),
+                       num_partitions=2, bloom_min_frontier=0,
+                       driver_blob_max_bytes=RESIDENCIES[res],
+                       seen_filter=kind)
+        assert fr2.schedule(_urls(spark, _range_urls(0, n + 20)), wave=4) == 0
+
+
+def test_half_full_cuckoo_is_not_rebuilt_at_flush(spark, tmp_path, monkeypatch):
+    """Cuckoo's est_fpp is the structural 2·4/256 ≈ 0.031, above the default
+    bloom_max_fpp of 0.02: the health check must judge a cuckoo table by
+    its load factor, or every flush would rebuild a healthy filter."""
+    from kermit_spark import seen
+    from kermit_spark.cuckoo import CuckooSpec
+
+    fr = Frontier(SnapshotCatalog(spark, str(tmp_path / "cat")), num_partitions=2,
+                  bloom_min_frontier=0, bloom_commit_every=1, seen_filter="cuckoo",
+                  cuckoo_spec=CuckooSpec(n_buckets=256))
     fr.init(_urls(spark, _range_urls(0, 50)))
-    # ~375 keys/partition into 1024 bits -> fill ≈ 0.92, fpp ≈ 0.57 >> 0.02
-    fr.schedule(_urls(spark, _range_urls(50, 800)), wave=1)
-    assert fr.bloom_spec.m_bits > tiny.m_bits
-    # post-rebuild blobs are back at healthy fpp (read from the table: the
-    # driver copy reloads lazily)
-    stats = fr.seen_fill_stats()
-    assert max(s["est_fpp"] for s in stats.values()) <= 0.02
-    # rebuild counted the true frontier keys (split across p by host hash)
-    assert sum(s["n_items"] for s in stats.values()) == 800
-    # exactness across the rebuild: everything seen is still seen...
-    assert fr.schedule(_urls(spark, _range_urls(0, 800)), wave=2) == 0
-    # ...and new URLs still land
-    assert fr.schedule(_urls(spark, _range_urls(800, 820)), wave=3) == 20
-    # a resumed instance agrees with the grown, committed blobs
-    fr2 = Frontier(SnapshotCatalog(spark, str(tmp_path / "cat")),
-                   num_partitions=2, bloom_min_frontier=0)
-    assert fr2.schedule(_urls(spark, _range_urls(0, 820)), wave=4) == 0
+    builds = []
+    monkeypatch.setattr(seen, "build_blobs", lambda *a, **k: builds.append(1))
+    # the health check runs after this wave's insert (bloom_commit_every=1)
+    fr.schedule(_urls(spark, _range_urls(50, 768)), wave=1)
+    fr.flush_bloom()
+    loads = [s["fill_ratio"] for s in fr.seen_fill_stats().values()]
+    assert 0.45 < max(loads) <= 0.5, loads
+    assert builds == []
+    assert fr.cuckoo_spec.n_buckets == 256
 
 
 # -- dequeue / politeness ---------------------------------------------------
@@ -449,7 +497,7 @@ def test_evict_unseens_urls(spark, tmp_path, mode):
     assert fr.evict(F.col("host") == "nosuch.test") == 0
 
 
-def test_evict_cuckoo_deletes_in_place_without_rebuild(spark, tmp_path):
+def test_evict_cuckoo_deletes_in_place_without_rebuild(spark, tmp_path, monkeypatch):
     """The cuckoo payoff: evict maintains the driver-held filters by
     deleting fingerprints — no url_seen table write, no O(frontier)
     rebuild — and dedup stays exact across the eviction."""
@@ -459,31 +507,30 @@ def test_evict_cuckoo_deletes_in_place_without_rebuild(spark, tmp_path):
     fr.init(_urls(spark, _range_urls(0, 40)))
     fr.schedule(_urls(spark, _range_urls(40, 50)), wave=1)  # warm driver blobs
 
-    builds = 0
-    orig = Frontier._build_seen
+    from kermit_spark import seen
 
-    def counting(self, rows):
+    builds = 0
+    orig = seen.build_blobs
+
+    def counting(*args, **kwargs):
         nonlocal builds
         builds += 1
-        return orig(self, rows)
+        return orig(*args, **kwargs)
 
-    Frontier._build_seen = counting
-    try:
-        from kermit_spark.frontier import URL_SEEN_TABLE
+    monkeypatch.setattr(seen, "build_blobs", counting)
+    from kermit_spark.frontier import URL_SEEN_TABLE
 
-        seen_snap = cat.current_snapshot(URL_SEEN_TABLE)
-        assert fr.evict(F.col("host") == "h1.test") == 17
-        # deferred flush: table untouched, no rebuild triggered
-        assert cat.current_snapshot(URL_SEEN_TABLE) == seen_snap
-        assert builds == 0
-        # dedup exact THROUGH the held filters (no rebuild on schedule)
-        assert fr.schedule(_urls(spark, _range_urls(0, 50)), wave=2) == 17
-        assert builds == 0
-    finally:
-        Frontier._build_seen = orig
+    seen_snap = cat.current_snapshot(URL_SEEN_TABLE)
+    assert fr.evict(F.col("host") == "h1.test") == 17
+    # deferred flush: table untouched, no rebuild triggered
+    assert cat.current_snapshot(URL_SEEN_TABLE) == seen_snap
+    assert builds == 0
+    # dedup exact THROUGH the held filters (no rebuild on schedule)
+    assert fr.schedule(_urls(spark, _range_urls(0, 50)), wave=2) == 17
+    assert builds == 0
 
 
-def test_evict_bloom_marks_stale_then_rebuilds_once(spark, tmp_path):
+def test_evict_bloom_marks_stale_then_rebuilds_once(spark, tmp_path, monkeypatch):
     """Bloom cannot delete: evict drops the held blobs and the next use
     pays exactly one rebuild — correctness unchanged."""
     cat = SnapshotCatalog(spark, str(tmp_path / "cat"))
@@ -491,23 +538,22 @@ def test_evict_bloom_marks_stale_then_rebuilds_once(spark, tmp_path):
     fr.init(_urls(spark, _range_urls(0, 40)))
     fr.schedule(_urls(spark, _range_urls(40, 50)), wave=1)
 
-    builds = 0
-    orig = Frontier._build_seen
+    from kermit_spark import seen
 
-    def counting(self, rows):
+    builds = 0
+    orig = seen.build_blobs
+
+    def counting(*args, **kwargs):
         nonlocal builds
         builds += 1
-        return orig(self, rows)
+        return orig(*args, **kwargs)
 
-    Frontier._build_seen = counting
-    try:
-        assert fr.evict(F.col("host") == "h1.test") == 17
-        assert fr.schedule(_urls(spark, _range_urls(0, 50)), wave=2) == 17
-        assert builds == 1  # the one documented rebuild
-        assert fr.schedule(_urls(spark, _range_urls(0, 50)), wave=3) == 0
-        assert builds == 1  # and only one
-    finally:
-        Frontier._build_seen = orig
+    monkeypatch.setattr(seen, "build_blobs", counting)
+    assert fr.evict(F.col("host") == "h1.test") == 17
+    assert fr.schedule(_urls(spark, _range_urls(0, 50)), wave=2) == 17
+    assert builds == 1  # the one documented rebuild
+    assert fr.schedule(_urls(spark, _range_urls(0, 50)), wave=3) == 0
+    assert builds == 1  # and only one
 
 
 def test_recrawl_flips_visited_and_resets_age_clock(spark, tmp_path):
@@ -1121,7 +1167,7 @@ def test_bloom_cogroup_fallback_beyond_driver_cap(spark, tmp_path):
     (driver_blob_max_bytes) must stay table-resident — schedule probes via
     the distributed cogroup path, commit merges via the distributed
     incremental merge — and produce EXACTLY the dedup result the
-    driver-held path produces."""
+    driver-held path produces, for both kernels."""
     from pyspark.sql import functions as F
 
     from kermit_spark.catalog import SnapshotCatalog
@@ -1135,24 +1181,26 @@ def test_bloom_cogroup_fallback_beyond_driver_cap(spark, tmp_path):
             ).alias("url")
         )
 
-    results = {}
-    for mode, cap in (("driver", 512 << 20), ("cogroup", 1)):
-        fr = Frontier(
-            SnapshotCatalog(spark, str(tmp_path / mode)), num_partitions=4,
-            bloom_min_frontier=0,          # bloom active at toy scale
-            driver_blob_max_bytes=cap,
-        )
-        fr.init(urls(0, 2000))
-        n1 = fr.schedule(urls(1000, 3000), wave=1)   # 50% overlap
-        n2 = fr.schedule(urls(2500, 3500), wave=2)   # overlaps wave 1's new rows
-        if mode == "cogroup":
-            assert fr._blobs is None                  # never driver-held
-        results[mode] = (
-            n1, n2,
-            sorted(r["url"] for r in fr.read().filter(F.col("wave") > 0).collect()),
-        )
-    assert results["cogroup"] == results["driver"]
-    assert results["driver"][0] == 1000 and results["driver"][1] == 500
+    for kind in ("bloom", "cuckoo"):
+        results = {}
+        for mode, cap in (("driver", 512 << 20), ("cogroup", 1)):
+            fr = Frontier(
+                SnapshotCatalog(spark, str(tmp_path / f"{kind}-{mode}")), num_partitions=4,
+                bloom_min_frontier=0,          # bloom active at toy scale
+                driver_blob_max_bytes=cap,
+                seen_filter=kind,
+            )
+            fr.init(urls(0, 2000))
+            n1 = fr.schedule(urls(1000, 3000), wave=1)   # 50% overlap
+            n2 = fr.schedule(urls(2500, 3500), wave=2)   # overlaps wave 1's new rows
+            if mode == "cogroup":
+                assert fr._blobs is None                  # never driver-held
+            results[mode] = (
+                n1, n2,
+                sorted(r["url"] for r in fr.read().filter(F.col("wave") > 0).collect()),
+            )
+        assert results["cogroup"] == results["driver"]
+        assert results["driver"][0] == 1000 and results["driver"][1] == 500
 
 
 def test_trust_filter_mode_matches_exact_when_filter_healthy(spark, tmp_path):
@@ -1201,26 +1249,42 @@ def test_trust_filter_mode_never_duplicates_frontier_rows(spark, tmp_path):
     dropped URLs are legitimately RE-ADMITTED on re-discovery (they never
     entered the frontier). What must NEVER happen in trust mode is a
     duplicate frontier row — the filter has no false negatives, so every
-    probe-negative is genuinely new. Pin both properties."""
-    from kermit_spark.bloom import BloomSpec
-
-    cat = SnapshotCatalog(spark, str(tmp_path / "cat"))
-    fr = Frontier(cat, num_partitions=4, bloom_min_frontier=0,
-                  bloom_spec=BloomSpec(m_bits=1 << 10, k_hashes=7),
-                  bloom_max_fpp=0.02, exact_dedup=False)
-    fr.init(_urls(spark, _range_urls(0, 3000)))
-    fr._ensure_blobs_current()
-    fr.schedule(_urls(spark, _range_urls(2990, 3010)), wave=0)  # mostly dropped
-    fr.flush_bloom()                                            # auto-grow fires
-    assert fr.bloom_spec.m_bits > 1 << 10
-    fr.schedule(_urls(spark, _range_urls(2500, 3110)), wave=1)  # re-offer + new
-    total = fr.read().count()
-    distinct = fr.read().select("url").distinct().count()
-    assert total == distinct                 # no duplicate rows, ever
-    # and the re-offered URLs ended up admitted exactly once
-    n_target = fr.read().filter(F.col("url").isin(
-        [f"http://h{i % 3}.test/{i}" for i in range(3000, 3010)])).count()
-    assert n_target == 10
+    probe-negative is genuinely new. Pin both properties for both kernels
+    and both residencies (the exact-mode cells of the same matrix are
+    test_bloom_autogrows_on_saturation). A cuckoo table does not drop more
+    as it fills (its fp bound is structural); it overflows instead, and the
+    grow must happen inside the overflowing wave: a filter short of a key
+    would re-admit that key as a duplicate row."""
+    for kind, res in [(k, r) for k in ("bloom", "cuckoo") for r in RESIDENCIES]:
+        cat = SnapshotCatalog(spark, str(tmp_path / f"{kind}-{res}"))
+        fr = Frontier(cat, num_partitions=4, bloom_min_frontier=0,
+                      bloom_max_fpp=0.02, exact_dedup=False,
+                      driver_blob_max_bytes=RESIDENCIES[res], **_tiny_filter(kind))
+        if kind == "bloom":
+            fr.init(_urls(spark, _range_urls(0, 3000)))
+            fr._ensure_blobs_current()
+            fr.schedule(_urls(spark, _range_urls(2990, 3010)), wave=0)  # mostly dropped
+            fr.flush_bloom()                                            # auto-grow fires
+            assert fr.bloom_spec.m_bits > 1 << 10
+            target = range(3000, 3010)
+        else:
+            fr.init(_urls(spark, _range_urls(0, 1000)))
+            # ~1,000 new keys per partition into 2,048 slots built for
+            # ~330: the wave's insert overflows and grows at once
+            fr.schedule(_urls(spark, _range_urls(1000, 4000)), wave=0)
+            assert fr.cuckoo_spec.n_buckets > 256
+            target = range(1000, 4000)
+        fr.schedule(_urls(spark, _range_urls(target[0] - 500, target[-1] + 101)), wave=1)  # re-offer + new
+        urls = [r["url"] for r in fr.read().select("url").collect()]
+        total, distinct = len(urls), len(set(urls))
+        assert total == distinct                 # no duplicate rows, ever
+        # and the re-offered URLs ended up admitted exactly once
+        n_target = len(set(urls) & {f"http://h{i % 3}.test/{i}" for i in target})
+        if kind == "bloom":
+            assert n_target == len(target)
+        else:
+            # cuckoo trust loss stays within its structural fp bound
+            assert len(target) - n_target <= len(target) * 2 * 4 / 256
 
 
 def test_trust_filter_saturation_recovers_mid_crawl(spark, tmp_path):
@@ -1229,22 +1293,24 @@ def test_trust_filter_saturation_recovers_mid_crawl(spark, tmp_path):
     runs — the auto-grow must fire from the zero-new wave itself, not
     only at crawl end, or every URL discovered for the rest of the crawl
     is silently dropped. After one all-dropped wave the NEXT offer of the
-    same URLs must be admitted through the grown filter."""
+    same URLs must be admitted through the grown filter — whether the
+    blobs are driver-held or table-resident."""
     from kermit_spark.bloom import BloomSpec
 
-    cat = SnapshotCatalog(spark, str(tmp_path / "cat"))
-    fr = Frontier(cat, num_partitions=4, bloom_min_frontier=0,
-                  bloom_spec=BloomSpec(m_bits=1 << 10, k_hashes=7),
-                  bloom_max_fpp=0.02, exact_dedup=False)
-    fr.init(_urls(spark, _range_urls(0, 12000)))  # fill 1.0: every bit set
-    fr._ensure_blobs_current()
-    m0 = fr.bloom_spec.m_bits
-    # saturated: every genuinely-new candidate probes positive -> 0 new
-    n1 = fr.schedule(_urls(spark, _range_urls(12000, 12200)), wave=1)
-    assert n1 == 0
-    # the zero-new wave itself must have triggered the saturation check
-    assert fr.bloom_spec.m_bits > m0
-    # next offer of the SAME URLs goes through the grown filter
-    n2 = fr.schedule(_urls(spark, _range_urls(12000, 12200)), wave=2)
-    assert n2 == 200
-    assert fr.read().count() == 12200
+    for res, cap in RESIDENCIES.items():
+        cat = SnapshotCatalog(spark, str(tmp_path / res))
+        fr = Frontier(cat, num_partitions=4, bloom_min_frontier=0,
+                      bloom_spec=BloomSpec(m_bits=1 << 10, k_hashes=7),
+                      bloom_max_fpp=0.02, exact_dedup=False, driver_blob_max_bytes=cap)
+        fr.init(_urls(spark, _range_urls(0, 12000)))  # fill 1.0: every bit set
+        fr._ensure_blobs_current()
+        m0 = fr.bloom_spec.m_bits
+        # saturated: every genuinely-new candidate probes positive -> 0 new
+        n1 = fr.schedule(_urls(spark, _range_urls(12000, 12200)), wave=1)
+        assert n1 == 0
+        # the zero-new wave itself must have triggered the saturation check
+        assert fr.bloom_spec.m_bits > m0
+        # next offer of the SAME URLs goes through the grown filter
+        n2 = fr.schedule(_urls(spark, _range_urls(12000, 12200)), wave=2)
+        assert n2 == 200
+        assert fr.read().count() == 12200
