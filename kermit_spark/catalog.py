@@ -22,7 +22,9 @@ rewrites):
   * reads list the per-partition current paths from the manifest (an Iceberg
     manifest-list analog) and hand Spark an explicit file set with
     ``basePath`` so the partition column is recovered — a scan of snapshot S
-    never sees in-flight writes (snapshot isolation).
+    never sees in-flight writes (snapshot isolation). The schema comes from
+    the table metadata (the ``_schema`` stamp), never from a data-file
+    footer, so planning a read runs no Spark job.
 
 At 100 TB this module is replaced by ``spark.read.format("iceberg")`` +
 ``MERGE INTO``; every caller goes through the three functions below so that
@@ -191,13 +193,14 @@ class SnapshotCatalog:
         return None if meta is None else meta.properties.get("_schema")
 
     def refresh_schema_stamp(self, table: str) -> None:
-        """Re-stamp ``_schema`` from the table's current files — call after
-        a schema-evolution backfill so future sessions see the migrated
-        schema and skip re-probing."""
+        """Re-stamp ``_schema`` from the table's current files (a
+        ``mergeSchema`` read: the stamp being replaced is the one thing this
+        must not trust) — call after a schema-evolution backfill so future
+        sessions read the migrated schema and skip re-probing."""
         meta = self._load_meta(table)
         if meta is None:
             raise FileNotFoundError(f"table {table!r} does not exist")
-        meta.properties["_schema"] = _schema_ddl(self.read(table))
+        meta.properties["_schema"] = _schema_ddl(self.read(table, merge_schema=True))
         self._store_meta(table, meta)
 
     # -- read --------------------------------------------------------------
@@ -205,15 +208,17 @@ class SnapshotCatalog:
     def read(
         self, table: str, snapshot: int | None = None, merge_schema: bool = False
     ) -> DataFrame:
-        """Read a snapshot (default: current). Returns an empty-schema error if
+        """Read a snapshot (default: current). Raises FileNotFoundError if
         the table does not exist — callers create tables explicitly.
 
-        ``merge_schema=True`` unions the schema across ALL files (parquet
-        ``mergeSchema``) instead of inferring from one footer — required when
-        a table may hold mixed-schema files from before a column existed
-        (rows from legacy files surface the new column as NULL). Costs a
-        footer read per file, so it is opt-in for migration probes, not the
-        steady-state path."""
+        The reader schema is the ``_schema`` stamp in the table metadata
+        (written at ``create``), as Iceberg takes it from table metadata:
+        no data-file footer is read, so a read launches no Spark job.
+        ``merge_schema=True`` instead unions the schema across ALL files
+        (parquet ``mergeSchema``) — the migration probe for a table that may
+        hold mixed-schema files from before a column existed (rows from
+        legacy files surface the new column as NULL); it costs a footer
+        read per file."""
         meta = self._load_meta(table)
         if meta is None:
             raise FileNotFoundError(f"table {table!r} does not exist in {self.root}")
@@ -229,15 +234,24 @@ class SnapshotCatalog:
         ]
         if not paths:
             # empty table: replay schema from the schema stamp written at create
-            schema_json = meta.properties.get("_schema")
-            return self.spark.createDataFrame([], schema_json)
-        reader = self.spark.read.option("basePath", base)
+            return self.spark.createDataFrame([], meta.properties["_schema"])
         if merge_schema:
-            reader = reader.option("mergeSchema", "true")
-        df = reader.parquet(*paths)
+            return (
+                self.spark.read.option("basePath", base)
+                .option("mergeSchema", "true")
+                .parquet(*paths)
+            )
         # the v{N} dir is not key=value so it is invisible to partition
         # discovery; only PARTITION_COL comes back as a partition column.
-        return df
+        return self._scan(base, meta, paths)
+
+    def _scan(self, base: str, meta: TableMeta, paths: list[str]) -> DataFrame:
+        """Parquet scan of ``paths`` under the table's stamped schema."""
+        return (
+            self.spark.read.schema(meta.properties["_schema"])
+            .option("basePath", base)
+            .parquet(*paths)
+        )
 
     # -- write / commit ----------------------------------------------------
 
@@ -438,11 +452,11 @@ class SnapshotCatalog:
         cols = compare_cols
         pieces: list[DataFrame] = []
         if append_paths:
-            df = self.spark.read.option("basePath", base).parquet(*append_paths)
+            df = self._scan(base, meta, append_paths)
             pieces.append(df.select(*cols) if cols else df)
         if rewritten_new:
-            new_rows = self.spark.read.option("basePath", base).parquet(*rewritten_new)
-            old_rows = self.spark.read.option("basePath", base).parquet(*rewritten_old)
+            new_rows = self._scan(base, meta, rewritten_new)
+            old_rows = self._scan(base, meta, rewritten_old)
             if cols:
                 new_rows = new_rows.select(*cols)
                 old_rows = old_rows.select(*cols)

@@ -23,12 +23,19 @@ Scale notes:
     ``robots_blocked`` so a host's disallowed URLs cost budget at most once.
   * all wave mutations land in ONE frontier snapshot commit (see
     Frontier.commit_wave) — commit cost is the per-wave fixed cost.
-  * per-wave job budget (the driver-latency floor at small wave sizes):
-    1 dequeue+per-host count, 1 documents write (status counts ride on it
-    via Observation), 1 candidate-partition count, 1 frontier commit,
-    1 bloom commit — robots probes/fetches only when unseen hosts appear,
-    verification counts only when configured, lineage buffered in the
-    driver. Everything else is lazy.
+  * per-wave job budget (the latency floor at small wave sizes),
+    measured on a steady wave of the crawl_waves benchmark (10 jobs):
+    dequeue — the per-host count collect that materializes the batch, plus
+    the Crawl-delay caps' broadcast build when any host declares a delay;
+    documents write — 3 broadcast builds (robots rules, fetch batch,
+    dead-link anti-join) and the write job that fetches and parses (status
+    counts ride on it via Observation); frontier commit — 3 broadcast
+    builds and ONE merge write (n_new rides on it). Catalog reads run no
+    job (schema from table metadata), the Crawl-delay flag rides the
+    robots write, lineage is buffered in memory and written without
+    Spark. Robots probes/fetches run only when unseen hosts appear,
+    verification counts only when configured; the seen-filter jobs join
+    only above the Bloom threshold.
   * the only driver-side collect of unbounded data is the distinct-host
     list of the dequeued batch (bounded by the politeness budget).
 
@@ -497,9 +504,9 @@ class Crawler:
         robots table: a table created before the ``server_error`` outage
         column existed must be backfilled BEFORE new-schema rows are
         fast-appended next to its legacy files — the plain catalog read
-        infers schema without mergeSchema, so a mixed-schema table can
-        silently drop the column depending on file order, losing the 5xx
-        outage markers a resumed crawl needs to re-probe all-blocked hosts.
+        takes the legacy schema stamp, so the column would silently vanish,
+        losing the 5xx outage markers a resumed crawl needs to re-probe
+        all-blocked hosts.
 
         Detection is manifest-only (the creation-time schema stamp), so
         current-schema tables pay ZERO file IO here. Legacy tables pay one
@@ -679,8 +686,18 @@ class Crawler:
                 wave=wave,
                 server_error_disallow=self.config.robots_5xx_disallow,
             )
-            if not self.catalog.exists(ROBOTS_TABLE):
-                self.catalog.create(ROBOTS_TABLE, new_rules, self.config.num_partitions)
+            # whether any written row declares a Crawl-delay rides the robots
+            # write as an Observation, so the dequeue needs no probe job
+            delay_obs = Observation()
+
+            def observed(df: DataFrame) -> DataFrame:
+                return df.observe(
+                    delay_obs, F.max(F.col("crawl_delay").isNotNull()).alias("any_delay")
+                )
+
+            created = not self.catalog.exists(ROBOTS_TABLE)
+            if created:
+                self.catalog.create(ROBOTS_TABLE, observed(new_rules), self.config.num_partitions)
                 self._robots_schema_ok = True
             elif not stale_hosts:
                 # pure inserts (the probe above guarantees these hosts have
@@ -689,7 +706,7 @@ class Crawler:
                 # partition — O(all hosts stored there) per robots-fetch
                 # wave, a full-table rewrite at 10^8 hosts.
                 self._normalize_robots_schema()
-                self.catalog.merge_write(ROBOTS_TABLE, new_rules, replace_parts=())
+                self.catalog.merge_write(ROBOTS_TABLE, observed(new_rules), replace_parts=())
             else:
                 # expiry refresh: stale hosts' rows must be REPLACED (host
                 # is unique in the table). Copy-on-write merge of just their
@@ -710,7 +727,7 @@ class Crawler:
                 )
                 self.catalog.merge_write(
                     ROBOTS_TABLE,
-                    survivors.unionByName(new_rules),
+                    observed(survivors.unionByName(new_rules)),
                     replace_parts=stale_parts,
                 )
             if max_age > 0:
@@ -775,8 +792,14 @@ class Crawler:
                     requeue.unpersist()
             if len(self._robots_hosts) < self._ROBOTS_CACHE_MAX:
                 self._robots_hosts.update({h: wave for _, h in missing})
-            # newly fetched hosts may declare Crawl-delay — re-probe lazily
-            self._has_crawl_delays = None
+            any_delay = bool(delay_obs.get["any_delay"])
+            if any_delay or created:
+                # a delay was written, or the write saw the whole table
+                self._has_crawl_delays = any_delay
+            elif stale_hosts and self._has_crawl_delays:
+                # the replaced rows may have been the only delayed ones:
+                # unknown, so the next dequeue probes
+                self._has_crawl_delays = None
             if self._delay_caps is not None:
                 self._delay_caps.unpersist()
                 self._delay_caps = None
@@ -1177,7 +1200,10 @@ class Crawler:
             aging_rate=cfg.priority_aging_rate,
             current_wave=wave,
         ).persist()
-        # one action materializes the batch AND yields host list + count
+        # one action materializes the batch AND yields host list + count.
+        # host_budgets (e.g. a declared Crawl-delay) join as a broadcast
+        # whose build is one more job; a shuffle join on host would save it
+        # but collapse the level-1 window's (host, sub_salt) hot-host spread.
         per_host = selected.groupBy("p", "host").count().collect()
         n_selected = sum(r["count"] for r in per_host)
         if n_selected == 0 and cfg.delay is not None:
@@ -1508,13 +1534,32 @@ class Crawler:
             self.config.on_event(event, payload)
 
     def flush_lineage(self) -> None:
+        """Append the buffered lineage rows as ONE parquet file, written by
+        pyarrow in this process — a few hundred rows need no Spark job. The
+        file lands under a hidden name (Spark readers skip ``.``-prefixed
+        files) and is renamed into place, so ``lineage()`` never sees a
+        partial file."""
         if not self._lineage_buffer:
             return
-        df = self.spark.createDataFrame(
-            self._lineage_buffer,
-            "wave int, phase string, stage string, part int, n long, wall_s double",
+        import uuid
+
+        import pyarrow as pa
+        import pyarrow.parquet as pq
+
+        schema = pa.schema([
+            ("wave", pa.int32()), ("phase", pa.string()), ("stage", pa.string()),
+            ("part", pa.int32()), ("n", pa.int64()), ("wall_s", pa.float64()),
+        ])
+        cols = zip(*self._lineage_buffer)
+        table = pa.Table.from_arrays(
+            [pa.array(c, type=f.type) for c, f in zip(cols, schema)], schema=schema
         )
-        df.coalesce(1).write.mode("append").parquet(self._lineage_path())
+        out = self._lineage_path()
+        os.makedirs(out, exist_ok=True)
+        name = f"part-{uuid.uuid4().hex}.parquet"
+        tmp = os.path.join(out, f".{name}.tmp")
+        pq.write_table(table, tmp)
+        os.replace(tmp, os.path.join(out, name))
         self._lineage_buffer = []
 
     def _lineage_path(self) -> str:

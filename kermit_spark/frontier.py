@@ -102,24 +102,23 @@ def as_frontier_rows(
 ) -> DataFrame:
     """Normalize a (url[, host, priority, depth, referer]) DataFrame into full
     frontier schema. Missing columns get defaults (seed rows: depth 0)."""
-    df = urls
-    if "host" not in df.columns:
-        df = df.withColumn("host", host_of(F.col("url")))
-    for col, default in (
-        ("priority", F.lit(0.0)),
-        ("depth", F.lit(0)),
-        ("referer", F.lit(None).cast("string")),
-        ("tries", F.lit(0)),
+    defaults = {
+        "host": host_of(F.col("url")),
+        "priority": F.lit(0.0),
+        "depth": F.lit(0),
+        "referer": F.lit(None).cast("string"),
+        "tries": F.lit(0),
         # HTTP validators, populated when the URL is first VISITED (from the
         # response's ETag / Last-Modified headers) and carried through
         # recrawl so a re-fetch can be conditional (If-None-Match /
         # If-Modified-Since → 304). Null for never-fetched rows; nullable
         # strings are ~free in parquet at frontier scale.
-        ("etag", F.lit(None).cast("string")),
-        ("last_modified", F.lit(None).cast("string")),
-    ):
-        if col not in df.columns:
-            df = df.withColumn(col, default)
+        "etag": F.lit(None).cast("string"),
+        "last_modified": F.lit(None).cast("string"),
+    }
+    # one projection for every missing column: each withColumn re-analyses
+    # the whole plan again
+    df = urls.withColumns({c: e for c, e in defaults.items() if c not in urls.columns})
     return df.select(
         partition_of(F.col("host"), num_partitions).alias("p"),
         F.xxhash64(F.col("url")).alias("url_hash"),
@@ -736,39 +735,30 @@ class Frontier:
         pieces = []
         if replace_parts:
             current = self.read().filter(F.col("p").isin(sorted(replace_parts)))
-            merged = (
-                current.join(updates, on=["p", "url_hash", "url"], how="left")
-                .withColumn(
-                    "tries",
-                    F.when(
-                        F.col("new_status").isin(ERROR, THROTTLED_RETRY),
-                        F.col("tries") + 1,
-                    ).otherwise(F.col("tries")),
-                )
-                .withColumn(
-                    "status",
-                    F.when(
-                        F.col("new_status") == THROTTLED_RETRY,
-                        F.when(
-                            F.col("tries") < F.lit(throttle_max_tries),
-                            F.lit(SCHEDULED),
-                        ).otherwise(F.lit(ERROR)),
-                    ).otherwise(F.coalesce(F.col("new_status"), F.col("status"))),
-                )
-                .drop("new_status")
-            )
+            # the status MERGE as ONE projection over FRONTIER_COLS (a chain
+            # of withColumn calls re-analyses the deep wave plan each time)
+            new_status = F.col("new_status")
+            tries = F.when(
+                new_status.isin(ERROR, THROTTLED_RETRY), F.col("tries") + 1
+            ).otherwise(F.col("tries"))
+            merged_cols = {
+                "tries": tries,
+                "status": F.when(
+                    new_status == THROTTLED_RETRY,
+                    F.when(tries < F.lit(throttle_max_tries), F.lit(SCHEDULED)).otherwise(
+                        F.lit(ERROR)
+                    ),
+                ).otherwise(F.coalesce(new_status, F.col("status"))),
+            }
             if has_validators:
-                merged = (
-                    merged.withColumn(
-                        "etag", F.coalesce(F.col("new_etag"), F.col("etag"))
-                    )
-                    .withColumn(
-                        "last_modified",
-                        F.coalesce(F.col("new_last_modified"), F.col("last_modified")),
-                    )
-                    .drop("new_etag", "new_last_modified")
+                merged_cols["etag"] = F.coalesce(F.col("new_etag"), F.col("etag"))
+                merged_cols["last_modified"] = F.coalesce(
+                    F.col("new_last_modified"), F.col("last_modified")
                 )
-            pieces.append(merged.select(*FRONTIER_COLS))
+            merged = current.join(updates, on=["p", "url_hash", "url"], how="left")
+            pieces.append(
+                merged.select(*(merged_cols.get(c, F.col(c)).alias(c) for c in FRONTIER_COLS))
+            )
         obs = None
         if new_rows is not None:
             # n_new rides on the write job via an Observation — no pre-count
@@ -779,9 +769,8 @@ class Frontier:
         if not pieces:
             self._drop_pending_cache()
             return 0
-        out = pieces[0]
-        for piece in pieces[1:]:
-            out = out.unionByName(piece)
+        # both pieces are projected onto FRONTIER_COLS: a positional union
+        out = pieces[0] if len(pieces) == 1 else pieces[0].union(pieces[1])
 
         observed = {}
 

@@ -100,7 +100,10 @@ _TAG_RE = re.compile(rf"<{_IN_TAG}+>")
 
 def _first_group(m: re.Match, *idxs: int) -> str | None:
     # one C-level group() call for all indices (NOT `a or b or c` — an
-    # EMPTY string is a present, valid attribute value: href="")
+    # EMPTY string is a present, valid attribute value: href=""). group()
+    # of ONE index returns the value itself, not a 1-tuple.
+    if len(idxs) == 1:
+        return m.group(idxs[0])
     for v in m.group(*idxs):
         if v is not None:
             return v

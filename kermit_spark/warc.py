@@ -21,7 +21,8 @@ containing literal "WARC/1.0" text or arbitrary bytes round-trip
 bit-exactly and every record's (offset, length) is a ranged-read
 coordinate. Each reader keeps only its own WARC-Type: the response
 readers skip the warcinfo, request, metadata and revisit records a
-crawler's archive interleaves. Response bodies surface as ``binary``
+crawler's archive interleaves, and ``response`` records whose payload is
+not HTTP (Heritrix ``dns:`` lookups). Response bodies surface as ``binary``
 columns; decoding is the consumer's choice (``documents_from_warc``
 decodes by declared charset). WARC headers are UTF-8 on both sides.
 
@@ -286,6 +287,17 @@ def _iter_typed(data: bytes, warc_type: str):
             yield url, int(headers.get("warc-kermit-wave", 0)), payload, off, ln
 
 
+def _iter_responses(data: bytes):
+    """The HTTP response records of one archive as (url, wave, status,
+    content_type, body bytes, offset, length). A ``response`` record whose
+    payload is not an HTTP message (Heritrix writes its ``dns:`` lookups as
+    ``response`` records with a ``text/dns`` payload) is skipped like a
+    record of a foreign type."""
+    for url, wave, raw, off, ln in _iter_typed(data, "response"):
+        if raw.startswith(b"HTTP/"):
+            yield (url, wave, *_parse_http_payload_bytes(raw), off, ln)
+
+
 def _parse_http_payload_bytes(raw: bytes) -> tuple[int, str | None, bytes]:
     """One response record's raw payload → (status, content_type,
     body_bytes)."""
@@ -328,8 +340,8 @@ def read_warc(spark: SparkSession, path: str) -> DataFrame:
     round-trips bit-exactly."""
 
     def rows(_, data):
-        for url, wave, raw, _, _ in _iter_typed(data, "response"):
-            yield (url, wave, *_parse_http_payload_bytes(raw))
+        for rec in _iter_responses(data):
+            yield rec[:5]
 
     return _map_archives(spark, path, rows, WARC_READ_SCHEMA)
 
@@ -377,8 +389,7 @@ def build_cdx(spark: SparkSession, path: str) -> DataFrame:
     import hashlib
 
     def rows(fname, data):
-        for url, wave, raw, off, ln in _iter_typed(data, "response"):
-            status, ctype, body = _parse_http_payload_bytes(raw)
+        for url, wave, status, ctype, body, off, ln in _iter_responses(data):
             yield (
                 url, wave, status, ctype, hashlib.md5(body).hexdigest(),
                 fname, off, ln,
@@ -472,11 +483,9 @@ def read_warc_at(spark: SparkSession, cdx: DataFrame) -> DataFrame:
                         wanted = set(want)
                         f.seek(int(off))
                         blob = f.read(int(ln))
-                        for url, wave, raw, _, _ in _iter_typed(blob, "response"):
-                            if url in wanted:
-                                rows.append(
-                                    (url, wave, *_parse_http_payload_bytes(raw))
-                                )
+                        for rec in _iter_responses(blob):
+                            if rec[0] in wanted:
+                                rows.append(rec[:5])
             if rows:
                 yield pd.DataFrame(rows)
 
@@ -608,8 +617,7 @@ def documents_from_warc(
     from .parse import parse_documents
 
     def rows(_, data):
-        for url, wave, raw, _, _ in _iter_typed(data, "response"):
-            status, ctype, body = _parse_http_payload_bytes(raw)
+        for url, wave, status, ctype, body, _, _ in _iter_responses(data):
             yield url, wave, status, ctype, _decode_body(body, ctype)
 
     raw = _map_archives(

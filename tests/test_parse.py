@@ -83,6 +83,22 @@ def test_unquoted_and_single_quoted_discovery():
     assert [(s[0], s[2]) for s in spans] == [("link", "/one.html"), ("link", "/two.html")]
 
 
+def test_first_group_single_and_multi_index():
+    """_first_group returns the first present group; with ONE index it is
+    that group's whole value (group(i) is a str, not a tuple to iterate)."""
+    import re
+
+    from kermit_spark.parse import _first_group
+
+    m = re.match(r"(ab)|(cd)|(x*)", "cd")
+    assert _first_group(m, 1) is None
+    assert _first_group(m, 2) == "cd"
+    assert _first_group(m, 1, 2, 3) == "cd"
+    m = re.match(r"(ab)|(x*)", "ab")
+    assert _first_group(m, 1) == "ab"
+    assert _first_group(re.match(r"(ab)|(x*)", ""), 1, 2) == ""
+
+
 def test_discovery_pipeline_on_spark(spark):
     """X3 analog: parse → explode → clean → absolute URLs with depth+1."""
     from kermit_spark.parse import SPAN_TYPE, discover_links, extract_spans

@@ -978,6 +978,43 @@ def test_common_crawl_shaped_archive_reads_only_response_records(spark, tmp_path
     assert b_spans == [("text", "caf\u00e9", None, 0)]
 
 
+def test_heritrix_dns_response_records_are_skipped(spark, tmp_path):
+    """Heritrix archives its DNS lookups as WARC-Type: response records
+    with a ``dns:`` target URI and a text/dns payload, which is no HTTP
+    message. Every response reader skips them instead of failing the task
+    on the missing HTTP status line."""
+    import os
+
+    from kermit_spark.warc import _iter_responses, build_cdx, documents_from_warc, read_warc_at
+
+    dns = _cc_record(
+        1, "response", b"20240220100000\nher.test.\t300\tIN\tA\t10.0.0.7\n",
+        "dns:her.test", "text/dns",
+    )
+    body = b"<html><body>ok</body></html>"
+    page = _cc_record(
+        2, "response",
+        b"HTTP/1.1 200 OK\r\nContent-Type: text/html\r\n\r\n" + body,
+        "http://her.test/", "application/http; msgtype=response",
+    )
+    data = _cc_record(0, "warcinfo", b"software: Heritrix/3.4\r\n") + dns + page
+    assert [r[:5] for r in _iter_responses(data)] == [
+        ("http://her.test/", 0, 200, "text/html", body)
+    ]
+
+    d = str(tmp_path / "heritrix")
+    os.makedirs(d)
+    with open(os.path.join(d, "heritrix-00000.warc.gz"), "wb") as f:
+        f.write(b"".join(gzip.compress(r) for r in (dns, page)))
+    assert [(r["url"], r["body"]) for r in read_warc(spark, d).collect()] == [
+        ("http://her.test/", body)
+    ]
+    cdx = build_cdx(spark, d)
+    assert [r["url"] for r in read_warc_at(spark, cdx).collect()] == ["http://her.test/"]
+    docs = documents_from_warc(spark, d, num_partitions=2).select("url", "status")
+    assert [tuple(r) for r in docs.collect()] == [("http://her.test/", 200)]
+
+
 def test_wet_and_wat_read_gzipped_part_files(spark, tmp_path):
     """read_wet / read_wat walk gzip archives too: a write_wet (write_wat)
     part file gzip-compressed behind a warcinfo member, the layout of a
