@@ -71,7 +71,7 @@ from .frontier import (
     dequeue,
     partition_of,
 )
-from .functions.urls import clean_urls, host_of
+from .functions.urls import clean_links, host_of
 from .parse import discover_links, parse_documents
 from .robots import robots_gate, robots_rules_from_fetch, sitemap_candidates_from_fetch
 
@@ -844,36 +844,30 @@ class Crawler:
             if by_kind.get(True, 0):
                 # one level of sitemapindex expansion — spec-complete (an
                 # index must not list other index files, sitemaps.org).
-                child_fetch = (
-                    raw.filter(F.col("is_index"))
-                    .select(
-                        clean_urls(F.col("sitemap_url"), F.col("loc")).alias("url")
-                    )
-                    .filter(F.col("url").isNotNull())
-                    .select(
-                        partition_of(
-                            host_of(F.col("url")), self.config.num_partitions
-                        ).alias("p"),
-                        F.xxhash64(F.col("url")).alias("url_hash"),
-                        "url",
-                        host_of(F.col("url")).alias("host"),
-                        F.lit(0).alias("depth"),
-                        F.lit(None).cast("string").alias("referer"),
-                        F.lit(-1).alias("wave"),
-                        F.lit(0).alias("rank"),
-                    )
+                child_fetch = clean_links(
+                    raw.filter(F.col("is_index")), F.col("sitemap_url"), F.col("loc")
+                ).select(
+                    partition_of(host_of(F.col("url")), self.config.num_partitions).alias("p"),
+                    F.xxhash64(F.col("url")).alias("url_hash"),
+                    "url",
+                    host_of(F.col("url")).alias("host"),
+                    F.lit(0).alias("depth"),
+                    F.lit(None).cast("string").alias("referer"),
+                    F.lit(-1).alias("wave"),
+                    F.lit(0).alias("rank"),
                 )
                 raw1 = sitemap_candidates_from_fetch(self.fetcher.fetch(child_fetch))
                 pages = pages.unionByName(
                     raw1.filter(~F.col("is_index"))  # double nesting: spec-invalid, dropped
                 )
             if by_kind.get(False, 0) or by_kind.get(True, 0):
-                sitemap_cands = pages.select(
-                    clean_urls(F.col("sitemap_url"), F.col("loc")).alias("url"),
+                sitemap_cands = clean_links(
+                    pages,
+                    F.col("sitemap_url"),
+                    F.col("loc"),
                     F.col("sitemap_url").alias("referer"),
                     F.lit(0).alias("depth"),
-                    F.lit(0.0).alias("priority"),
-                ).filter(F.col("url").isNotNull())
+                ).withColumn("priority", F.lit(0.0))
                 # materialize the (small) candidate set and truncate lineage
                 # so the frontier commit sees a plain scan instead of the
                 # fetch chain; partition-distributed — no driver collect.
@@ -1355,14 +1349,15 @@ class Crawler:
             loc = F.element_at(F.col("headers"), "location")
             redirect_followed = F.col("status").between(300, 399) & loc.isNotNull()
             redirects = (
-                docs.filter(redirect_followed)
-                .select(
-                    clean_urls(F.col("url"), loc).alias("url"),
+                clean_links(
+                    docs.filter(redirect_followed),
+                    F.col("url"),
+                    loc,
                     F.col("url").alias("referer"),
-                    F.col("depth").alias("depth"),
-                    F.lit(0.0).alias("priority"),
+                    "depth",
                 )
-                .filter(F.col("url").isNotNull() & cfg.admit_expr(F.col("url")))
+                .withColumn("priority", F.lit(0.0))
+                .filter(cfg.admit_expr(F.col("url")))
             )
             candidates = candidates.unionByName(redirects)
 

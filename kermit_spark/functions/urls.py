@@ -17,15 +17,17 @@ regexp_extract) so the hot frontier path never leaves codegen.
 
 from __future__ import annotations
 
+import functools
 import posixpath
 import re
 from urllib.parse import quote, unquote, urljoin, urlsplit, urlunsplit
 
 import pandas as pd
-from pyspark.sql import Column
+import pyarrow as pa
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from ..udf import session_safe_pandas_udf
-from pyspark.sql.types import StringType
+from pyspark.sql.types import StringType, StructField, StructType
 
 # ---------------------------------------------------------------------------
 # JVM-side (codegen) helpers — the hot path at 10^10-frontier scale
@@ -382,6 +384,43 @@ def to_local_path_series(root: pd.Series, url: pd.Series) -> pd.Series:
     return pd.Series(
         [_to_local_path_one(r, u) for r, u in zip(root, url)], dtype="object"
     )
+
+
+def _clean_link_batches(batches, rest: list[str]):
+    """mapInArrow body of clean_links: clean (_base, _href), keep the rows
+    whose cleaned URL is non-null, pass ``rest`` through untouched."""
+    for batch in batches:
+        urls = [
+            _clean_one(b, h)
+            for b, h in zip(
+                batch.column("_base").to_pylist(), batch.column("_href").to_pylist()
+            )
+        ]
+        keep = pa.array([u is not None for u in urls])
+        yield pa.RecordBatch.from_arrays(
+            [pa.array([u for u in urls if u is not None], pa.string())]
+            + [batch.column(n).filter(keep) for n in rest],
+            names=["url", *rest],
+        )
+
+
+def clean_links(df: DataFrame, base: Column, href: Column, *keep: Column | str) -> DataFrame:
+    """uri.clean ``href`` against ``base`` and drop the rows that clean to
+    null, in ONE Arrow pass: a (url, *keep) frame.
+
+    A ``clean_urls`` projection followed by ``filter(url IS NOT NULL)``
+    evaluates the UDF twice: the optimizer pushes the filter below the
+    projection and clones the UDF into a second ``ArrowEvalPython`` node
+    (measured on a steady crawl_waves wave: that stage took 1.14 s wall,
+    0.64 s with one evaluation). A ``mapInArrow`` is a barrier no rule
+    pushes a predicate through or clones, and the ``keep`` columns ride
+    the same batches through unchanged."""
+    flat = df.select(base.alias("_base"), href.alias("_href"), *keep)
+    rest = flat.schema.fieldNames()[2:]
+    schema = StructType(
+        [StructField("url", StringType())] + [flat.schema[n] for n in rest]
+    )
+    return flat.mapInArrow(functools.partial(_clean_link_batches, rest=rest), schema)
 
 
 # ---------------------------------------------------------------------------

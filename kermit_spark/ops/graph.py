@@ -496,8 +496,8 @@ def anchor_text_stats(
     ``documents``: rows with (url, spans) — link spans carry the anchor
     text in ``text`` and the href in ``media_ref`` (parse.py contract).
     With ``clean=True`` hrefs are canonicalized against the page URL via
-    the engine's clean_urls (same Arrow UDF the discovery path uses);
-    pass False when hrefs are already canonical.
+    the engine's clean_links (the same one-pass Arrow clean the discovery
+    path uses); pass False when hrefs are already canonical.
 
     Output: (url, n_inlinks, n_docs, top_anchor, top_anchor_n) where
     top_anchor is the most frequent non-null anchor text, ties broken by
@@ -511,17 +511,15 @@ def anchor_text_stats(
     links = documents.select(
         F.col("url").alias("_base"), F.explode("spans").alias("s")
     ).filter(F.col("s.kind") == "link")
+    keep = (F.col("_base").alias("src"), F.col("s.text").alias("anchor"))
     if clean:
-        from ..functions.urls import clean_urls
+        from ..functions.urls import clean_links
 
-        target = clean_urls(F.col("_base"), F.col("s.media_ref"))
+        links = clean_links(links, F.col("_base"), F.col("s.media_ref"), *keep)
     else:
-        target = F.col("s.media_ref")
-    links = links.select(
-        target.alias("url"),
-        F.col("_base").alias("src"),
-        F.col("s.text").alias("anchor"),
-    ).filter(F.col("url").isNotNull())
+        links = links.select(F.col("s.media_ref").alias("url"), *keep).filter(
+            F.col("url").isNotNull()
+        )
     per_anchor = links.groupBy("url", "anchor").agg(
         F.count("*").alias("_n"),
     )

@@ -40,7 +40,7 @@ from pyspark.sql.types import (
     StructType,
 )
 
-from .functions.urls import clean_urls
+from .functions.urls import clean_links, clean_urls
 
 SPAN_TYPE = ArrayType(
     StructType(
@@ -371,7 +371,8 @@ def discover_links(
     """X3: spans → candidate URLs for the next wave.
 
     explode (ordered) → keep link/resource/media kinds → uri.clean against
-    the base URL → drop nulls → (url, referer, depth+1, priority by kind).
+    the base URL and drop nulls in one Arrow pass (``clean_links``) →
+    (url, referer, depth+1, priority).
     Dedup against the frontier happens in Frontier.schedule (Q1).
 
     ``honor_base`` / ``honor_nofollow`` consume the html_meta columns from
@@ -403,28 +404,25 @@ def discover_links(
     )
     if max_outlinks is not None:
         link_spans = F.slice(link_spans, 1, int(max_outlinks))
-    exploded = documents.select(
-        base_url.alias("base_url"),
-        F.col("url").alias("page_url"),
-        F.col("depth"),
-        F.posexplode_outer(link_spans).alias("pos", "span"),
-    )
-    cleaned = exploded.select(
-        clean_urls(F.col("base_url"), F.col("span.media_ref")).alias("url"),
-        F.col("page_url").alias("referer"),
+    links = documents.select(
+        base_url.alias("base"),
+        F.col("url").alias("referer"),
         (F.col("depth") + 1).alias("depth"),
-        # resources/media slightly out-prioritized by pages? reference treats
-        # both identically (schedule with same meta); keep priority flat.
-        F.lit(0.0).alias("priority"),
-    )
+        F.posexplode_outer(link_spans).alias("pos", "span"),
+    ).select("base", F.col("span.media_ref").alias("href"), "referer", "depth")
     if honor_base and "refresh_url" in documents.columns:
         # meta-refresh target: resolved like a link (against base), one row
-        # per declaring page — rides the same dedup/admission path
-        refresh = documents.filter(F.col("refresh_url").isNotNull()).select(
-            clean_urls(base_url, F.col("refresh_url")).alias("url"),
-            F.col("url").alias("referer"),
-            (F.col("depth") + 1).alias("depth"),
-            F.lit(0.0).alias("priority"),
+        # per declaring page — rides the same clean/dedup/admission path
+        links = links.unionByName(
+            documents.filter(F.col("refresh_url").isNotNull()).select(
+                base_url.alias("base"),
+                F.col("refresh_url").alias("href"),
+                F.col("url").alias("referer"),
+                (F.col("depth") + 1).alias("depth"),
+            )
         )
-        cleaned = cleaned.unionByName(refresh)
-    return cleaned.filter(F.col("url").isNotNull())
+    # resources/media slightly out-prioritized by pages? reference treats
+    # both identically (schedule with same meta); keep priority flat.
+    return clean_links(links, F.col("base"), F.col("href"), "referer", "depth").withColumn(
+        "priority", F.lit(0.0)
+    )

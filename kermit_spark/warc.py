@@ -717,20 +717,44 @@ def write_wat(
     )
 
 
+def _wat_row(doc: dict, url: str, wave: int) -> tuple | None:
+    """One WAT JSON payload → (url, wave, status, content_type, outlinks),
+    or None for a Common Crawl envelope that describes no HTTP response.
+
+    Common Crawl nests the facts in ``{"Envelope": {"WARC-Header-Metadata":
+    {...}, "Payload-Metadata": {"HTTP-Response-Metadata": {...}}}}`` and
+    also writes envelopes for its request, metadata and warcinfo records,
+    which carry no ``HTTP-Response-Metadata``. Outlinks are the page's
+    ``HTML-Metadata.Links`` URLs in document order."""
+    env = doc.get("Envelope")
+    if env is None:
+        return doc["url"], wave, doc["status"], doc["content_type"], doc["outlinks"]
+    http = env.get("Payload-Metadata", {}).get("HTTP-Response-Metadata")
+    if http is None:
+        return None
+    headers = {k.lower(): v for k, v in http.get("Headers", {}).items()}
+    links = http.get("HTML-Metadata", {}).get("Links", [])
+    return (
+        env.get("WARC-Header-Metadata", {}).get("WARC-Target-URI", url),
+        wave,
+        int(http["Response-Message"]["Status"]),
+        headers.get("content-type"),
+        [link["url"] for link in links if "url" in link],
+    )
+
+
 def read_wat(spark: SparkSession, path: str) -> DataFrame:
     """Parse .wat / .wat.gz files back to (url, wave, status,
     content_type, outlinks), one metadata record per row and one task per
     file — JSON payloads length-framed like every other record family
-    here."""
+    here. Common Crawl WAT envelopes map through ``_wat_row``."""
     import json
 
     def rows(_, data):
-        for _, wave, raw, _, _ in _iter_typed(data, "metadata"):
-            doc = json.loads(raw)
-            yield (
-                doc["url"], wave, doc["status"], doc["content_type"],
-                doc["outlinks"],
-            )
+        for url, wave, raw, _, _ in _iter_typed(data, "metadata"):
+            row = _wat_row(json.loads(raw), url, wave)
+            if row is not None:
+                yield row
 
     return _map_archives(spark, path, rows, WAT_READ_SCHEMA)
 

@@ -369,6 +369,32 @@ def test_discover_links_outlink_cap_adds_no_shuffle(spark):
     assert "Window" not in capped
 
 
+def test_discover_links_cleans_in_one_python_pass(spark):
+    """uri.clean and the null drop are ONE Python evaluation: a clean
+    projection under ``filter(url IS NOT NULL)`` lets the optimizer push
+    the filter below it and clone the UDF into a second ArrowEvalPython
+    node, which doubles the Python work of every discovered link."""
+    import re
+
+    from kermit_spark.parse import discover_links
+
+    docs = spark.createDataFrame(
+        [("http://a.test/p", 0,
+          [("link", "x", "/x.html", 0), ("link", "m", "mailto:a@b", 1),
+           ("media", None, None, 2)])],
+        "url string, depth int, "
+        "spans array<struct<kind string, text string, media_ref string, offset int>>",
+    )
+    links = discover_links(docs)
+    nodes = re.findall(
+        r"ArrowEvalPython|BatchEvalPython|MapInPandas|MapInArrow", _plan(links)
+    )
+    assert len(nodes) == 1, _plan(links)
+    assert [tuple(r) for r in links.collect()] == [
+        ("http://a.test/x.html", "http://a.test/p", 1, 0.0)
+    ]
+
+
 def test_wet_wat_derivations_are_jvm_side(spark):
     """The WET text and WAT outlink derivations must compile to pure JVM
     expressions — the only Python node in either sink plan is the final

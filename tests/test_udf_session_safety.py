@@ -78,6 +78,95 @@ def test_module_udfs_are_session_safe():
         assert isinstance(obj, SessionSafeUdf), obj
 
 
+def test_worker_task_rereads_no_zip_directory(spark):
+    """PySpark invalidates the import caches at the start of every Python
+    task; on CPython < 3.13 each cached zipimporter then re-reads its
+    archive's directory (16 reads of pyspark.zip, the py4j zip and the
+    spark-core jar, ~0.25 CPU-s per task). Once a worker has imported the
+    engine, a second pandas-UDF job re-reads no unchanged archive."""
+    import sys
+
+    from pyspark.sql.functions import pandas_udf
+
+    # local def: cloudpickle ships it by value (see the first test)
+    def zip_probe(s: pd.Series) -> pd.Series:
+        """Whether this worker already ran with the stamped invalidator,
+        how many archive directories one ``importlib.invalidate_caches()``
+        (what ``setup_spark_files`` calls per task) re-reads, and how many
+        zip archives the worker imports from."""
+        import importlib
+        import sys
+        import zipimport
+
+        warm = zipimport.zipimporter.invalidate_caches.__module__ == "kermit_spark.udf"
+        import kermit_spark  # noqa: F401  (what unpickling an engine UDF does)
+
+        reads = 0
+        read_directory = zipimport._read_directory
+
+        def counting(archive):
+            nonlocal reads
+            reads += 1
+            return read_directory(archive)
+
+        zipimport._read_directory = counting
+        try:
+            importlib.invalidate_caches()
+        finally:
+            zipimport._read_directory = read_directory
+        archives = {
+            f.archive for f in sys.path_importer_cache.values()
+            if isinstance(f, zipimport.zipimporter)
+        }
+        return pd.Series([f"{int(warm)} {reads} {len(archives)}"] * len(s))
+
+    probe = pandas_udf(zip_probe, StringType())
+    df = spark.range(4).repartition(4).select(F.col("id").cast("string").alias("x"))
+    df.select(probe("x")).collect()  # first job: workers import the engine
+    rows = [tuple(map(int, r[0].split())) for r in df.select(probe("x")).collect()]
+    warm = [(reads, archives) for was_warm, reads, archives in rows if was_warm]
+    if sys.version_info >= (3, 13):  # zipimport re-reads lazily; left unpatched
+        assert all(reads == 0 for _, reads, _ in rows), rows
+        return
+    assert warm, rows  # reused workers kept the stamped invalidator
+    assert all(archives > 0 for _, archives in warm), rows
+    assert all(reads == 0 for reads, _ in warm), rows
+
+
+def test_zip_directory_rereads_only_a_changed_archive(tmp_path, monkeypatch):
+    """The stamped invalidator still picks up an archive that changed on
+    disk (a re-added ``addPyFile`` zip) and skips one that did not."""
+    import importlib
+    import sys
+    import zipfile
+    import zipimport
+
+    import kermit_spark.udf  # noqa: F401  (installs the invalidator)
+
+    archive = tmp_path / "addon.zip"
+    with zipfile.ZipFile(archive, "w") as z:
+        z.writestr("ks_addon_a.py", "X = 1\n")
+    monkeypatch.syspath_prepend(str(archive))
+    assert importlib.import_module("ks_addon_a").X == 1
+    reads = []
+    read_directory = zipimport._read_directory
+    monkeypatch.setattr(
+        zipimport, "_read_directory", lambda a: reads.append(a) or read_directory(a)
+    )
+    importlib.invalidate_caches()
+    importlib.invalidate_caches()
+    if sys.version_info < (3, 13):
+        # the first call stamps the archive, the second finds it unchanged
+        assert reads.count(str(archive)) == 1, reads
+    with zipfile.ZipFile(archive, "a") as z:
+        z.writestr("ks_addon_b.py", "Y = 2\n")
+    importlib.invalidate_caches()
+    assert importlib.import_module("ks_addon_b").Y == 2
+    for name in ("ks_addon_a", "ks_addon_b"):
+        sys.modules.pop(name, None)
+    sys.path_importer_cache.pop(str(archive), None)
+
+
 def test_no_accumulator_error_storm_across_sessions(tmp_path):
     """Two sequential sessions in one process, each running a full crawl
     wave (the bench.py session pattern): the second session's jobs must not

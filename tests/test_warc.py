@@ -1044,3 +1044,58 @@ def test_wet_and_wat_read_gzipped_part_files(spark, tmp_path):
         want = sorted(tuple(r) for r in read(spark, plain).collect())
         assert len(want) == 2
         assert sorted(tuple(r) for r in read(spark, gz).collect()) == want
+
+
+def test_read_wat_maps_common_crawl_envelopes(spark, tmp_path):
+    """A Common Crawl WAT nests the fetch facts in an ``Envelope`` and also
+    writes envelopes for its request and metadata records. read_wat maps a
+    response envelope to (url, wave, status, content_type, outlinks) in
+    link order and skips the envelopes that describe no HTTP response."""
+    import json
+    import os
+
+    from kermit_spark.warc import read_wat
+
+    def envelope(i, uri, payload_meta):
+        doc = {
+            "Container": {"Filename": "CC-MAIN-00000.warc.gz", "Compressed": True},
+            "Envelope": {
+                "Format": "WARC",
+                "WARC-Header-Metadata": {"WARC-Type": "response", "WARC-Target-URI": uri},
+                "Payload-Metadata": payload_meta,
+            },
+        }
+        return _cc_record(i, "metadata", json.dumps(doc).encode(), uri, "application/json")
+
+    uri = "http://cc.test/page"
+    response = {
+        "Actual-Content-Type": "application/http; msgtype=response",
+        "HTTP-Response-Metadata": {
+            "Response-Message": {"Version": "HTTP/1.1", "Status": "200", "Reason": "OK"},
+            "Headers": {"content-type": "text/html; charset=UTF-8", "Server": "x"},
+            "HTML-Metadata": {
+                "Head": {"Title": "t"},
+                "Links": [
+                    {"path": "A@/href", "url": "/a.html", "text": "a"},
+                    {"path": "IMG@/src", "url": "//img.test/i.png"},
+                    {"path": "A@/href", "text": "no url"},
+                ],
+            },
+        },
+    }
+    records = [
+        _cc_record(0, "warcinfo", b"software: test\r\n"),
+        envelope(1, uri, {"HTTP-Request-Metadata": {"Request-Message": {"Method": "GET"}}}),
+        envelope(2, uri, response),
+        envelope(3, uri, {"WARC-Metadata-Metadata": {"Metadata-Records": []}}),
+        envelope(4, "http://cc.test/img.png", {"HTTP-Response-Metadata": {
+            "Response-Message": {"Status": "404"}, "Headers": {}}}),
+    ]
+    d = str(tmp_path / "ccwat")
+    os.makedirs(d)
+    with open(os.path.join(d, "CC-MAIN-00000.warc.wat.gz"), "wb") as f:
+        f.write(b"".join(gzip.compress(r) for r in records))
+    assert [tuple(r) for r in read_wat(spark, d).collect()] == [
+        (uri, 0, 200, "text/html; charset=UTF-8", ["/a.html", "//img.test/i.png"]),
+        ("http://cc.test/img.png", 0, 404, None, []),
+    ]
