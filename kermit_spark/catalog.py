@@ -15,10 +15,19 @@ rewrites):
     O(touched hosts), not O(frontier) — the property that keeps a 10^10-row
     frontier writable;
   * a JSON snapshot log (``_meta.json``) maps snapshot_id -> {partition ->
-    version}; the file is swapped atomically (tmp + rename) so a killed run
-    resumes from the last complete wave (Crawler resume semantics,
-    /root/reference/src/kermit/QueueSystem.coffee:17-34 restore + spec
+    [version, ...]}: a partition's file set is the LIST of its version dirs
+    (one after a rewrite, several after fast-appends). The file is swapped
+    atomically (tmp + rename) so a killed run resumes from the last complete
+    wave (Crawler resume semantics, reference
+    src/kermit/QueueSystem.coffee:17-34 restore + spec
     QueueSystem.spec.coffee:45-54);
+  * every commit — ``create``, ``overwrite_partitions``, ``merge_write`` —
+    goes through ONE routine (``_commit``): claim a version, run one write
+    job, build the new partition map, mark emptied partitions, and CAS the
+    log. A new snapshot's properties are the previous snapshot's properties
+    updated with the commit's own (``ts`` always fresh), so state such as
+    the crawl's resume point (``wave``) survives every writer without being
+    restated;
   * reads list the per-partition current paths from the manifest (an Iceberg
     manifest-list analog) and hand Spark an explicit file set with
     ``basePath`` so the partition column is recovered — a scan of snapshot S
@@ -27,7 +36,7 @@ rewrites):
     footer, so planning a read runs no Spark job.
 
 At 100 TB this module is replaced by ``spark.read.format("iceberg")`` +
-``MERGE INTO``; every caller goes through the three functions below so that
+``MERGE INTO``; every caller goes through the three commit faces so that
 swap touches one file.
 """
 
@@ -58,9 +67,10 @@ class CommitConflictError(RuntimeError):
 @dataclass
 class TableMeta:
     current_snapshot: int
-    # snapshot_id (str key for JSON) -> {partition(str) -> version int}
+    # snapshot_id (str key for JSON) -> {partition(str) -> [version, ...]}
     snapshots: dict = field(default_factory=dict)
-    # free-form per-snapshot properties (wave number, counts) — lineage hook
+    # free-form per-snapshot properties (wave number, counts), carried
+    # forward from snapshot to snapshot — lineage hook
     properties: dict = field(default_factory=dict)
 
 
@@ -83,7 +93,20 @@ class SnapshotCatalog:
             return None
         with open(path) as f:
             raw = json.load(f)
-        return TableMeta(raw["current_snapshot"], raw["snapshots"], raw.get("properties", {}))
+        # logs written before every partition held a version LIST map a
+        # rewritten partition to a bare version int
+        snapshots = {
+            sid: {part: v if isinstance(v, list) else [v] for part, v in partmap.items()}
+            for sid, partmap in raw["snapshots"].items()
+        }
+        return TableMeta(raw["current_snapshot"], snapshots, raw.get("properties", {}))
+
+    def _load(self, table: str) -> TableMeta:
+        """``_load_meta`` of a table that must exist."""
+        meta = self._load_meta(table)
+        if meta is None:
+            raise FileNotFoundError(f"table {table!r} does not exist in {self.root}")
+        return meta
 
     def _store_meta(self, table: str, meta: TableMeta) -> None:
         tdir = os.path.join(self.root, table)
@@ -124,11 +147,12 @@ class SnapshotCatalog:
             except FileExistsError:
                 n += 1
 
-    def _commit_meta(self, table: str, meta: TableMeta, expected_base: int) -> None:
+    def _commit_meta(self, table: str, meta: TableMeta, expected_base: int | None) -> None:
         """Compare-and-swap commit point: the snapshot log is replaced only
         if its current snapshot is still ``expected_base`` (what this commit
-        loaded); otherwise CommitConflictError — the loser retries against
-        fresh state instead of silently overwriting the winner (the Iceberg
+        loaded; None replaces any log — ``create``); otherwise
+        CommitConflictError — the loser retries against fresh state instead
+        of silently overwriting the winner (the Iceberg
         atomic-swap-with-retry protocol). The check+swap critical section is
         an flock on a sidecar lockfile — POSIX-local like the rest of this
         sandbox catalog; the production swap point is Iceberg's catalog CAS.
@@ -144,7 +168,7 @@ class SnapshotCatalog:
             fcntl.flock(lk, fcntl.LOCK_EX)
             try:
                 cur = self._load_meta(table)
-                if cur is not None and cur.current_snapshot != expected_base:
+                if cur is not None and expected_base not in (None, cur.current_snapshot):
                     raise CommitConflictError(
                         f"table {table!r}: base snapshot {expected_base} is stale "
                         f"(current is {cur.current_snapshot}); retry the operation"
@@ -197,9 +221,7 @@ class SnapshotCatalog:
         ``mergeSchema`` read: the stamp being replaced is the one thing this
         must not trust) — call after a schema-evolution backfill so future
         sessions read the migrated schema and skip re-probing."""
-        meta = self._load_meta(table)
-        if meta is None:
-            raise FileNotFoundError(f"table {table!r} does not exist")
+        meta = self._load(table)
         meta.properties["_schema"] = _schema_ddl(self.read(table, merge_schema=True))
         self._store_meta(table, meta)
 
@@ -219,18 +241,14 @@ class SnapshotCatalog:
         hold mixed-schema files from before a column existed (rows from
         legacy files surface the new column as NULL); it costs a footer
         read per file."""
-        meta = self._load_meta(table)
-        if meta is None:
-            raise FileNotFoundError(f"table {table!r} does not exist in {self.root}")
+        meta = self._load(table)
         sid = meta.current_snapshot if snapshot is None else snapshot
         partmap = meta.snapshots[str(sid)]
         base = os.path.join(self.root, table)
-        # a partition maps to one version (overwrite) or a version LIST
-        # (fast-append commits, see merge_write)
         paths = [
             os.path.join(base, f"{PARTITION_COL}={part}", f"v{v}")
             for part, vers in sorted(partmap.items(), key=lambda kv: int(kv[0]))
-            for v in ([vers] if isinstance(vers, int) else vers)
+            for v in vers
         ]
         if not paths:
             # empty table: replay schema from the schema stamp written at create
@@ -264,22 +282,9 @@ class SnapshotCatalog:
         align: bool = True,
     ) -> int:
         """Create table from ``df`` (must already carry PARTITION_COL in
-        [0, num_partitions)). Writes every partition at v0."""
-        base = os.path.join(self.root, table)
-        # re-creating over a previous incarnation: stale version claims would
-        # make the new table's first commits skip snapshot ids
-        shutil.rmtree(self._claims_dir(table), ignore_errors=True)
-        ver = 0
-        self._write_partitions(table, df, ver, align=align)
-        written = self._list_written_partitions(base, ver)
-        partmap = {str(p): ver for p in written}
-        props0 = dict(properties or {})
-        props0["ts"] = time.time()
-        meta = TableMeta(0, {"0": partmap}, {"0": props0})
-        # schema stamp (DDL string) so empty snapshots can still be read
-        meta.properties["_schema"] = _schema_ddl(df)
-        self._store_meta(table, meta)
-        return 0
+        [0, num_partitions)) as snapshot 0, every partition at v0. A previous
+        incarnation of the table is replaced: nothing carries over from it."""
+        return self._commit(table, df, (), create=True, properties=properties, align=align)[0]
 
     def overwrite_partitions(
         self,
@@ -293,30 +298,8 @@ class SnapshotCatalog:
         ``df`` (or the explicit ``touched`` set — pass it when a partition
         becomes empty and must still be replaced). Partitions absent from both
         keep their previous version — zero IO for untouched hosts."""
-        meta = self._load_meta(table)
-        if meta is None:
-            raise FileNotFoundError(f"table {table!r} does not exist")
-        base_sid = meta.current_snapshot
-        new_sid = self._claim_version(table, base_sid)
-        ver = new_sid
-        self._write_partitions(table, df, ver, align=align)
-        base = os.path.join(self.root, table)
-        written = set(self._list_written_partitions(base, ver))
-        touched_set = set(int(t) for t in touched) if touched is not None else written
-        touched_set |= written
-        partmap = dict(meta.snapshots[str(base_sid)])
-        for part in touched_set & written:
-            partmap[str(part)] = ver
-        emptied = sorted(touched_set - written)
-        for part in self._write_empty_partitions(table, base, ver, emptied):
-            partmap[str(part)] = ver
-        meta.snapshots[str(new_sid)] = partmap
-        meta.current_snapshot = new_sid
-        props = dict(properties or {})
-        props["ts"] = time.time()
-        meta.properties[str(new_sid)] = props
-        self._commit_meta(table, meta, expected_base=base_sid)
-        return new_sid
+        touched = () if touched is None else touched
+        return self._commit(table, df, touched, properties=properties, align=align)[0]
 
     def merge_write(
         self,
@@ -340,42 +323,66 @@ class SnapshotCatalog:
         ride on the write) into snapshot properties.
         Returns (snapshot_id, written partition ids).
         """
-        meta = self._load_meta(table)
-        if meta is None:
-            raise FileNotFoundError(f"table {table!r} does not exist")
-        base_sid = meta.current_snapshot
-        new_sid = self._claim_version(table, base_sid)
-        ver = new_sid
-        self._write_partitions(table, df, ver, align=align)
+        return self._commit(
+            table, df, replace_parts, append=True, properties=properties,
+            extra_properties=extra_properties, align=align,
+        )
+
+    def _commit(
+        self,
+        table: str,
+        df: DataFrame,
+        replace: Iterable[int],
+        append: bool = False,
+        properties: dict | None = None,
+        extra_properties=None,
+        align: bool = True,
+        create: bool = False,
+    ) -> tuple[int, set[int]]:
+        """The one commit path behind ``create``, ``overwrite_partitions``
+        and ``merge_write``: claim a version, write ``df`` in one job, and
+        CAS a snapshot whose partition map is the base's with every written
+        partition's list replaced — or, with ``append``, extended unless the
+        partition is in ``replace``. A partition in ``replace`` that the
+        write left empty gets an empty version dir when the base snapshot
+        has it, so its old rows do not resurrect. Properties are the base
+        snapshot's updated with ``properties`` and then
+        ``extra_properties()`` (evaluated after the write), with a fresh
+        ``ts``. Returns (snapshot id, written partitions)."""
         base = os.path.join(self.root, table)
+        if create:
+            # re-creating over a previous incarnation: its version dirs would
+            # be listed as written below (resurrecting its rows) and its
+            # claims would make the new table's first commits skip ids
+            for entry in os.listdir(base) if os.path.isdir(base) else ():
+                if entry.startswith(f"{PARTITION_COL}=") or entry == "_claims":
+                    shutil.rmtree(os.path.join(base, entry), ignore_errors=True)
+            meta = TableMeta(-1, {}, {"_schema": _schema_ddl(df)})
+        else:
+            meta = self._load(table)
+        base_sid = meta.current_snapshot
+        replace = {int(p) for p in replace}
+        ver = self._claim_version(table, base_sid)
+        self._write_partitions(table, df, ver, align=align)
         written = set(self._list_written_partitions(base, ver))
-        replace = {int(p) for p in replace_parts}
-        partmap = {
-            k: (list(v) if isinstance(v, list) else [v])
-            for k, v in meta.snapshots[str(base_sid)].items()
-        }
+        base_map = meta.snapshots.get(str(base_sid), {})
+        partmap = dict(base_map)
         for part in written:
             key = str(part)
-            if part in replace or key not in partmap:
-                partmap[key] = [ver]
-            else:
-                partmap[key] = partmap[key] + [ver]
-        # a replace partition whose merged result is EMPTY still needs its
-        # file list replaced (with an empty v-dir) — keeping the old list
-        # would resurrect stale rows in the new snapshot, the exact hazard
-        # overwrite_partitions' emptied branch guards against
-        emptied = sorted(p for p in replace - written if str(p) in partmap)
+            appended = append and part not in replace and key in partmap
+            partmap[key] = partmap[key] + [ver] if appended else [ver]
+        emptied = sorted(p for p in replace - written if str(p) in base_map)
         for part in self._write_empty_partitions(table, base, ver, emptied):
             partmap[str(part)] = [ver]
-        props = dict(properties or {})
+        props = {**meta.properties.get(str(base_sid), {}), **(properties or {})}
         if extra_properties is not None:
             props.update(extra_properties())
         props["ts"] = time.time()
-        meta.snapshots[str(new_sid)] = partmap
-        meta.current_snapshot = new_sid
-        meta.properties[str(new_sid)] = props
-        self._commit_meta(table, meta, expected_base=base_sid)
-        return new_sid, written
+        meta.snapshots[str(ver)] = partmap
+        meta.properties[str(ver)] = props
+        meta.current_snapshot = ver
+        self._commit_meta(table, meta, None if create else base_sid)
+        return ver, written
 
     def read_incremental(
         self,
@@ -411,9 +418,7 @@ class SnapshotCatalog:
         contract as Iceberg: incremental reads need retained history
         (``expire_snapshots(keep_last=k)`` bounds how far back you can go).
         """
-        meta = self._load_meta(table)
-        if meta is None:
-            raise FileNotFoundError(f"table {table!r} does not exist")
+        meta = self._load(table)
         to_sid = meta.current_snapshot if to_snapshot is None else to_snapshot
         for sid in (from_snapshot, to_sid):
             if str(sid) not in meta.snapshots:
@@ -433,14 +438,12 @@ class SnapshotCatalog:
         append_paths: list[str] = []
         rewritten_new: list[str] = []
         rewritten_old: list[str] = []
-        for part, vers in new_map.items():
-            nv = vers if isinstance(vers, list) else [vers]
-            raw_old = old_map.get(part)
-            if raw_old is None:
+        for part, nv in new_map.items():
+            ov = old_map.get(part)
+            if ov is None:
                 # partition born after from_snapshot: every file is new data
                 append_paths += _vpaths(part, nv)
                 continue
-            ov = raw_old if isinstance(raw_old, list) else [raw_old]
             if nv == ov:
                 continue  # untouched — zero IO
             if len(nv) > len(ov) and nv[: len(ov)] == ov:
@@ -479,25 +482,16 @@ class SnapshotCatalog:
         Run it between crawls (or every k waves on hot tables): appended
         file sets otherwise accumulate until a partition is next rewritten
         by a status merge, degrading scan planning on long-running
-        frontiers."""
-        meta = self._load_meta(table)
-        if meta is None:
-            raise FileNotFoundError(f"table {table!r} does not exist")
+        frontiers. Like every commit, the new snapshot carries the current
+        one's properties (stats such as the frontier's n_rows/url_epoch
+        describe the data, which compaction does not change)."""
+        meta = self._load(table)
         partmap = meta.snapshots[str(meta.current_snapshot)]
-        multi = sorted(
-            int(p) for p, v in partmap.items() if isinstance(v, list) and len(v) > 1
-        )
+        multi = sorted(int(p) for p, vers in partmap.items() if len(vers) > 1)
         if not multi:
             return meta.current_snapshot
         sub = self.read(table).filter(F.col(PARTITION_COL).isin(multi))
-        # carry forward the current snapshot's properties: stats like the
-        # frontier's n_rows/url_epoch describe the DATA, which compaction
-        # does not change
-        props = dict(meta.properties.get(str(meta.current_snapshot), {}))
-        props.pop("ts", None)
-        props.update(properties or {})
-        props["compacted_parts"] = len(multi)
-        return self.overwrite_partitions(table, sub, multi, properties=props)
+        return self.overwrite_partitions(table, sub, multi, properties=properties)
 
     def rollback_to(self, table: str, snapshot: int) -> int:
         """Make ``snapshot`` the current snapshot again — the Iceberg
@@ -514,43 +508,18 @@ class SnapshotCatalog:
         rolled-back rows. Reads of the target and older retained snapshots
         are unaffected. Raises ``KeyError`` for an unknown/expired
         target."""
-        meta = self._load_meta(table)
-        if meta is None:
-            raise FileNotFoundError(f"table {table!r} does not exist")
+        meta = self._load(table)
         if str(snapshot) not in meta.snapshots:
             raise KeyError(
                 f"snapshot {snapshot} of table {table!r} is not retained"
             )
         cur_sid = meta.current_snapshot
-        dropped = [s for s in meta.snapshots if int(s) > snapshot]
-        for s in dropped:
-            meta.snapshots.pop(s, None)
-            meta.properties.pop(s, None)
         meta.current_snapshot = snapshot
-        # delete now-unreferenced version dirs (same sweep as expire)
-        referenced: dict[str, set[int]] = {}
-        for s in meta.snapshots:
-            for part, vers in meta.snapshots[s].items():
-                vlist = vers if isinstance(vers, list) else [vers]
-                referenced.setdefault(part, set()).update(vlist)
-        base = os.path.join(self.root, table)
-        for entry in os.listdir(base):
-            if not entry.startswith(f"{PARTITION_COL}="):
-                continue
-            part = entry.split("=", 1)[1]
-            pdir = os.path.join(base, entry)
-            keep = referenced.get(part, set())
-            for vdir in os.listdir(pdir):
-                if vdir.startswith("v") and vdir[1:].isdigit() and int(vdir[1:]) not in keep:
-                    shutil.rmtree(os.path.join(pdir, vdir), ignore_errors=True)
-        # release the dropped ids' version claims too: commit numbering after
-        # a rollback REUSES the dropped range (the contract above), which is
-        # safe exactly because the orphan v-dirs were just deleted
-        cdir = self._claims_dir(table)
-        if os.path.isdir(cdir):
-            for claim in os.listdir(cdir):
-                if claim[1:].isdigit() and int(claim[1:]) > snapshot:
-                    os.unlink(os.path.join(cdir, claim))
+        # the dropped ids' version claims are released with their v-dirs:
+        # commit numbering after a rollback REUSES the dropped range (the
+        # contract above), which is safe exactly because the sweep deletes
+        # the orphan v-dirs first
+        self._sweep(table, meta, [int(s) for s in meta.snapshots if int(s) > snapshot])
         self._commit_meta(table, meta, expected_base=cur_sid)
         return snapshot
 
@@ -564,46 +533,43 @@ class SnapshotCatalog:
         The current snapshot is always retained; reads of retained snapshots
         and resume are unaffected (their file lists are untouched). Returns
         the number of version dirs deleted."""
-        meta = self._load_meta(table)
-        if meta is None:
-            raise FileNotFoundError(f"table {table!r} does not exist")
+        meta = self._load(table)
         sids = sorted(int(s) for s in meta.snapshots)
-        retained = set(sids[-max(keep_last, 1):])
-        retained.add(meta.current_snapshot)
+        retained = set(sids[-max(keep_last, 1):]) | {meta.current_snapshot}
         expired = [s for s in sids if s not in retained]
-        # versions each partition still needs across retained snapshots
+        removed = self._sweep(table, meta, expired)
+        if expired or removed:
+            self._commit_meta(table, meta, expected_base=meta.current_snapshot)
+        return removed
+
+    def _sweep(self, table: str, meta: TableMeta, drop: list[int]) -> int:
+        """Drop snapshots ``drop`` from ``meta``, then delete every version
+        dir no remaining snapshot references and the dropped ids' version
+        claims (expired ids can never be re-claimed: claims start above the
+        current snapshot). The caller commits ``meta``. Returns the number
+        of version dirs deleted."""
+        for s in drop:
+            meta.snapshots.pop(str(s), None)
+            meta.properties.pop(str(s), None)
         referenced: dict[str, set[int]] = {}
-        for s in retained:
-            for part, vers in meta.snapshots[str(s)].items():
-                vlist = vers if isinstance(vers, list) else [vers]
-                referenced.setdefault(part, set()).update(vlist)
+        for partmap in meta.snapshots.values():
+            for part, vers in partmap.items():
+                referenced.setdefault(part, set()).update(vers)
         base = os.path.join(self.root, table)
         removed = 0
         for entry in os.listdir(base):
             if not entry.startswith(f"{PARTITION_COL}="):
                 continue
-            part = entry.split("=", 1)[1]
             pdir = os.path.join(base, entry)
-            keep = referenced.get(part, set())
+            keep = referenced.get(entry.split("=", 1)[1], set())
             for vdir in os.listdir(pdir):
-                if not (vdir.startswith("v") and vdir[1:].isdigit()):
-                    continue
-                if int(vdir[1:]) not in keep:
+                if vdir.startswith("v") and vdir[1:].isdigit() and int(vdir[1:]) not in keep:
                     shutil.rmtree(os.path.join(pdir, vdir), ignore_errors=True)
                     removed += 1
-        for s in expired:
-            meta.snapshots.pop(str(s), None)
-            meta.properties.pop(str(s), None)
-        # expired ids can never be re-claimed (claims start above the current
-        # snapshot), so their marker files are pure clutter — drop them
-        cdir = self._claims_dir(table)
-        if os.path.isdir(cdir):
-            for s in expired:
-                claim = os.path.join(cdir, f"v{s}")
-                if os.path.exists(claim):
-                    os.unlink(claim)
-        if expired or removed:
-            self._commit_meta(table, meta, expected_base=meta.current_snapshot)
+        for s in drop:
+            claim = os.path.join(self._claims_dir(table), f"v{s}")
+            if os.path.exists(claim):
+                os.unlink(claim)
         return removed
 
     # -- internals ---------------------------------------------------------

@@ -1036,13 +1036,7 @@ class Crawler:
             return False
         # waiting is only useful while something is still scheduled — a
         # drained frontier should terminate immediately, stand-down or not
-        has_work = bool(
-            self.frontier.read()
-            .filter(F.col("status") == SCHEDULED)
-            .limit(1)
-            .count()
-        )
-        if not has_work:
+        if not self.frontier.has_work():
             return False
         self._server_backoff = {
             h: resume - 1 for h, resume in self._server_backoff.items()
@@ -1148,13 +1142,14 @@ class Crawler:
         cfg = self.config
 
         # INITIAL→SPOOLED: admission (status + URL filter; F5 second check)
-        eligible = self.frontier.read().filter(
+        admitted = self.frontier.read().filter(
             (F.col("status") == SCHEDULED) & cfg.admit_expr(F.col("url"))
         )
+        eligible = admitted
         if cfg.delay is not None:
             # Q10 RandomizedDelay: deferred rows stay 'scheduled' and are
             # reconsidered next wave with a fresh coin
-            eligible = eligible.filter(~cfg.delay.defer_expr(wave))
+            eligible = admitted.filter(~cfg.delay.defer_expr(wave))
 
         # SPOOLED→READY: politeness dequeue (Q5/Q8/Q9; robots Crawl-delay
         # caps — fetched in an earlier wave — and error-backoff caps tighten
@@ -1184,21 +1179,26 @@ class Crawler:
             from .functions.urls import registrable_domain
 
             pkey = registrable_domain(F.col("host"))
-        selected = dequeue(
-            eligible,
-            cfg.politeness,
-            sub_salts=cfg.sub_salts,
-            global_cap=cfg.global_cap,
-            host_budgets=host_budgets,
-            politeness_key=pkey,
-            aging_rate=cfg.priority_aging_rate,
-            current_wave=wave,
-        ).persist()
-        # one action materializes the batch AND yields host list + count.
-        # host_budgets (e.g. a declared Crawl-delay) join as a broadcast
-        # whose build is one more job; a shuffle join on host would save it
-        # but collapse the level-1 window's (host, sub_salt) hot-host spread.
-        per_host = selected.groupBy("p", "host").count().collect()
+
+        def select(rows: DataFrame):
+            batch = dequeue(
+                rows,
+                cfg.politeness,
+                sub_salts=cfg.sub_salts,
+                global_cap=cfg.global_cap,
+                host_budgets=host_budgets,
+                politeness_key=pkey,
+                aging_rate=cfg.priority_aging_rate,
+                current_wave=wave,
+            ).persist()
+            # one action materializes the batch AND yields host list + count.
+            # host_budgets (e.g. a declared Crawl-delay) join as a broadcast
+            # whose build is one more job; a shuffle join on host would save
+            # it but collapse the level-1 window's (host, sub_salt) hot-host
+            # spread.
+            return batch, batch.groupBy("p", "host").count().collect()
+
+        selected, per_host = select(eligible)
         n_selected = sum(r["count"] for r in per_host)
         if n_selected == 0 and cfg.delay is not None:
             # every remaining URL drew the defer coin (the coin is a pure
@@ -1206,16 +1206,7 @@ class Crawler:
             # it) — fall back to the undelayed selection so deferral never
             # stalls the crawl; genuinely-empty frontiers still terminate
             selected.unpersist()
-            undelayed = self.frontier.read().filter(
-                (F.col("status") == SCHEDULED) & cfg.admit_expr(F.col("url"))
-            )
-            selected = dequeue(
-                undelayed, cfg.politeness, sub_salts=cfg.sub_salts,
-                global_cap=cfg.global_cap, host_budgets=host_budgets,
-                politeness_key=pkey,
-                aging_rate=cfg.priority_aging_rate, current_wave=wave,
-            ).persist()
-            per_host = selected.groupBy("p", "host").count().collect()
+            selected, per_host = select(admitted)
             n_selected = sum(r["count"] for r in per_host)
         batch_parts = sorted({r["p"] for r in per_host})
         if n_selected == 0:
@@ -1781,10 +1772,14 @@ class Crawler:
 
     def rollback_to_wave(self, wave: int) -> int:
         """Bad-wave recovery across ALL crawl state: restore the frontier to
-        its snapshot at the end of ``wave`` (catalog.rollback_to) and drop
+        its state at the end of ``wave`` (catalog.rollback_to) and drop
         the later waves' document partitions, so a subsequent crawl() — same
         process or a fresh one — re-runs from wave+1 as if the bad waves
-        never happened (fix the config first; that is the point).
+        never happened (fix the config first; that is the point). The
+        target is the newest snapshot whose ``wave`` property is ≤ ``wave``:
+        every commit carries that property forward, so the target is the end
+        of ``wave`` plus any commits made before wave+1 started (error
+        reschedules, remote or streamed schedule requests, maintenance).
 
         Consistency notes, each deliberate:
           * url_seen blobs may retain the rolled-back URLs — a stale

@@ -912,7 +912,6 @@ class Frontier:
         fixed-point, so the ordering contract holds either way."""
         from .ops.graph import hits, pagerank
 
-        prev_props = self.catalog.snapshot_property(FRONTIER_TABLE)
         fr = self.read()
         if edges is None:
             edges = fr.filter(F.col("referer").isNotNull()).select(
@@ -940,11 +939,8 @@ class Frontier:
             )
             .select(*FRONTIER_COLS)
         )
-        carry = {
-            k: prev_props[k] for k in ("n_rows", "url_epoch", "wave") if k in prev_props
-        }
         return self.catalog.overwrite_partitions(
-            FRONTIER_TABLE, updated, range(self.num_partitions), properties=carry
+            FRONTIER_TABLE, updated, range(self.num_partitions)
         )
 
     def reprioritize_hosts(
@@ -967,7 +963,6 @@ class Frontier:
 
         Same O(frontier) rewrite cost as reprioritize — run it every k
         waves, not per wave. Returns the new snapshot id."""
-        prev_props = self.catalog.snapshot_property(FRONTIER_TABLE)
         fr = self.read()
         scores = host_scores.select(
             F.col("host"), F.col("score_fp").cast("long").alias("_score_fp")
@@ -986,11 +981,8 @@ class Frontier:
             )
             .select(*FRONTIER_COLS)
         )
-        carry = {
-            k: prev_props[k] for k in ("n_rows", "url_epoch", "wave") if k in prev_props
-        }
         return self.catalog.overwrite_partitions(
-            FRONTIER_TABLE, updated, range(self.num_partitions), properties=carry
+            FRONTIER_TABLE, updated, range(self.num_partitions)
         )
 
     def schedule(self, candidates: DataFrame, wave: int, properties: dict | None = None) -> int:
@@ -1038,10 +1030,7 @@ class Frontier:
             return 0
         parts = sorted(int(r["p"]) for r in per_part)
         remaining = self.read().filter(F.col("p").isin(parts)).filter(~match)
-        # carry the current snapshot's properties forward (wave, stats —
-        # per-snapshot in the catalog, an overwrite would drop them)
-        props = dict(self.catalog.snapshot_property(FRONTIER_TABLE))
-        props["url_epoch"] = epoch + 1
+        props = {"url_epoch": epoch + 1}
         if prev_n is not None:
             props["n_rows"] = prev_n - n_evicted
         delete_held = (
@@ -1097,11 +1086,9 @@ class Frontier:
                 F.when(F.col("_flip"), F.lit(SCHEDULED)).otherwise(F.col("status")),
             )
         )
+        # membership unchanged: the carried epoch/stats stay right
         self.catalog.overwrite_partitions(
-            FRONTIER_TABLE, rewritten.select(*FRONTIER_COLS), parts,
-            # membership unchanged: same epoch/stats; properties are
-            # per-snapshot so they must be restated or they vanish
-            properties=dict(self.catalog.snapshot_property(FRONTIER_TABLE)),
+            FRONTIER_TABLE, rewritten.select(*FRONTIER_COLS), parts
         )
         return n
 
@@ -1142,8 +1129,7 @@ class Frontier:
             F.when(F.col("_flip"), F.lit(SCHEDULED)).otherwise(F.col("status")),
         )
         self.catalog.overwrite_partitions(
-            FRONTIER_TABLE, rewritten.select(*FRONTIER_COLS), parts,
-            properties=dict(self.catalog.snapshot_property(FRONTIER_TABLE)),
+            FRONTIER_TABLE, rewritten.select(*FRONTIER_COLS), parts
         )
         return n
 

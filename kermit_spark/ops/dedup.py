@@ -726,7 +726,8 @@ def minhash_index_near_dups(
     """Near-dups of ``new_docs`` against the persisted index AND within the
     increment itself, with exact-Jaccard verification — the query half of
     incremental dedup. Shingle/hash parameters must match the build (they
-    are stamped in the buckets table's snapshot properties).
+    are stamped in the buckets table's snapshot properties at build, and
+    every later snapshot, e.g. an extend, carries them forward).
 
     Semantics: the increment's bucket rows are capped per (band, band_sig)
     by lowest id (same rule as the build); candidates are

@@ -503,9 +503,10 @@ def anchor_text_stats(
     top_anchor is the most frequent non-null anchor text, ties broken by
     lexicographically smallest — fully deterministic.
 
-    Scale shape: explode → two hash aggregations, both map-side-partial
-    (a hot target's counts combine before the shuffle), keyed on
-    (target, anchor) then target. No windows, no self-joins; the
+    Scale shape: explode → one grouping-sets aggregation keyed on
+    (target, anchor) and (target, src) → one aggregation keyed on target,
+    both map-side-partial (a hot target's counts combine before the
+    shuffle). No windows, no joins, so each link is cleaned once; the
     top-anchor pick is min(struct(-n, anchor)) inside the second agg.
     """
     links = documents.select(
@@ -520,20 +521,21 @@ def anchor_text_stats(
         links = links.select(F.col("s.media_ref").alias("url"), *keep).filter(
             F.col("url").isNotNull()
         )
-    per_anchor = links.groupBy("url", "anchor").agg(
-        F.count("*").alias("_n"),
-    )
-    return per_anchor.groupBy("url").agg(
-        F.sum("_n").alias("n_inlinks"),
+    # one row per (url, anchor) with its link count, and one per distinct
+    # (url, src); grouping id 1 marks the (url, anchor) rows
+    keyed = links.groupingSets(
+        [["url", "anchor"], ["url", "src"]], "url", "anchor", "src"
+    ).agg(F.count("*").alias("_n"), F.grouping_id().alias("_g"))
+    per_anchor = F.col("_g") == 1
+    return keyed.groupBy("url").agg(
+        F.sum(F.when(per_anchor, F.col("_n"))).alias("n_inlinks"),
+        F.count(F.when(~per_anchor, F.col("src"))).alias("n_docs"),
         F.min(
             F.when(
-                F.col("anchor").isNotNull(),
+                per_anchor & F.col("anchor").isNotNull(),
                 F.struct((-F.col("_n")).alias("neg"), F.col("anchor").alias("a")),
             )
         ).alias("_top"),
-    ).join(
-        links.groupBy("url").agg(F.count_distinct("src").alias("n_docs")),
-        "url",
     ).select(
         "url",
         "n_inlinks",

@@ -44,6 +44,16 @@ def test_emptying_a_partition_does_not_resurrect_rows(spark, cat):
     assert got == [(0, 1)]
 
 
+def test_create_over_an_existing_table_keeps_none_of_its_rows(spark, cat):
+    cat.create("t", _df(spark, [(0, 1, "a"), (1, 2, "b")]), 4)
+    cat.merge_write("t", _df(spark, [(2, 3, "c")]), replace_parts=())
+    cat.create("t", _df(spark, [(0, 10, "x")]), 4)
+    assert [(r["p"], r["k"]) for r in cat.read("t").collect()] == [(0, 10)]
+    cat.merge_write("t", _df(spark, [(3, 4, "d")]), replace_parts=())
+    assert sorted((r["p"], r["k"]) for r in cat.read("t").collect()) == [(0, 10), (3, 4)]
+    assert cat.current_snapshot("t") == 1
+
+
 def test_commit_is_atomic_rename(spark, cat, tmp_path):
     cat.create("t", _df(spark, [(0, 1, "a")]), 2)
     # no stray staging dirs after commit
@@ -89,12 +99,83 @@ def test_merge_write_appends_then_compact_folds(spark, cat):
     assert got == [(0, 1, "a"), (0, 2, "b"), (1, 3, "c")]
 
     sid = cat.compact("t")
-    assert cat._load_meta("t").snapshots[str(sid)]["0"] == sid  # single version again
+    assert cat._load_meta("t").snapshots[str(sid)]["0"] == [sid]  # single version again
     got2 = sorted((r["p"], r["k"], r["v"]) for r in cat.read("t").collect())
     assert got2 == got
     assert cat.snapshot_property("t")["n_rows"] == 3  # stats carried forward
     # nothing multi-versioned left: compact is a no-op now
     assert cat.compact("t") == sid
+
+
+def test_commit_carries_previous_properties_with_fresh_ts(spark, cat):
+    """Every commit face starts its snapshot's properties from the previous
+    snapshot's: keys the commit does not restate survive, keys it states
+    win, and ``ts`` is always the commit's own."""
+    cat.create("t", _df(spark, [(0, 1, "a")]), 2, properties={"wave": 3, "n_rows": 1})
+    ts0 = cat.snapshot_property("t")["ts"]
+    cat.overwrite_partitions("t", _df(spark, [(0, 2, "b")]), [0])
+    props1 = cat.snapshot_property("t")
+    assert (props1["wave"], props1["n_rows"]) == (3, 1) and props1["ts"] > ts0
+    cat.merge_write("t", _df(spark, [(1, 3, "c")]), replace_parts=(), properties={"wave": 4})
+    props2 = cat.snapshot_property("t")
+    assert (props2["wave"], props2["n_rows"]) == (4, 1) and props2["ts"] > props1["ts"]
+
+
+def test_mixed_int_and_list_manifest_log_stays_readable(spark, cat, tmp_path):
+    """A snapshot log whose rewritten partitions map to a bare version int
+    (older writers) next to appended version lists reads, appends,
+    compacts, expires and rolls back like an all-list log."""
+    import json
+
+    cat.create("t", _df(spark, [(0, 1, "a"), (1, 2, "b")]), 4)  # snap 0
+    cat.overwrite_partitions("t", _df(spark, [(0, 10, "x")]), [0])  # snap 1
+    cat.merge_write("t", _df(spark, [(1, 3, "c")]), replace_parts=())  # snap 2
+    path = os.path.join(str(tmp_path / "cat"), "t", "_meta.json")
+    with open(path) as f:
+        raw = json.load(f)
+    for partmap in raw["snapshots"].values():
+        for part, vers in partmap.items():
+            if len(vers) == 1:
+                partmap[part] = vers[0]
+    assert raw["snapshots"]["2"] == {"0": 1, "1": [0, 2]}
+    with open(path, "w") as f:
+        json.dump(raw, f)
+
+    assert _rows(cat.read("t")) == [(0, 10, "x"), (1, 2, "b"), (1, 3, "c")]
+    assert _rows(cat.read_incremental("t", 1)) == [(1, 3, "c")]
+    cat.merge_write("t", _df(spark, [(0, 11, "y")]), replace_parts=())  # snap 3
+    assert cat._load_meta("t").snapshots["3"]["0"] == [1, 3]
+    assert _rows(cat.read_incremental("t", 2)) == [(0, 11, "y")]
+    sid = cat.compact("t")  # snap 4: both partitions folded
+    want = [(0, 10, "x"), (0, 11, "y"), (1, 2, "b"), (1, 3, "c")]
+    assert _rows(cat.read("t")) == want
+    assert cat._load_meta("t").snapshots[str(sid)] == {"0": [sid], "1": [sid]}
+    assert cat.rollback_to("t", 2) == 2
+    assert _rows(cat.read("t")) == [(0, 10, "x"), (1, 2, "b"), (1, 3, "c")]
+    # snapshots 0 and 1 expire: p=0/v0 goes, snapshot 2's int entry keeps
+    # p=0/v1 and its list keeps p=1/v0 and p=1/v2
+    assert cat.expire_snapshots("t", keep_last=1) == 1
+    assert _rows(cat.read("t")) == [(0, 10, "x"), (1, 2, "b"), (1, 3, "c")]
+    pdir = os.path.join(str(tmp_path / "cat"), "t", "p=0")
+    assert sorted(os.listdir(pdir)) == ["v1"]
+
+
+def test_extend_minhash_index_keeps_build_parameters(spark, cat):
+    """The shingle/hash parameters stamped at build stay readable from the
+    buckets table's current snapshot after an extend."""
+    from kermit_spark.ops.dedup import build_minhash_index, extend_minhash_index
+
+    params = dict(k=3, num_hashes=8, num_bands=2, max_bucket=5)
+    docs = spark.createDataFrame([(1, "a b c d e"), (2, "f g h i j")], "id long, text string")
+    build_minhash_index(cat, docs, **params)
+    built = dict(cat.snapshot_property("mh_buckets"))
+    extend_minhash_index(
+        cat, spark.createDataFrame([(3, "a b c d x")], "id long, text string"), **params
+    )
+    props = cat.snapshot_property("mh_buckets")
+    assert cat.current_snapshot("mh_buckets") == 1
+    assert {k: props[k] for k in params} == {k: built[k] for k in params}
+    assert props["stride"] == 1
 
 
 def test_merge_write_empty_replace_partition_does_not_resurrect(spark, cat):

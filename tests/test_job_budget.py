@@ -83,3 +83,20 @@ def test_steady_wave_and_bookkeeping_job_counts(spark, tmp_path, aqe_off):
     _, n_jobs = _jobs(sc, c.flush_lineage)
     assert n_jobs == 0 and not c._lineage_buffer
     assert c.lineage().filter("wave = 1 AND stage = 'dequeue'").first()["n"] == stats.n_selected
+
+
+def test_commit_faces_run_one_write_job(spark, tmp_path, aqe_off):
+    """``merge_write`` and ``overwrite_partitions`` run exactly their write
+    job; a touched partition the base snapshot never had needs no empty
+    marker, so naming it costs no job either."""
+    cat = SnapshotCatalog(spark, str(tmp_path / "cat"))
+    df = spark.createDataFrame([(0, 1), (1, 2)], "p int, k long")
+    cat.create("t", df, 4)
+    sc = spark.sparkContext
+    _, n_jobs = _jobs(sc, lambda: cat.merge_write("t", df, replace_parts=[0]))
+    assert n_jobs == 1
+    _, n_jobs = _jobs(sc, lambda: cat.overwrite_partitions("t", df, [0, 1]))
+    assert n_jobs == 1
+    _, n_jobs = _jobs(sc, lambda: cat.overwrite_partitions("t", df, [0, 1, 3]))
+    assert n_jobs == 1
+    assert cat.partitions("t") == [0, 1]

@@ -395,6 +395,27 @@ def test_discover_links_cleans_in_one_python_pass(spark):
     ]
 
 
+def test_anchor_text_stats_cleans_in_one_python_pass(spark):
+    """Both anchor-text aggregates come from one aggregation of the cleaned
+    links: a join of two aggregations over the links frame plans its
+    clean_links pass once per side."""
+    import re
+
+    from kermit_spark.ops.graph import anchor_text_stats
+
+    docs = spark.createDataFrame(
+        [("http://a.test/p",
+          [("link", "x", "/x.html", 0), ("link", "y", "/x.html", 1),
+           ("link", "m", "mailto:a@b", 2)])],
+        "url string, "
+        "spans array<struct<kind string, text string, media_ref string, offset int>>",
+    )
+    stats = anchor_text_stats(docs)
+    plan = _plan(stats)
+    assert len(re.findall(r"MapInArrow", plan)) == 1, plan
+    assert [tuple(r) for r in stats.collect()] == [("http://a.test/x.html", 2, 1, "x", 1)]
+
+
 def test_wet_wat_derivations_are_jvm_side(spark):
     """The WET text and WAT outlink derivations must compile to pure JVM
     expressions — the only Python node in either sink plan is the final
