@@ -6,8 +6,8 @@ Spark lifecycle replacement for the reference's event-loop machine
   read frontier snapshot → politeness dequeue (window top-k) → robots gate
   (on the dequeued batch) → fetch (corpus join / HTTP mapInPandas) → parse
   spans (pandas UDF) → write documents → discover + clean links → ONE frontier
-  commit (visited/error/robots_blocked MERGE + Bloom-deduped new URLs)
-  → lineage append
+  commit (visited/error/robots_blocked MERGE, retries settled in it, +
+  Bloom-deduped new URLs) → lineage append
 
 Termination is the AutoShutdown predicate (Q11, /root/reference/src/kermit/
 extensions/ext.autoshutdown.coffee:8-36 + Crawler.coffee:189 hasWork): loop
@@ -30,12 +30,13 @@ Scale notes:
     documents write — 3 broadcast builds (robots rules, fetch batch,
     dead-link anti-join) and the write job that fetches and parses (status
     counts ride on it via Observation); frontier commit — 3 broadcast
-    builds and ONE merge write (n_new rides on it). Catalog reads run no
-    job (schema from table metadata), the Crawl-delay flag rides the
-    robots write, lineage is buffered in memory and written without
-    Spark. Robots probes/fetches run only when unseen hosts appear,
-    verification counts only when configured; the seen-filter jobs join
-    only above the Bloom threshold.
+    builds and ONE merge write (n_new rides on it; error and throttle
+    retries settle inside that merge, so max_tries > 1 adds no job).
+    Catalog reads run no job (schema from table metadata), the
+    Crawl-delay flag rides the robots write, lineage is buffered in
+    memory and written without Spark. Robots probes/fetches run only
+    when unseen hosts appear, verification counts only when configured;
+    the seen-filter jobs join only above the Bloom threshold.
   * the only driver-side collect of unbounded data is the distinct-host
     list of the dequeued batch (bounded by the politeness budget).
 
@@ -169,7 +170,8 @@ class ServerBackoff:
 
       * the throttled URLs go back to 'scheduled' (via the frontier's
         THROTTLED_RETRY marker; tries bump each time, terminal 'error'
-        after ``max_tries`` throttles) instead of dying as errors;
+        after max(``max_tries``, ``CrawlConfig.max_tries``) attempts)
+        instead of dying as errors;
       * the HOST is excluded from dequeue (budget_cap 0 on the shared
         host_budgets join — no plan change) for a number of waves derived
         from the response's Retry-After header: delta-seconds values map
@@ -439,6 +441,11 @@ class Crawler:
         # table's schema — see _normalize_robots_schema
         self._robots_schema_ok = False
         self._last_requeued = 0  # rows requeued by the latest outage recovery
+        # commit_wave settles each wave's own errors against max_tries; error
+        # rows a resumed frontier carries from a lower budget get one
+        # reschedule_errors sweep per Crawler (crawl()). seed() sets it: a
+        # fresh frontier holds no error rows.
+        self._errors_swept = False
         # None = unknown (probe the robots table on next use); False skips
         # the Crawl-delay join entirely — the common case pays nothing
         self._has_crawl_delays: bool | None = None
@@ -482,6 +489,7 @@ class Crawler:
         # a freshly-seeded frontier is all SCHEDULED/tries=0: the page-cap
         # aggregation has nothing to count until the first wave runs
         self._any_attempts = False
+        self._errors_swept = True
 
     @property
     def last_wave(self) -> int:
@@ -772,24 +780,12 @@ class Crawler:
                 )
                 if recovered:
                     host_parts = sorted({p_of[h] for h in recovered})
-                    requeue = (
-                        self.frontier.read()
-                        .filter(
-                            F.col("p").isin(host_parts)
-                            & F.col("host").isin(recovered)
-                            & (F.col("status") == ROBOTS_BLOCKED)
-                        )
-                        .select(
-                            "p", "url_hash", "url",
-                            F.lit(SCHEDULED).alias("new_status"),
-                        )
-                        .persist()
+                    self._last_requeued = self.frontier._rewrite(
+                        F.col("p").isin(host_parts)
+                        & F.col("host").isin(recovered)
+                        & (F.col("status") == ROBOTS_BLOCKED),
+                        {"status": F.lit(SCHEDULED)},
                     )
-                    n_requeued = requeue.count()
-                    if n_requeued:
-                        self.frontier.update_status(requeue)
-                    self._last_requeued = n_requeued
-                    requeue.unpersist()
             if len(self._robots_hosts) < self._ROBOTS_CACHE_MAX:
                 self._robots_hosts.update({h: wave for _, h in missing})
             any_delay = bool(delay_obs.get["any_delay"])
@@ -1399,9 +1395,8 @@ class Crawler:
             throttle_max_tries=(
                 cfg.server_backoff.max_tries if cfg.server_backoff else 3
             ),
+            max_tries=cfg.max_tries,
         )
-        if cfg.max_tries > 1:
-            self.frontier.reschedule_errors(cfg.max_tries, wave)
 
         wall = time.time() - t0
         self._append_lineage(wave, n_selected, n_blocked, n_ok, n_err, n_new, wall)
@@ -1579,6 +1574,9 @@ class Crawler:
             # inside the try: a raising start-callback must still restore
             # the pinned Arrow conf, flush lineage/blobs, and fire stop
             self._notify("crawler:start", {"wave": self.last_wave + 1})
+            if not self._errors_swept and self.config.max_tries > 1:
+                self.frontier.reschedule_errors(self.config.max_tries, self.last_wave + 1)
+            self._errors_swept = True
             # Under a recrawl policy the crawl is perpetual: an empty wave is
             # an idle TICK (the virtual clock `last_wave + 1 + idle` keeps
             # advancing so visited rows still age while the frontier is
@@ -1778,8 +1776,10 @@ class Crawler:
         never happened (fix the config first; that is the point). The
         target is the newest snapshot whose ``wave`` property is ≤ ``wave``:
         every commit carries that property forward, so the target is the end
-        of ``wave`` plus any commits made before wave+1 started (error
-        reschedules, remote or streamed schedule requests, maintenance).
+        of ``wave`` plus any commits made before wave+1 started (remote or
+        streamed schedule requests, maintenance, the one resume sweep a
+        Crawler makes before its first wave). Error retries settle inside
+        the wave's own commit and add no snapshot between waves.
 
         Consistency notes, each deliberate:
           * url_seen blobs may retain the rolled-back URLs — a stale

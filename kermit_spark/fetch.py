@@ -115,22 +115,22 @@ class CorpusFetcher:
         # an unchanged match answers 304 with no body — pure JVM CASE on the
         # join output, deterministic. ETag wins over Last-Modified (RFC 9110
         # §13.1.2 precedence).
+        # Each validator clause exists only when both sides carry its
+        # column: a missing one would compare NULL = NULL.
         vcols = []
-        v_etag = F.lit(None).cast("string")
-        v_lm = F.lit(None).cast("string")
+        not_modified = None
         if self.has_etag and "etag" in selected.columns:
             vcols.append(F.col("etag").alias("_v_etag"))
             v_etag = F.col("_v_etag")
+            not_modified = v_etag.isNotNull() & (v_etag == F.col("_c_etag"))
         if self.has_last_modified and "last_modified" in selected.columns:
             vcols.append(F.col("last_modified").alias("_v_lm"))
-            v_lm = F.col("_v_lm")
-        left = selected.select(*SELECT_COLS, *vcols)
-        c_etag = F.col("_c_etag") if self.has_etag else F.lit(None).cast("string")
-        c_lm = F.col("_c_lm") if self.has_last_modified else F.lit(None).cast("string")
-        not_modified = (F.col("_c_status") == 200) & (
-            (v_etag.isNotNull() & (v_etag == c_etag))
-            | (v_etag.isNull() & v_lm.isNotNull() & (v_lm == c_lm))
+            lm = F.col("_v_lm").isNotNull() & (F.col("_v_lm") == F.col("_c_lm"))
+            not_modified = lm if not_modified is None else not_modified | (v_etag.isNull() & lm)
+        not_modified = (
+            F.lit(False) if not_modified is None else (F.col("_c_status") == 200) & not_modified
         )
+        left = selected.select(*SELECT_COLS, *vcols)
         if (
             self.has_etag
             or self.has_last_modified
@@ -151,9 +151,9 @@ class CorpusFetcher:
             # 304 responses — the crawler re-stores them (sticky merge)
             # either way
             if self.has_etag:
-                header_kvs.append((F.lit("etag"), c_etag))
+                header_kvs.append((F.lit("etag"), F.col("_c_etag")))
             if self.has_last_modified:
-                header_kvs.append((F.lit("last-modified"), c_lm))
+                header_kvs.append((F.lit("last-modified"), F.col("_c_lm")))
             if self.has_retry_after:
                 header_kvs.append((F.lit("retry-after"), F.col("_c_ra")))
             if self.has_location:

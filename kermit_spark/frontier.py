@@ -686,13 +686,17 @@ class Frontier:
         properties: dict | None = None,
         updates_parts: Iterable[int] | None = None,
         throttle_max_tries: int = 3,
+        max_tries: int = 1,
     ) -> int:
         """ONE snapshot commit applying the whole wave outcome: status MERGE
         for fetched rows (Q2-Q4) + insert of deduped discovered URLs (Q1).
 
-        An update row may carry ``new_status=THROTTLED_RETRY`` (server
-        answered 429/503): it bumps ``tries`` like an error but resolves to
-        'scheduled' while tries < ``throttle_max_tries``, 'error' after.
+        Retries settle inside the merge (Q4): an ``ERROR`` or
+        ``THROTTLED_RETRY`` (server answered 429/503) update bumps ``tries``
+        and resolves to 'scheduled' while the bumped tries stay under the
+        row's budget, 'error' after. The budget is ``max_tries`` for an
+        error (1 = errors are terminal) and max(``throttle_max_tries``,
+        ``max_tries``) for a throttle.
 
         Combining both into a single read-merge-write halves the per-wave
         commit cost (each separate mutation is a full read+join+write of the
@@ -738,17 +742,17 @@ class Frontier:
             # the status MERGE as ONE projection over FRONTIER_COLS (a chain
             # of withColumn calls re-analyses the deep wave plan each time)
             new_status = F.col("new_status")
-            tries = F.when(
-                new_status.isin(ERROR, THROTTLED_RETRY), F.col("tries") + 1
-            ).otherwise(F.col("tries"))
+            retry = new_status.isin(ERROR, THROTTLED_RETRY)
+            tries = F.when(retry, F.col("tries") + 1).otherwise(F.col("tries"))
+            budget = F.when(
+                new_status == THROTTLED_RETRY,
+                F.lit(max(throttle_max_tries, max_tries)),
+            ).otherwise(F.lit(max_tries))
             merged_cols = {
                 "tries": tries,
-                "status": F.when(
-                    new_status == THROTTLED_RETRY,
-                    F.when(tries < F.lit(throttle_max_tries), F.lit(SCHEDULED)).otherwise(
-                        F.lit(ERROR)
-                    ),
-                ).otherwise(F.coalesce(new_status, F.col("status"))),
+                "status": F.when(retry & (tries < budget), F.lit(SCHEDULED))
+                .when(retry, F.lit(ERROR))
+                .otherwise(F.coalesce(new_status, F.col("status"))),
             }
             if has_validators:
                 merged_cols["etag"] = F.coalesce(F.col("new_etag"), F.col("etag"))
@@ -928,20 +932,14 @@ class Frontier:
             raise ValueError(f"unknown scorer {scorer!r} (pagerank|hits)")
         # rank_fp <= 10^12 < 2^53: the double cast below is exact, so the
         # deterministic-ordering promise survives the priority column's type
-        updated = (
-            fr.join(ranks.withColumnRenamed("node", "url_hash"), "url_hash", "left")
-            .withColumn(
-                "priority",
-                F.when(
-                    (F.col("status") == SCHEDULED) & F.col("rank_fp").isNotNull(),
-                    F.col("rank_fp").cast("double"),
-                ).otherwise(F.col("priority")),
-            )
-            .select(*FRONTIER_COLS)
+        self._rewrite(
+            (F.col("status") == SCHEDULED) & F.col("rank_fp").isNotNull(),
+            {"priority": F.col("rank_fp").cast("double")},
+            parts=range(self.num_partitions),
+            joined=ranks.withColumnRenamed("node", "url_hash"),
+            on="url_hash",
         )
-        return self.catalog.overwrite_partitions(
-            FRONTIER_TABLE, updated, range(self.num_partitions)
-        )
+        return self.catalog.current_snapshot(FRONTIER_TABLE)
 
     def reprioritize_hosts(
         self, host_scores: DataFrame, broadcast_scores: bool = True
@@ -963,27 +961,19 @@ class Frontier:
 
         Same O(frontier) rewrite cost as reprioritize — run it every k
         waves, not per wave. Returns the new snapshot id."""
-        fr = self.read()
         scores = host_scores.select(
             F.col("host"), F.col("score_fp").cast("long").alias("_score_fp")
         )
         if broadcast_scores:
             scores = F.broadcast(scores)
-        updated = (
-            fr.join(scores, "host", "left")
-            .withColumn(
-                "priority",
-                F.when(
-                    (F.col("status") == SCHEDULED)
-                    & F.col("_score_fp").isNotNull(),
-                    F.col("_score_fp").cast("double"),
-                ).otherwise(F.col("priority")),
-            )
-            .select(*FRONTIER_COLS)
+        self._rewrite(
+            (F.col("status") == SCHEDULED) & F.col("_score_fp").isNotNull(),
+            {"priority": F.col("_score_fp").cast("double")},
+            parts=range(self.num_partitions),
+            joined=scores,
+            on="host",
         )
-        return self.catalog.overwrite_partitions(
-            FRONTIER_TABLE, updated, range(self.num_partitions)
-        )
+        return self.catalog.current_snapshot(FRONTIER_TABLE)
 
     def schedule(self, candidates: DataFrame, wave: int, properties: dict | None = None) -> int:
         """Q1: insert candidate URLs not already seen (thin wrapper over
@@ -1021,38 +1011,26 @@ class Frontier:
             and the anti-join is membership truth.
 
         Returns the number of rows evicted."""
-        prev_n, epoch = self._frontier_stats()
-        hits = self.read().filter(match).select("p", "url_hash").persist()
-        per_part = hits.groupBy("p").count().collect()
-        n_evicted = int(sum(r["count"] for r in per_part))
-        if not n_evicted:
-            hits.unpersist()
-            return 0
-        parts = sorted(int(r["p"]) for r in per_part)
-        remaining = self.read().filter(F.col("p").isin(parts)).filter(~match)
-        props = {"url_epoch": epoch + 1}
-        if prev_n is not None:
-            props["n_rows"] = prev_n - n_evicted
+        _, epoch = self._frontier_stats()
         delete_held = (
             self._spec.deletable and self._blobs is not None and self._blobs_epoch == epoch
         )
         if delete_held:
-            pdf = hits.toPandas()
-        self.catalog.overwrite_partitions(
-            FRONTIER_TABLE, remaining.select(*FRONTIER_COLS), parts, properties=props
-        )
+            # the evicted keys, pulled before the rewrite drops their rows
+            pdf = self.read().filter(match).select("p", "url_hash").toPandas()
+        n_evicted = self._rewrite(match)
+        if not n_evicted:
+            return 0
         if delete_held:
-            for part, keys in seen.by_partition(
-                pdf["p"].to_numpy(np.int64), pdf["url_hash"].to_numpy(np.int64)
-            ):
+            part_ids = pdf["p"].to_numpy(np.int64)
+            for part, keys in seen.by_partition(part_ids, pdf["url_hash"].to_numpy(np.int64)):
                 self._blobs[part].delete(keys)
             self._blobs_epoch = epoch + 1
-            self._dirty_parts.update(parts)
+            self._dirty_parts.update(int(p) for p in np.unique(part_ids))
             if self._blobs_epoch - self._checked_epoch >= self.bloom_commit_every:
                 self.flush_bloom()
         else:
             self._forget_blobs()
-        hits.unpersist()
         return n_evicted
 
     def recrawl(self, match: Column, wave: int) -> int:
@@ -1067,30 +1045,10 @@ class Frontier:
         is one rewrite of the partitions containing aged rows, so run it at
         the policy cadence (CrawlConfig.recrawl_after_waves), not per wave.
         Returns the number of rows rescheduled."""
-        flip = match & (F.col("status") == VISITED)
-        hits = self.read().filter(flip).select("p")
-        per_part = hits.groupBy("p").count().collect()
-        n = int(sum(r["count"] for r in per_part))
-        if not n:
-            return 0
-        parts = sorted(int(r["p"]) for r in per_part)
-        # materialize the flip predicate BEFORE mutating wave/status: match
-        # may reference either column (age policies match on wave)
-        rewritten = (
-            self.read()
-            .filter(F.col("p").isin(parts))
-            .withColumn("_flip", flip)
-            .withColumn("wave", F.when(F.col("_flip"), F.lit(wave)).otherwise(F.col("wave")))
-            .withColumn(
-                "status",
-                F.when(F.col("_flip"), F.lit(SCHEDULED)).otherwise(F.col("status")),
-            )
+        return self._rewrite(
+            match & (F.col("status") == VISITED),
+            {"wave": F.lit(wave), "status": F.lit(SCHEDULED)},
         )
-        # membership unchanged: the carried epoch/stats stay right
-        self.catalog.overwrite_partitions(
-            FRONTIER_TABLE, rewritten.select(*FRONTIER_COLS), parts
-        )
-        return n
 
     def recrawl_urls(self, urls: DataFrame, wave: int) -> int:
         """Set-driven variant of ``recrawl``: flip the VISITED rows whose
@@ -1102,36 +1060,12 @@ class Frontier:
         one join keyed on url against the pruned partitions (the flip set
         itself bounds the shuffle). Run at policy cadence. Returns the
         number of rows rescheduled."""
-        marks = urls.select("url").distinct()
-        hits = (
-            self.read()
-            .filter(F.col("status") == VISITED)
-            .join(marks, "url")
-            .select("p")
+        return self._rewrite(
+            (F.col("status") == VISITED) & F.col("_mark").isNotNull(),
+            {"wave": F.lit(wave), "status": F.lit(SCHEDULED)},
+            joined=urls.select("url").distinct().withColumn("_mark", F.lit(True)),
+            on="url",
         )
-        per_part = hits.groupBy("p").count().collect()
-        n = int(sum(r["count"] for r in per_part))
-        if not n:
-            return 0
-        parts = sorted(int(r["p"]) for r in per_part)
-        flagged = (
-            self.read()
-            .filter(F.col("p").isin(parts))
-            .join(marks.withColumn("_mark", F.lit(True)), "url", "left")
-            .withColumn(
-                "_flip", (F.col("status") == VISITED) & F.col("_mark").isNotNull()
-            )
-        )
-        rewritten = flagged.withColumn(
-            "wave", F.when(F.col("_flip"), F.lit(wave)).otherwise(F.col("wave"))
-        ).withColumn(
-            "status",
-            F.when(F.col("_flip"), F.lit(SCHEDULED)).otherwise(F.col("status")),
-        )
-        self.catalog.overwrite_partitions(
-            FRONTIER_TABLE, rewritten.select(*FRONTIER_COLS), parts
-        )
-        return n
 
     def changes_since(self, from_snapshot: int) -> DataFrame:
         """Frontier rows added or changed since ``from_snapshot`` — the CDC
@@ -1146,16 +1080,74 @@ class Frontier:
         return self.catalog.read_incremental(FRONTIER_TABLE, from_snapshot)
 
     def reschedule_errors(self, max_tries: int, wave: int) -> int:
-        """Q4 retry path: error rows with tries < max_tries go back to
-        scheduled (UrlStore.reschedule; ResultVerification F10 reschedules
-        failed URLs the same way)."""
-        retriable = (
-            self.read()
-            .filter((F.col("status") == ERROR) & (F.col("tries") < max_tries))
-            .select("p", "url_hash", "url", F.lit(SCHEDULED).alias("new_status"))
+        """Q4 explicit retry sweep: every error row with tries < max_tries
+        goes back to scheduled (UrlStore.reschedule; ResultVerification F10
+        reschedules failed URLs the same way). A crawl's own errors never
+        need it — commit_wave settles them against ``max_tries`` in the
+        wave's merge — so the crawler runs it once per Crawler, for error
+        rows a resumed frontier carries from a run with a lower budget.
+        One counting job over the frontier; no commit when nothing
+        matches. Returns the current snapshot id."""
+        self._rewrite(
+            (F.col("status") == ERROR) & (F.col("tries") < max_tries),
+            {"status": F.lit(SCHEDULED)},
         )
-        self.update_status(retriable)
         return self.catalog.current_snapshot(FRONTIER_TABLE)
+
+    def _rewrite(
+        self,
+        match: Column,
+        set_cols: dict[str, Column] | None = None,
+        parts: Iterable[int] | None = None,
+        joined: DataFrame | None = None,
+        on: str | None = None,
+    ) -> int | None:
+        """The frontier's one copy-on-write row rewrite (every row change
+        outside commit_wave's merge): rows where ``match`` holds take the
+        ``set_cols`` values — or are DROPPED when ``set_cols`` is None — and
+        only the partitions in ``parts`` are rewritten. Without ``parts``,
+        one job counts the matches per partition, the rewrite covers
+        exactly the partitions holding them, and no match means no commit.
+        ``joined``: a caller frame left-joined on ``on`` before ``match``
+        and ``set_cols`` are evaluated (URL marks, ranks, host scores).
+
+        A drop changes membership: url_epoch bumps and n_rows shrinks, so
+        derived seen-filter state notices (a drop always counts). A value
+        rewrite leaves membership alone and carries the stats forward.
+        Returns the number of matching rows; None when ``parts`` was given."""
+        hit = F.coalesce(match, F.lit(False))
+
+        def scope(df: DataFrame) -> DataFrame:
+            return df if joined is None else df.join(joined, on, "left")
+
+        n = None
+        props = None
+        if parts is None:
+            per_part = scope(self.read()).filter(hit).groupBy("p").count().collect()
+            n = sum(r["count"] for r in per_part)
+            if not n:
+                return 0
+            parts = [r["p"] for r in per_part]
+        parts = sorted(int(p) for p in parts)
+        rows = scope(self.read().filter(F.col("p").isin(parts)))
+        if set_cols is None:
+            rows = rows.filter(~hit)
+            prev_n, epoch = self._frontier_stats()
+            props = {"url_epoch": epoch + 1}
+            if prev_n is not None:
+                props["n_rows"] = prev_n - n
+        # one projection: every value is computed from the row BEFORE the
+        # rewrite, so match may read a column it also sets (age policies
+        # match on wave)
+        new = set_cols or {}
+        rows = rows.select(
+            *(
+                F.when(hit, new[c]).otherwise(F.col(c)).alias(c) if c in new else F.col(c)
+                for c in FRONTIER_COLS
+            )
+        )
+        self.catalog.overwrite_partitions(FRONTIER_TABLE, rows, parts, properties=props)
+        return n
 
 
 def recrawl_schedule(

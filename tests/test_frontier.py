@@ -497,6 +497,22 @@ def test_evict_unseens_urls(spark, tmp_path, mode):
     assert fr.evict(F.col("host") == "nosuch.test") == 0
 
 
+def test_evict_keeps_rows_where_the_predicate_is_null(spark, frontier):
+    """A predicate over a nullable column evicts only the rows where it is
+    true; a row where it is NULL stays, and n_rows stays exact."""
+    frontier.init(_urls(spark, _range_urls(0, 6)))
+    frontier.schedule(
+        spark.createDataFrame(
+            [("http://h0.test/new", "http://h0.test/0")], "url string, referer string"
+        ),
+        wave=1,
+    )
+    assert frontier.evict(F.col("referer") == "http://h0.test/0") == 1
+    left = {r["url"] for r in frontier.read().collect()}
+    assert left == set(_range_urls(0, 6))
+    assert frontier._frontier_stats()[0] == 6
+
+
 def test_evict_cuckoo_deletes_in_place_without_rebuild(spark, tmp_path, monkeypatch):
     """The cuckoo payoff: evict maintains the driver-held filters by
     deleting fingerprints — no url_seen table write, no O(frontier)
@@ -579,6 +595,57 @@ def test_recrawl_flips_visited_and_resets_age_clock(spark, tmp_path):
     assert fr.schedule(_urls(spark, _range_urls(0, 12)), wave=6) == 0
     # age predicate respects the reset clock: nothing older than wave 4 now
     assert fr.recrawl(F.col("wave") <= 4, wave=7) == 0
+
+
+def test_recrawl_urls_flips_only_marked_visited_rows(spark, frontier):
+    """Frontier.recrawl_urls: exactly the VISITED rows whose url is in the
+    set flip to scheduled with the new wave; scheduled/error rows in the
+    set, unmarked visited rows and unknown urls change nothing; a partition
+    holding no flipped row keeps its version list."""
+    from kermit_spark.frontier import FRONTIER_TABLE
+
+    urls = [f"http://h{i % 6}.test/{i}" for i in range(24)]
+    frontier.init(_urls(spark, urls))
+    num = F.regexp_extract("url", r"/(\d+)$", 1).cast("int")
+    frontier.update_status(
+        frontier.read()
+        .filter((num % 2 == 0) | (F.col("url") == "http://h1.test/1"))
+        .select(
+            "p", "url_hash", "url",
+            F.when(num % 2 == 0, F.lit(VISITED)).otherwise(F.lit(ERROR)).alias("new_status"),
+        )
+    )
+    before = {r["url"]: r.asDict() for r in frontier.read().collect()}
+    target = before["http://h0.test/0"]["p"]
+    assert len({r["p"] for r in before.values()}) > 1
+    marked = [u for u, r in before.items() if r["p"] == target]
+    marks = marked + ["http://h1.test/1", "http://nowhere.test/x", marked[0]]
+    cat = frontier.catalog
+
+    def versions():
+        return cat._load_meta(FRONTIER_TABLE).snapshots[str(cat.current_snapshot(FRONTIER_TABLE))]
+
+    vers_before = versions()
+    n = frontier.recrawl_urls(_urls(spark, marks), wave=7)
+
+    flipped = {u for u in marked if before[u]["status"] == VISITED}
+    assert n == len(flipped) > 0
+    after = {r["url"]: r.asDict() for r in frontier.read().collect()}
+    assert after.keys() == before.keys()
+    for u, row in after.items():
+        want = dict(before[u])
+        if u in flipped:
+            want.update(status=SCHEDULED, wave=7)
+        assert row == want, u
+    vers_after = versions()
+    assert vers_after[str(target)] != vers_before[str(target)]
+    assert {k: v for k, v in vers_after.items() if k != str(target)} == {
+        k: v for k, v in vers_before.items() if k != str(target)
+    }
+    # nothing left to flip: no commit
+    snap = cat.current_snapshot(FRONTIER_TABLE)
+    assert frontier.recrawl_urls(_urls(spark, marks), wave=8) == 0
+    assert cat.current_snapshot(FRONTIER_TABLE) == snap
 
 
 def test_changes_since_cdc_read(spark, frontier):

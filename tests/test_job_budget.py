@@ -85,6 +85,39 @@ def test_steady_wave_and_bookkeeping_job_counts(spark, tmp_path, aqe_off):
     assert c.lineage().filter("wave = 1 AND stage = 'dequeue'").first()["n"] == stats.n_selected
 
 
+def test_steady_wave_with_retries_keeps_job_count_and_one_snapshot(spark, tmp_path, aqe_off):
+    """max_tries > 1 costs a steady wave nothing: a failing page's retry
+    settles inside the frontier commit, so the wave runs the same jobs and
+    commits exactly one frontier snapshot."""
+    n_pages = 8
+    rows = [
+        (f"http://{h}.test/p/{i}.html", 500 if (h, i) == ("c", 1) else 200,
+         "text/html", _page(h, i, n_pages))
+        for h in ("a", "b", "c")
+        for i in range(n_pages)
+    ] + [
+        ("http://a.test/robots.txt", 200, "text/plain", "User-agent: *\nDisallow: /p/7\n"),
+        ("http://b.test/robots.txt", 200, "text/plain", "User-agent: *\nCrawl-delay: 20\n"),
+    ]
+    corpus = spark.createDataFrame(
+        rows, "url string, status int, content_type string, body string"
+    )
+    cfg = CrawlConfig(
+        num_partitions=2, politeness=Politeness((Limit(".*", 2),)), sub_salts=2, max_tries=2
+    )
+    c = Crawler(spark, SnapshotCatalog(spark, str(tmp_path / "cat")), CorpusFetcher(corpus), cfg)
+    c.seed([f"http://{h}.test/p/0.html" for h in ("a", "b", "c")])
+    c.crawl(1)
+
+    n_snaps = len(c.catalog.snapshots("frontier"))
+    stats, n_jobs = _jobs(spark.sparkContext, c.run_wave)
+    assert stats.n_errors == 1
+    assert n_jobs == STEADY_WAVE_JOBS
+    assert len(c.catalog.snapshots("frontier")) == n_snaps + 1
+    row = c.frontier.read().filter("url = 'http://c.test/p/1.html'").first()
+    assert (row["status"], row["tries"]) == ("scheduled", 1)
+
+
 def test_commit_faces_run_one_write_job(spark, tmp_path, aqe_off):
     """``merge_write`` and ``overwrite_partitions`` run exactly their write
     job; a touched partition the base snapshot never had needs no empty

@@ -545,3 +545,34 @@ def test_schedule_dedup_prune_is_jvm_broadcast_semi_join(spark, tmp_path):
     assert "Scan parquet" in left_subtree, plan
     for marker in ("ArrowEvalPython", "BatchEvalPython", "PythonUDF"):
         assert marker not in left_subtree, plan
+
+
+def test_corpus_fetch_without_validators_builds_no_null_comparison(spark, frontier):
+    """A corpus with no etag/last_modified column gives the conditional-GET
+    predicate no validator clause at all: the analyzed plan compares no
+    NULL with NULL, and every fetched status is the corpus status (or 404
+    for a dead link)."""
+    import re
+
+    corpus = spark.createDataFrame(
+        [
+            ("http://h0.test/p/0.html", 200, "text/html", "<html></html>"),
+            ("http://h1.test/p/1.html", 500, "text/html", "oops"),
+        ],
+        "url string, status int, content_type string, body string",
+    )
+    selected = dequeue(
+        frontier.read().filter(F.col("url").isin("http://h0.test/p/0.html",
+                                                  "http://h1.test/p/1.html",
+                                                  "http://h2.test/p/2.html")),
+        Politeness((Limit(".*", 5),)),
+    )
+    assert "etag" in selected.columns  # the frontier side carries validators
+    fetched = CorpusFetcher(corpus).fetch(selected)
+    analyzed = fetched._jdf.queryExecution().analyzed().toString()
+    assert not re.search(r"null as string\)\s*=\s*cast\(null", analyzed, re.I), analyzed
+    assert {r["url"]: r["status"] for r in fetched.collect()} == {
+        "http://h0.test/p/0.html": 200,
+        "http://h1.test/p/1.html": 500,
+        "http://h2.test/p/2.html": 404,
+    }

@@ -97,3 +97,27 @@ def test_rollback_lands_on_wave_end_plus_between_wave_commits(spark, corpus_df, 
     assert crawler.last_wave == 1
     assert crawler.documents().filter("p > 1").count() == 0
     assert _frontier_rows(crawler) == frontier_then
+
+
+def test_resume_with_higher_max_tries_retries_old_errors(spark, corpus_df, tmp_path):
+    """A frontier holding an 'error' row from a run with max_tries=1 is
+    retried when a new Crawler resumes it at max_tries=2."""
+    crawler = _crawler(spark, corpus_df, tmp_path)
+    crawler.crawl(3)  # b's page 2 fails at wave 2
+    failed = "http://b.test/p/2.html"
+    row = crawler.frontier.read().filter(f"url = '{failed}'").first()
+    assert (row["status"], row["tries"]) == ("error", 1)
+
+    resumed = Crawler(
+        spark,
+        SnapshotCatalog(spark, str(tmp_path / "cat")),
+        CorpusFetcher(corpus_df),
+        CrawlConfig(
+            num_partitions=2, politeness=Politeness((Limit(r".*", 4),)), sub_salts=2,
+            max_tries=2,
+        ),
+    )
+    resumed.crawl(10)
+    assert resumed.documents().filter(f"url = '{failed}'").count() == 2
+    row = resumed.frontier.read().filter(f"url = '{failed}'").first()
+    assert (row["status"], row["tries"]) == ("error", 2)

@@ -112,3 +112,33 @@ def test_server_backoff_off_is_reference_parity(spark, tmp_path):
         .count()
     )
     assert n_fetches == 1
+
+
+def test_throttle_budget_is_the_larger_of_both_budgets(spark, tmp_path):
+    """A host that always answers 429 under ServerBackoff(max_tries=2) and
+    max_tries=3 is fetched three times: a throttle retries while its tries
+    stay under max(ServerBackoff.max_tries, max_tries), then ends 'error'."""
+    cfg = CrawlConfig(
+        num_partitions=4,
+        sub_salts=2,
+        server_backoff=ServerBackoff(seconds_per_wave=60.0, max_tries=2),
+        max_tries=3,
+        max_waves=20,
+    )
+    crawler = Crawler(
+        spark, SnapshotCatalog(spark, str(tmp_path)), CorpusFetcher(_corpus(spark)), cfg
+    )
+    crawler.seed(["http://ok.test/p0"])
+    crawler.crawl()
+    row = (
+        crawler.frontier.read()
+        .filter(F.col("url") == "http://t.test/slow")
+        .collect()[0]
+    )
+    assert (row["status"], row["tries"]) == (ERROR, 3)
+    n_fetches = (
+        spark.read.parquet(f"{tmp_path}/documents")
+        .filter(F.col("url") == "http://t.test/slow")
+        .count()
+    )
+    assert n_fetches == 3
