@@ -32,8 +32,9 @@ rewrites):
     manifest-list analog) and hand Spark an explicit file set with
     ``basePath`` so the partition column is recovered — a scan of snapshot S
     never sees in-flight writes (snapshot isolation). The schema comes from
-    the table metadata (the ``_schema`` stamp), never from a data-file
-    footer, so planning a read runs no Spark job.
+    the table metadata (the ``_schema`` stamp) or the caller
+    (``read_partitions``), never from a data-file footer, so planning a
+    read runs no Spark job.
 
 At 100 TB this module is replaced by ``spark.read.format("iceberg")`` +
 ``MERGE INTO``; every caller goes through the three commit faces so that
@@ -243,33 +244,39 @@ class SnapshotCatalog:
         read per file."""
         meta = self._load(table)
         sid = meta.current_snapshot if snapshot is None else snapshot
-        partmap = meta.snapshots[str(sid)]
         base = os.path.join(self.root, table)
-        paths = [
-            os.path.join(base, f"{PARTITION_COL}={part}", f"v{v}")
-            for part, vers in sorted(partmap.items(), key=lambda kv: int(kv[0]))
-            for v in vers
-        ]
-        if not paths:
-            # empty table: replay schema from the schema stamp written at create
-            return self.spark.createDataFrame([], meta.properties["_schema"])
-        if merge_schema:
+        paths = _version_paths(base, meta.snapshots[str(sid)])
+        if merge_schema and paths:
             return (
                 self.spark.read.option("basePath", base)
                 .option("mergeSchema", "true")
                 .parquet(*paths)
             )
-        # the v{N} dir is not key=value so it is invisible to partition
-        # discovery; only PARTITION_COL comes back as a partition column.
-        return self._scan(base, meta, paths)
+        # an empty table replays the schema stamp written at create
+        return self._scan(base, meta.properties["_schema"], paths)
 
-    def _scan(self, base: str, meta: TableMeta, paths: list[str]) -> DataFrame:
-        """Parquet scan of ``paths`` under the table's stamped schema."""
-        return (
-            self.spark.read.schema(meta.properties["_schema"])
-            .option("basePath", base)
-            .parquet(*paths)
-        )
+    def read_partitions(self, table: str, parts: Iterable[int], schema) -> DataFrame:
+        """The current snapshot's rows in partitions ``parts`` only, read
+        under the caller's ``schema`` (StructType or DDL, PARTITION_COL
+        included) instead of the ``_schema`` stamp — the read-back of data
+        the caller just wrote, whose schema may be newer than a stamp left
+        by older code. Only the named partitions' version dirs reach Spark,
+        so the file listing stays O(len(parts)) however many partitions the
+        table holds, and no job runs. A partition absent from the snapshot
+        contributes no rows; if none is present the frame is empty."""
+        meta = self._load(table)
+        base = os.path.join(self.root, table)
+        paths = _version_paths(base, meta.snapshots[str(meta.current_snapshot)], parts)
+        return self._scan(base, schema, paths)
+
+    def _scan(self, base: str, schema, paths: list[str]) -> DataFrame:
+        """Parquet scan of ``paths`` under ``schema``; no paths → an empty
+        frame of ``schema``. The v{N} dir is not key=value, so it is
+        invisible to partition discovery: only PARTITION_COL comes back as
+        a partition column."""
+        if not paths:
+            return self.spark.createDataFrame([], schema)
+        return self.spark.read.schema(schema).option("basePath", base).parquet(*paths)
 
     # -- write / commit ----------------------------------------------------
 
@@ -430,11 +437,6 @@ class SnapshotCatalog:
         new_map = meta.snapshots[str(to_sid)]
         base = os.path.join(self.root, table)
 
-        def _vpaths(part: str, vers: list[int]) -> list[str]:
-            return [
-                os.path.join(base, f"{PARTITION_COL}={part}", f"v{v}") for v in vers
-            ]
-
         append_paths: list[str] = []
         rewritten_new: list[str] = []
         rewritten_old: list[str] = []
@@ -442,24 +444,25 @@ class SnapshotCatalog:
             ov = old_map.get(part)
             if ov is None:
                 # partition born after from_snapshot: every file is new data
-                append_paths += _vpaths(part, nv)
+                append_paths += _version_paths(base, {part: nv})
                 continue
             if nv == ov:
                 continue  # untouched — zero IO
             if len(nv) > len(ov) and nv[: len(ov)] == ov:
-                append_paths += _vpaths(part, nv[len(ov):])
+                append_paths += _version_paths(base, {part: nv[len(ov):]})
             else:
-                rewritten_new += _vpaths(part, nv)
-                rewritten_old += _vpaths(part, ov)
+                rewritten_new += _version_paths(base, {part: nv})
+                rewritten_old += _version_paths(base, {part: ov})
 
         cols = compare_cols
+        schema = meta.properties["_schema"]
         pieces: list[DataFrame] = []
         if append_paths:
-            df = self._scan(base, meta, append_paths)
+            df = self._scan(base, schema, append_paths)
             pieces.append(df.select(*cols) if cols else df)
         if rewritten_new:
-            new_rows = self._scan(base, meta, rewritten_new)
-            old_rows = self._scan(base, meta, rewritten_old)
+            new_rows = self._scan(base, schema, rewritten_new)
+            old_rows = self._scan(base, schema, rewritten_old)
             if cols:
                 new_rows = new_rows.select(*cols)
                 old_rows = old_rows.select(*cols)
@@ -650,6 +653,17 @@ class SnapshotCatalog:
                 if os.path.isdir(os.path.join(base, entry, f"v{ver}")):
                     parts.append(int(entry.split("=", 1)[1]))
         return sorted(parts)
+
+
+def _version_paths(base: str, partmap: dict, parts: Iterable[int] | None = None) -> list[str]:
+    """The version dirs ``partmap`` lists for ``parts`` (default: every
+    partition), in partition order; a partition it lacks has none."""
+    keys = sorted({int(p) for p in (partmap if parts is None else parts)})
+    return [
+        os.path.join(base, f"{PARTITION_COL}={k}", f"v{v}")
+        for k in keys
+        for v in partmap.get(str(k), ())
+    ]
 
 
 def _schema_ddl(df: DataFrame) -> str:

@@ -5,9 +5,10 @@ Spark lifecycle replacement for the reference's event-loop machine
 
   read frontier snapshot → politeness dequeue (window top-k) → robots gate
   (on the dequeued batch) → fetch (corpus join / HTTP mapInPandas) → parse
-  spans (pandas UDF) → write documents → discover + clean links → ONE frontier
-  commit (visited/error/robots_blocked MERGE, retries settled in it, +
-  Bloom-deduped new URLs) → lineage append
+  spans (pandas UDF) → write documents → read the stored documents
+  partition back → discover + clean links → ONE frontier commit
+  (visited/error/robots_blocked MERGE, retries settled in it, + Bloom-deduped
+  new URLs) → lineage append
 
 Termination is the AutoShutdown predicate (Q11, /root/reference/src/kermit/
 extensions/ext.autoshutdown.coffee:8-36 + Crawler.coffee:189 hasWork): loop
@@ -32,6 +33,11 @@ Scale notes:
     counts ride on it via Observation); frontier commit — 3 broadcast
     builds and ONE merge write (n_new rides on it; error and throttle
     retries settle inside that merge, so max_tries > 1 adds no job).
+    Nothing after the documents write reads the lazy docs frame: discovery,
+    the status updates and the post-wave upkeep scan the p=<wave>
+    partition just committed (no job to plan it; the fetch never re-runs),
+    so no plan after the write re-analyzes the fetch → parse lineage, and
+    docs needs no batch cache.
     Catalog reads run no job (schema from table metadata), the
     Crawl-delay flag rides the robots write, lineage is buffered in
     memory and written without Spark. Robots probes/fetches run only
@@ -43,7 +49,9 @@ Scale notes:
 Commit ordering per wave: documents → frontier → lineage. A crash between
 any two leaves the frontier still claiming the wave's batch as 'scheduled',
 so the re-run recomputes the identical wave (dequeue is deterministic,
-SURVEY §2.8) and overwrites the same partitions.
+SURVEY §2.8) and overwrites the same partitions. The phases after the
+documents write read that write's committed partition, so a re-run reads
+its own overwrite.
 """
 
 from __future__ import annotations
@@ -149,8 +157,8 @@ class AdaptivePoliteness:
     error-RATE waves, ServerBackoff obeys explicit 429/503 signals; this
     reacts to latency degradation too — the host that is slowing down but
     not yet failing. State: bounded driver dict host -> delay_ms (most-
-    degraded kept on overflow); one small aggregation over the cached,
-    budget-bounded docs batch per wave."""
+    degraded kept on overflow); one small aggregation over the wave's
+    stored, budget-bounded documents partition per wave."""
 
     slow_ms: int = 2000
     init_delay_ms: int = 1000
@@ -183,8 +191,8 @@ class ServerBackoff:
     Distinct from ErrorBackoff (rate-based budget *division* on generic
     failures): this is obedience to an explicit server signal, with full
     stand-down. State is a bounded driver dict (host → resume wave); the
-    per-wave cost is one aggregation over the already-cached,
-    budget-bounded docs batch, only on waves that actually saw a 429/503."""
+    per-wave cost is one aggregation over the wave's stored, budget-bounded
+    documents partition, only on waves that actually saw a 429/503."""
 
     statuses: tuple[int, ...] = (429, 503)
     seconds_per_wave: float = 60.0
@@ -258,7 +266,7 @@ class CrawlConfig:
     # lineage"). Per-partition DEQUEUE counts are always recorded — they
     # fall out of the per-host collect the wave already does (zero extra
     # jobs). This flag adds ok/error breakdowns per partition: one small
-    # aggregation job per wave over the cached documents batch.
+    # aggregation job per wave over the stored documents partition.
     lineage_per_partition: bool = False
     # adaptive politeness: back off hosts with elevated error rates (one
     # batch-sized aggregation per wave when enabled). None = static budgets.
@@ -987,7 +995,7 @@ class Crawler:
 
     def _update_server_backoff(self, wave: int, docs: DataFrame) -> None:
         """Post-wave Retry-After bookkeeping: one aggregation over the
-        cached, budget-bounded docs batch, host → resume wave. Numeric
+        stored, budget-bounded docs batch, host → resume wave. Numeric
         (delta-seconds) Retry-After values convert to waves; HTTP-date or
         absent values use the configured default."""
         sb = self.config.server_backoff
@@ -1042,7 +1050,7 @@ class Crawler:
     def _update_error_backoff(self, wave: int, docs: DataFrame, per_host) -> None:
         """Post-wave backoff bookkeeping: hosts at/above the error-rate
         threshold get (further) budget cuts with a fresh cooldown. One
-        aggregation over the cached, budget-bounded docs batch."""
+        aggregation over the stored, budget-bounded docs batch."""
         eb = self.config.error_backoff
         sel_by_host: dict[str, int] = {}
         for r in per_host:
@@ -1279,7 +1287,7 @@ class Crawler:
             F.sum(F.when(F.col("status") == 200, 1).otherwise(0)).alias("n_ok"),
             F.sum(F.when(F.col("status") == 304, 1).otherwise(0)).alias("n_notmod"),
             F.sum(F.when(~F.col("status").isin(200, 304), 1).otherwise(0)).alias("n_err"),
-        ).persist()
+        )
         # align=False: the write covers ONE partition value (the wave) — an
         # aligned write would funnel every document through a single task's
         # parquet encoder; unaligned, each of the T parse tasks writes its
@@ -1291,6 +1299,15 @@ class Crawler:
             self.catalog.create(DOCUMENTS_TABLE, docs_out, cfg.num_partitions, align=False)
         if warc_cached is not None:
             warc_cached.unpersist()
+        # every later phase reads the committed partition back, not the lazy
+        # frame, so no plan re-analyzes (or re-runs) the fetch → parse
+        # lineage. The schema is the one just written: the table's stamp may
+        # predate new columns. A fully robots-blocked wave reads back empty.
+        docs = (
+            self.catalog.read_partitions(DOCUMENTS_TABLE, [wave], docs_out.schema)
+            .drop("p")
+            .withColumnRenamed("host_p", "p")
+        )
 
         metrics = obs.get
         n_ok = int(metrics["n_ok"] or 0)
@@ -1406,7 +1423,7 @@ class Crawler:
             )
         # per-partition lineage (north_rule): dequeue split is free — it is
         # the per_host collect aggregated driver-side; fetch outcomes are an
-        # opt-in aggregation over the still-cached docs batch
+        # opt-in aggregation over the stored documents partition
         part_sel: dict[int, int] = {}
         for r in per_host:
             part_sel[r["p"]] = part_sel.get(r["p"], 0) + r["count"]
@@ -1422,8 +1439,8 @@ class Crawler:
             self._update_server_backoff(wave, docs)
         if cfg.on_event is not None and n_err:
             # ext.notifications ERROR-phase analog: one event per wave with
-            # the failing URLs (docs is the still-cached, budget-bounded
-            # batch; the limit bounds the payload, n_errors stays exact).
+            # the failing URLs (docs is the stored, budget-bounded batch;
+            # the limit bounds the payload, n_errors stays exact).
             # The reference NotificationCenter fires only for items that
             # actually reach the ERROR phase — so followed redirects (a
             # resolved VISITED) and 429/503 throttle outcomes (scheduled
@@ -1466,7 +1483,6 @@ class Crawler:
             ] + [
                 (wave, phases.ERROR, "fetch_error_part", r["p"], r["err"], wall) for r in pp
             ]
-        docs.unpersist()
         selected.unpersist()
         if verify_cache is not None:
             verify_cache.unpersist()

@@ -104,7 +104,7 @@ def content_type_fallback(url: Column, content_type: Column) -> Column:
     )
     return F.when(
         generic,
-        F.coalesce(mapping.getItem(ext), content_type, F.lit("application/octet-stream")),
+        F.coalesce(mapping[ext], content_type, F.lit("application/octet-stream")),
     ).otherwise(content_type)
 
 

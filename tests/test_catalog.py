@@ -8,6 +8,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from kermit_spark.catalog import SnapshotCatalog
+from test_job_budget import _jobs
 
 
 @pytest.fixture
@@ -221,6 +222,28 @@ def test_missing_table_raises(cat):
     with pytest.raises(FileNotFoundError):
         cat.read("nope")
     assert not cat.exists("nope")
+
+
+def test_read_partitions_of_absent_partition_is_empty_without_a_job(spark, cat):
+    cat.create("t", _df(spark, [(0, 1, "a"), (1, 2, "b")]), 4)
+    schema = "p int, k long, v string, extra double"
+    df, n_jobs = _jobs(spark.sparkContext, lambda: cat.read_partitions("t", [5], schema))
+    assert n_jobs == 0
+    assert df.dtypes == [("p", "int"), ("k", "bigint"), ("v", "string"), ("extra", "double")]
+    assert df.collect() == []
+
+
+def test_read_partitions_scans_only_named_partitions_under_caller_schema(spark, cat):
+    cat.create("t", _df(spark, [(0, 1, "a"), (1, 2, "b"), (2, 3, "c")]), 4)
+    wide = spark.createDataFrame([(1, 20, "B", 0.5)], "p int, k long, v string, extra double")
+    cat.overwrite_partitions("t", wide, [1])
+    # the stamp predates ``extra``; the caller's schema keeps it
+    assert "extra" not in cat.read("t").columns
+    df, n_jobs = _jobs(spark.sparkContext, lambda: cat.read_partitions("t", [1, 2, 7], wide.schema))
+    assert n_jobs == 0
+    assert {f.split("/p=")[1].split("/")[0] for f in df.inputFiles()} == {"1", "2"}
+    got = sorted((r["p"], r["k"], r["v"], r["extra"]) for r in df.collect())
+    assert got == [(1, 20, "B", 0.5), (2, 3, "c", None)]
 
 
 # -- incremental reads (Iceberg incremental-scan / CDC analog) --------------

@@ -4,11 +4,13 @@ analog of the reference's LocalHttpServer + Crawler.int.spec
 S5/S9): the REAL HttpFetcher (urllib over mapInPandas) crawls a static site
 served by stdlib http.server, robots.txt and all."""
 
+import collections
 import functools
 import http.server
 import os
 import threading
 import time
+from urllib.parse import urlsplit
 
 import pytest
 from pyspark.sql import functions as F
@@ -30,6 +32,18 @@ SITE = {
 }
 
 
+# requests the static site has served, by path (tests reset it)
+SITE_REQUESTS: collections.Counter = collections.Counter()
+_site_requests_lock = threading.Lock()
+
+
+class _CountingHandler(http.server.SimpleHTTPRequestHandler):
+    def do_GET(self):
+        with _site_requests_lock:
+            SITE_REQUESTS[self.path] += 1
+        super().do_GET()
+
+
 @pytest.fixture(scope="module")
 def site_url(tmp_path_factory):
     root = tmp_path_factory.mktemp("site")
@@ -37,9 +51,7 @@ def site_url(tmp_path_factory):
         f = root / path
         f.parent.mkdir(parents=True, exist_ok=True)
         f.write_text(body)
-    handler = functools.partial(
-        http.server.SimpleHTTPRequestHandler, directory=str(root)
-    )
+    handler = functools.partial(_CountingHandler, directory=str(root))
     srv = http.server.ThreadingHTTPServer(("127.0.0.1", 0), handler)
     threading.Thread(target=srv.serve_forever, daemon=True).start()
     yield f"http://127.0.0.1:{srv.server_address[1]}"
@@ -401,6 +413,39 @@ def test_full_crawl_over_live_http(spark, site_url, tmp_path):
     )
     kinds = [s["kind"] for s in spans]
     assert "link" in kinds and "resource" in kinds and "text" in kinds
+
+
+def test_live_crawl_fetches_each_dequeued_url_once_per_wave(spark, site_url, tmp_path):
+    """The documents write is the only job that runs the live fetch: the
+    phases after it (discovery, the frontier commit) read the stored
+    documents, so no dequeued URL is requested twice in a wave."""
+    cfg = CrawlConfig(
+        num_partitions=4,
+        politeness=Politeness((Limit(".*", 10),)),
+        obey_robots=True,
+    )
+    crawler = Crawler(
+        spark, SnapshotCatalog(spark, str(tmp_path / "c")), HttpFetcher(timeout_s=5), cfg
+    )
+    crawler.seed([f"{site_url}/p/0.html"])
+    fetched_waves = 0
+    for _ in range(4):
+        with _site_requests_lock:
+            SITE_REQUESTS.clear()
+        stats = crawler.crawl(1)
+        if not stats:
+            break
+        s = stats[0]
+        with _site_requests_lock:
+            hits = {p: n for p, n in SITE_REQUESTS.items() if p != "/robots.txt"}
+        stored = [
+            urlsplit(r["url"]).path
+            for r in crawler.documents().filter(F.col("p") == s.wave).select("url").collect()
+        ]
+        assert len(stored) == s.n_selected - s.n_blocked
+        assert hits == {p: 1 for p in stored}, (s.wave, hits)
+        fetched_waves += bool(stored)
+    assert fetched_waves >= 3
 
 
 def test_meta_charset_sniffed_when_header_silent(spark, fidelity_url):

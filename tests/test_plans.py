@@ -576,3 +576,53 @@ def test_corpus_fetch_without_validators_builds_no_null_comparison(spark, fronti
         "http://h1.test/p/1.html": 500,
         "http://h2.test/p/2.html": 404,
     }
+
+
+# the analyzed plan of a steady wave's frontier write, in lines: the commit
+# reads the stored documents partition, so the plan starts at the frontier
+# and documents scans instead of re-analyzing the whole wave (frontier scan →
+# dequeue → robots → fetch → parse), which was 431 lines on a crawl_waves wave
+MAX_FRONTIER_WRITE_PLAN_LINES = 150
+
+
+def test_steady_wave_frontier_write_plan_stays_flat(spark, tmp_path, monkeypatch):
+    from kermit_spark.catalog import SnapshotCatalog
+    from kermit_spark.crawler import Crawler, CrawlConfig
+    from kermit_spark.fetch import CorpusFetcher
+    from kermit_spark.frontier import Limit, Politeness
+
+    def page(host, i, n=8):
+        links = "".join(f'<a href="/p/{j}.html">{j}</a>' for j in (i + 1, i + 2) if j < n)
+        return f"<html><body><p>{host} {i}</p>{links}</body></html>"
+
+    corpus = spark.createDataFrame(
+        [
+            (f"http://{h}.test/p/{i}.html", 200, "text/html", page(h, i))
+            for h in ("a", "b", "c")
+            for i in range(8)
+        ]
+        + [
+            ("http://a.test/robots.txt", 200, "text/plain", "User-agent: *\nDisallow: /p/7\n"),
+            ("http://b.test/robots.txt", 200, "text/plain", "User-agent: *\nCrawl-delay: 20\n"),
+        ],
+        "url string, status int, content_type string, body string",
+    )
+    cfg = CrawlConfig(num_partitions=2, politeness=Politeness((Limit(".*", 2),)), sub_salts=2)
+    cat = SnapshotCatalog(spark, str(tmp_path / "cat"))
+    c = Crawler(spark, cat, CorpusFetcher(corpus), cfg)
+    c.seed([f"http://{h}.test/p/0.html" for h in ("a", "b", "c")])
+    c.crawl(1)  # wave 0 fetches every host's robots.txt
+
+    plan_lines = []
+    write = cat._write_partitions
+
+    def spy(table, df, ver, align=True):
+        if table == "frontier":
+            plan_lines.append(len(df._jdf.queryExecution().analyzed().toString().splitlines()))
+        return write(table, df, ver, align=align)
+
+    monkeypatch.setattr(cat, "_write_partitions", spy)
+    stats = c.run_wave()
+    assert stats.n_selected > 0 and stats.n_new_urls > 0
+    assert len(plan_lines) == 1
+    assert plan_lines[0] <= MAX_FRONTIER_WRITE_PLAN_LINES, plan_lines
